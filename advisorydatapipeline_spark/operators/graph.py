@@ -1,25 +1,26 @@
-"""Distributed connected components (beyond-reference, north-star).
+"""Distributed graph operators: connected components, PageRank, BFS,
+k-core peeling and label propagation.
 
-The missing step between "near-dup PAIRS" and "dedup GROUPS": pairs
-from MinHash/SimHash/Jaccard are edges of a similarity graph, and the
-unit of deduplication is its connected component (keep one doc per
-component). The reference has no graph code at all; this is the
-operator a 100 TB curation pipeline needs right after pair mining.
+Connected components is the missing step between near-dup PAIRS and
+dedup GROUPS: pairs from MinHash/SimHash/Jaccard are edges of a
+similarity graph, and the unit of deduplication is its connected
+component (keep one doc per component).
 
-Algorithm: iterative min-label propagation with a light pointer jump
-(label <- label-of-label, ``jump_hops`` times per round), a
-Pregel-style loop expressed as DataFrame joins. Per iteration: one
-edge-join shuffle + one aggregation + one label-join per hop — all
-hash joins on the node id, partial aggregation applies, and document
-payloads never enter the graph (nodes are bare ids). Min-label
-percolation spreads breadth-first from every local minimum, so label
-chains stay short in practice (measured: hops beyond 1 buy no
-rounds, see connected_components) — near-dup components converge in
-2-4 rounds, the worst percolation graph in the registry in ~9-12.
-``localCheckpoint`` truncates lineage each round — without it the
-plan doubles per iteration and the driver, not the cluster, becomes
-the bottleneck. The driver loop only tests a scalar convergence
-count, never row data.
+Every operator is a Pregel-style loop expressed as DataFrame joins
+over bare node ids (document payloads never enter the graph). The
+loop-invariant edge side is built once by :func:`_loop_edges` —
+pre-partitioned on the per-round join key and materialized — so only
+the small per-round side shuffles or broadcasts. ``localCheckpoint``
+truncates lineage each round; without it the plan doubles per
+iteration and the driver, not the cluster, becomes the bottleneck.
+The converging operators (connected components, k-core) share one
+converge-or-raise loop, :func:`_fixpoint`: the driver only reads a
+scalar witness observed on each round's lineage cut, never row data.
+
+Connected components is plain min-label propagation: after round
+``r`` (counting from 1) each node holds the minimum id within
+``r + 1`` hops, so the round count equals the largest hop distance
+from any node to its component's minimum node (at least 1).
 """
 
 from __future__ import annotations
@@ -27,26 +28,23 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: Broadcast-pin bound for the per-iteration small side (rank/label/
 #: alive/frontier tables — all provably <= node count). Two-long rows
-#: cost ~50 B each in a broadcast HashedRelation, so the default 4M
-#: rows is a ~200 MB broadcast — comfortably inside a normal
-#: executor and far above the 10 MB autoBroadcastJoinThreshold whose
-#: size-ESTIMATE misses on a mid-plan aggregate are what caused the
-#: measured x1->x2 shuffle cliff (k-core 14.9 -> 106.7 MB: AQE flips
-#: broadcast -> sort-merge and every round starts paying a label-side
-#: exchange + a sort). Above the bound (billion-node graphs at
-#: 100 TB, where a broadcast would OOM every executor) the fallback
-#: is an EXPLICIT shuffle_hash hint: the loop-invariant edge side is
-#: already persisted pre-partitioned on the join key so it never
-#: re-exchanges, and the small side shuffles linearly — sort-merge
-#: (which would also SORT both sides every round) is never the plan.
-GRAPH_BROADCAST_MAX_ROWS = int(
-    os.environ.get("ADP_GRAPH_BROADCAST_MAX_ROWS", "4000000")
-)
+#: cost ~50 B each in a broadcast HashedRelation, so 4M rows is a
+#: ~200 MB broadcast — comfortably inside a normal executor and far
+#: above the 10 MB autoBroadcastJoinThreshold whose size-ESTIMATE
+#: misses on a mid-plan aggregate caused the measured x1->x2 shuffle
+#: cliff (k-core 14.9 -> 106.7 MB: AQE flips broadcast -> sort-merge
+#: and every round starts paying a label-side exchange + a sort).
+#: Above the bound (billion-node graphs, where a broadcast would OOM
+#: every executor) the fallback is an EXPLICIT shuffle_hash hint: the
+#: loop-invariant edge side is already persisted pre-partitioned on
+#: the join key so it never re-exchanges, and the small side shuffles
+#: linearly — sort-merge is never the plan.
+GRAPH_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def _iter_side(df: DataFrame, n_rows: int | None) -> DataFrame:
@@ -65,29 +63,20 @@ def _iter_side(df: DataFrame, n_rows: int | None) -> DataFrame:
 
 
 #: Target edge rows per partition when compacting a cached
-#: loop-invariant frame for the per-round jobs (r15, guide §2.2).
-#: In the broadcast regime the label side ships to every task, so
-#: the cached edge frame's PARTITION COUNT is pure per-round task
-#: tax: a 22k-edge graph spread over the static 32-partition shuffle
-#: width schedules 32 near-empty tasks per round for ~10 rounds.
-#: 50k rows/partition keeps CPU-heavy rounds parallel (a 1M-edge
-#: graph still fans out to 20 partitions; A/B: AQE's byte-based
-#: cached-plan coalescing collapsed that same graph to 1-3
-#: partitions and ran 2x SLOWER) while tiny graphs compact to 1-2.
-#: Only applied below GRAPH_BROADCAST_MAX_ROWS, where the per-round
-#: join broadcasts and the edge frame's hash partitioning is
-#: irrelevant — coalesce() is a narrow, shuffle-free read of the
-#: cache. Above the bound (shuffle_hash regime) the pre-partitioned
-#: width is load-bearing and stays untouched. r16: applied ONLY in
-#: connected_components and ONLY once the fixpoint has demonstrated
-#: depth (round 3+) — r15 applied it unconditionally across
-#: CC/LPA/PageRank/k-core and its own quiet-box artifact showed the
-#: shallow (1-2 round) consumers regressing 18-50% (verdict item 1):
-#: the setup actions + narrowed early-round parallelism only repay
-#: on deep loops (dbscan's 10-round percolation CC).
-LOOP_ROWS_PER_PART = int(
-    os.environ.get("ADP_GRAPH_LOOP_ROWS_PER_PART", "50000")
-)
+#: loop-invariant frame for the per-round jobs. In the broadcast
+#: regime the label side ships to every task, so the cached edge
+#: frame's PARTITION COUNT is pure per-round task tax: a 22k-edge
+#: graph spread over a 32-partition shuffle width schedules 32
+#: near-empty tasks per round. 50k rows/partition keeps CPU-heavy
+#: rounds parallel (a 1M-edge graph still fans out to 20 partitions)
+#: while tiny graphs compact to 1-2. Only applied below
+#: GRAPH_BROADCAST_MAX_ROWS, where the per-round join broadcasts and
+#: the edge frame's hash partitioning is irrelevant — coalesce() is a
+#: narrow, shuffle-free read of the cache — and only in
+#: connected_components once the loop has demonstrated depth (round
+#: 3+): the extra count action and narrowed parallelism only repay
+#: on deep loops.
+LOOP_ROWS_PER_PART = 50_000
 
 
 def _compact_loop_frame(df: DataFrame, n_rows: int) -> DataFrame:
@@ -125,6 +114,63 @@ def _cut_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     return df.checkpoint()
 
 
+def _observed_cut(
+    df: DataFrame, reliable: bool, name: str, *metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Cut ``df``'s lineage and return it with ``metrics`` — aggregate
+    columns observed while the cut materializes, so reading them costs
+    no extra job."""
+    obs = Observation(name)
+    return _cut_lineage(df.observe(obs, *metrics), reliable), obs.get
+
+
+def _fixpoint(
+    step, state, witness, prev, max_rounds, name, reliable, owned=None
+):
+    """The converge-or-raise loop: ``state = step(i, state)`` each
+    round, lineage-cut with the scalar ``witness`` aggregate observed
+    on the cut, until the witness repeats its previous value (``prev``
+    seeds round 0). The witness must be strictly monotone while the
+    state changes, so a repeat proves the fixpoint. Hitting
+    ``max_rounds`` RAISES: a truncated run returns plausible but WRONG
+    results. ``owned`` — a persisted frame the rounds read — is
+    unpersisted on every exit."""
+    try:
+        for i in range(max_rounds):
+            state, seen = _observed_cut(
+                step(i, state), reliable, f"{name}_{i}", witness.alias("w")
+            )
+            if seen["w"] == prev:
+                return state
+            prev = seen["w"]
+        raise RuntimeError(
+            f"{name} did not converge to a fixpoint within {max_rounds} "
+            "rounds — raise the round cap (a truncated run returns "
+            "WRONG results, not approximate ones)"
+        )
+    finally:
+        if owned is not None:
+            owned.unpersist()
+
+
+def _loop_edges(
+    edges: DataFrame, src: str, dst: str, key: str
+) -> DataFrame:
+    """The loop-invariant edge frame ``(a, b)``: both orientations of
+    ``src``/``dst``, deduplicated and hash-partitioned on the
+    per-round join key ``key``. Repartitioning BEFORE the dedup lets
+    hashpartitioning(key) satisfy the dedup aggregate's
+    ClusteredDistribution((a, b)), so the edge set crosses one
+    exchange. The caller persists or lineage-cuts it once, and every
+    round reuses that partitioning."""
+    return (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .repartition(key)
+        .dropDuplicates()
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str,
@@ -132,7 +178,6 @@ def connected_components(
     *,
     max_iter: int = 100,
     reliable: bool = False,
-    jump_hops: int = 1,
 ) -> DataFrame:
     """Components of the undirected graph given by (src, dst) pairs.
 
@@ -140,155 +185,51 @@ def connected_components(
     reachable from ``node``; every node appearing in any edge gets a
     row. Deterministic: min-labels are order-independent.
 
-    Convergence is CHECKED, not assumed: the loop runs until the
-    label-sum witness stabilizes and RAISES if ``max_iter`` rounds
-    were not enough — a silent early stop returns plausible but
-    WRONG components (caught by round 5's DBSCAN entry: a
-    long-diameter percolation cluster was silently truncated by the
-    old fixed cap, splitting one component in two without any
-    error). Each round min-combines neighbor labels then follows the
-    label->label mapping ``jump_hops`` times (pointer jump): extra
-    hops are always safe — a label names a node of the same
-    component, so chasing it can only shrink the label.
+    Each node is seeded with min(node, min(neighbors)); each round
+    then min-combines neighbor labels, so after round ``r`` (counting
+    from 1) a node holds the minimum id within ``r + 1`` hops and the
+    last round only confirms the fixpoint. The round count is the
+    largest hop distance from any node to its component's minimum
+    node (at least 1): near-dup graphs converge in 1-2 rounds, while
+    a path numbered in ascending order takes one round per edge. A
+    component whose farthest node lies more than ``max_iter`` hops
+    from its minimum RAISES rather than returning split components.
 
-    ``jump_hops`` was TUNED EMPIRICALLY in round 6 on the worst CC
-    consumer (dbscan's percolation graph, solo sf0.1): hops 0/1/2/
-    3/4/8 -> 5.4-6.8 / 6.9-8.2 / 9.8-10.1 / 10.7-11.7 / 11.8-14.3 /
-    21-22s, with round counts 12 / 9 / 9 / 9 / 9 / 9. Min-label
-    percolation spreads breadth-first from every local minimum, so
-    label CHAINS stay short and extra hops buy almost no rounds —
-    they only deepen each round's checkpointed plan. Default 1 keeps
-    cheap insurance against longer chains; graphs with genuinely
-    deep label forests can raise it. (True pointer DOUBLING —
-    map o map per step — was also measured and rejected: lazy
-    re-evaluation makes each doubling level recompute the previous
-    one twice, 12s -> 49-66s.)
+    Convergence is CHECKED, not assumed: labels only decrease, so the
+    exact label sum is a strictly decreasing witness and the loop runs
+    until it stabilizes.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        # pre-partition on the per-iteration join key, THEN dedup:
-        # hashpartitioning(b) satisfies the dedup aggregate's
-        # ClusteredDistribution((a, b)) (b is a subset of the keys),
-        # so the edge set crosses ONE exchange instead of two — the
-        # former .distinct().repartition("b") shuffled every edge by
-        # (a, b) for the dedup and then AGAIN by b for the loop
-        # partitioning (r16, guide §2.4). The cached partitioning is
-        # reused every round, so only the (small) label side shuffles
-        # per iteration.
-        .repartition("b")
-        .dropDuplicates()
-        .persist()
-    )
-    from pyspark.sql import Observation
-
-    # r15 (guide §1.2 step 1 — do less work per round by not doing
-    # round 1 at all): seed each node with min(node, min(neighbors)).
-    # Identity-seeded round 1 would merge exactly this value (labels0
-    # = node, so min over node ∪ neighbors IS this aggregate), so the
-    # seed skips one full merge round — one fewer checkpoint
-    # materialization + witness job per call — at identical init cost
-    # (groupBy("a") shuffles the same rows the old .distinct() did).
-    # The fixpoint and every subsequent merge are unchanged.
-    labels = _cut_lineage(
-        und.groupBy("a").agg(
-            F.least(F.col("a"), F.min("b")).alias("label")
-        ).withColumnRenamed("a", "node"),
+    und = _loop_edges(edges, src, dst, "b").persist()
+    witness = F.sum(F.col("label").cast("decimal(38,0)"))
+    labels, seen = _observed_cut(
+        und.groupBy("a")
+        .agg(F.least(F.col("a"), F.min("b")).alias("label"))
+        .withColumnRenamed("a", "node"),
         reliable,
+        "connected_components_seed",
+        witness.alias("w"),
+        F.count(F.lit(1)).alias("n"),
     )
-
-    # exact decimal sum: labels only ever decrease, so the sum is a
-    # strictly-decreasing convergence witness — and it rides the
-    # checkpoint materialization via observe(), costing ZERO extra
-    # jobs (a separate agg would re-scan the labels every round)
-    witness = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    first = labels.agg(witness, F.count(F.lit(1)).alias("n")).first()
-    prev_sum, n_nodes = first[0], first[1]
-    # r16 DEPTH GATE (r15 verdict item 1): loop-frame compaction only
-    # pays on DEEP loops. r15 applied it unconditionally and its own
-    # quiet-box artifact showed every shallow near-dup consumer
-    # regressing 18-50% (dedup_clusters 2.89->4.14s): with the
-    # min-neighbor seed those graphs converge in 1-2 rounds, so the
-    # extra und.count() action + .rdd plan conversion + narrowed
-    # round-1 parallelism never repay the saved task tax. Compact
-    # only when the fixpoint demonstrates depth (entering round 3 —
-    # dbscan's 10-round percolation CC keeps its measured win, the
-    # 1-2-round near-dup CC never pays the setup).
-    # r16 REJECTED EXPERIMENT (verdict item 3, "two label rounds per
-    # checkpoint+witness"): a fused two-merge wave — inner merge
-    # persist()ed, outer merge checkpointed+witnessed — was built and
-    # measured on the deepest consumer (dbscan's percolation CC,
-    # sf0.01, same box, back-to-back): single-step 8 rounds / 17.1 s
-    # vs fused 6 waves / 10 merge steps / 23.8 s. Two reasons it
-    # loses: (a) the inner merge's broadcast build is itself a
-    # full-barrier job, so a wave schedules the SAME number of jobs
-    # as two plain rounds while adding cache traffic; (b) wave
-    # granularity overshoots the fixpoint (10 merges where 8
-    # converge). The per-round tax this aimed at is the checkpoint
-    # write, and localCheckpoint is already the cheap variant (§5).
+    n_nodes = seen["n"]
     und_it = und
-    for i in range(max_iter):
+
+    def merge(i: int, labels: DataFrame) -> DataFrame:
+        nonlocal und_it
         if i == 2 and n_nodes <= GRAPH_BROADCAST_MAX_ROWS:
             und_it = _compact_loop_frame(und, und.count())
         nbr = und_it.join(
-            _iter_side(labels.withColumnRenamed("node", "b"), n_nodes),
-            "b",
+            _iter_side(labels.withColumnRenamed("node", "b"), n_nodes), "b"
         ).select(F.col("a").alias("node"), "label")
-        obs = Observation(f"cc_witness_{i}")
-        # lineage cut + witness land on MERGED, before the jump: the
-        # hop joins broadcast a merged-derived map, and broadcasting
-        # an unmaterialized mid-plan executes it as a separate
-        # collect job while the main job recomputes it for the left
-        # side — the round paid the edge join + agg TWICE (measured
-        # on the worst consumer, dbscan's percolation graph at
-        # sf0.1: 9.0-11.1s; cutting merged first: 7.3-7.5s,
-        # identical labels). Witness-on-merged stops one round later
-        # than witness-on-jumped (merged lags the jump) but remains
-        # exact: merged_i <= labels_{i-1} <= merged_{i-1} pointwise,
-        # so a stable sum means a stable merged, and then the jump
-        # (a pure function of merged) is a no-op too.
-        merged = _cut_lineage(
+        return (
             labels.union(nbr)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .observe(obs, witness),
-            reliable,
         )
-        # pointer jump against the STATIC per-round map, jump_hops
-        # times (computed once, reused by every hop join) — see the
-        # docstring for the measured hops/rounds/time trade-off.
-        # jumped stays a LAZY 1-join-deep plan over the merged cut:
-        # a second per-round materialization measurably costs more
-        # than re-running the broadcast hop join where it's consumed
-        hop = merged.select(
-            F.col("node").alias("label"), F.col("label").alias("_l2")
-        )
-        jumped = merged
-        for _hop in range(jump_hops):
-            jumped = jumped.join(_iter_side(hop, n_nodes), "label", "left").select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("_l2", "label")
-                ).alias("label"),
-            )
-        labels = jumped
-        new_sum = obs.get["s"]
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    else:
-        converged = False
-    if not converged:
-        und.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            "rounds — raise max_iter (a truncated run would return "
-            "WRONG component labels, not approximate ones)"
-        )
-    und.unpersist()
-    if os.environ.get("ADP_CC_DEBUG"):
-        print(f"[cc] converged after {i + 1} rounds", flush=True)
+
+    labels = _fixpoint(
+        merge, labels, witness, seen["w"], max_iter,
+        "connected_components", reliable, owned=und,
+    )
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -303,7 +244,6 @@ def pagerank_quantized(
     *,
     iters: int = 3,
     reliable: bool = False,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the undirected graph, computed in
     pure fixed-point BIGINT arithmetic.
@@ -320,70 +260,49 @@ def pagerank_quantized(
     (< deg ulps per node per iteration).
 
     Scale design: same as connected_components — per iteration one
-    hash join of (node, rank) against the edge list on the source key
-    and one partial-aggregated sum on the destination key; node
-    payloads are (long, long) pairs only. Fixed ``iters`` (no
+    hash join of each node's contribution against the edge list on
+    the source key and one partial-aggregated sum on the destination
+    key; node payloads are a few longs only. Each node's degree rides
+    the rank table: in the deduplicated both-orientation edge frame a
+    node's in-degree equals its out-degree, so every round's
+    aggregate recounts it at no extra pass. Fixed ``iters`` (no
     convergence collect) keeps the job graph static — the driver
     never inspects data.
     """
-    from pyspark.sql.window import Window
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        # r16 (guide §2.4): repartition FIRST, dedup in place —
-        # hashpartitioning(a) satisfies both the dedup aggregate's
-        # ClusteredDistribution((a, b)) and the degree window's
-        # ClusteredDistribution((a)), so ONE exchange builds the
-        # deduped, degree-annotated, loop-partitioned adjacency (the
-        # former .distinct() + window shape shuffled the edge set by
-        # (a, b) and then again by a)
-        .repartition("a")
-        .dropDuplicates()
-    )
-    # loop-invariant hoist: (edge, source-degree) never changes, so
-    # compute it ONCE and persist
-    adj = und.withColumn(
-        "deg", F.count(F.lit(1)).over(Window.partitionBy("a")).cast("long")
-    ).persist()
+    und = _loop_edges(edges, src, dst, "a").persist()
     base = (1 * PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
-    # adj is already hash-partitioned by "a", so this distinct adds
+    # und is already hash-partitioned by "a", so this aggregate adds
     # no exchange
-    ranks = adj.select("a").distinct().select(
-        "a", F.lit(PR_SCALE).cast("long").alias("rank")
+    ranks = und.groupBy("a").agg(
+        F.lit(PR_SCALE).cast("long").alias("rank"),
+        F.count(F.lit(1)).cast("long").alias("deg"),
     )
-    # node count measured ONCE (the count also warms the adj persist
-    # that iteration 1 would otherwise pay): the rank table holds
-    # exactly n_nodes rows every round, so one scalar pins the
-    # per-iteration join strategy for the whole loop
+    # node count measured ONCE (the count also fills the und cache):
+    # the rank table holds exactly n_nodes rows every round, so one
+    # scalar pins the per-iteration join strategy for the whole loop
     n_nodes = ranks.count()
-    # r16: loop-frame compaction REVERTED here (r15 verdict item 1) —
-    # at the fixed 3 iterations the saved task tax never repaid the
-    # extra adj.count() action + .rdd conversion (quiet-box freeze vs
-    # OPT artifact: 4.17 -> 4.29 s). Deep loops keep it in
-    # connected_components behind the round-depth gate.
     for i in range(iters):
-        contrib = adj.join(_iter_side(ranks, n_nodes), "a").select(
-            F.col("b").alias("node"),
+        share = ranks.select(
+            "a",
             F.expr(
                 f"({PR_DAMP_NUM} * rank) DIV ({PR_DAMP_DEN} * deg)"
             ).alias("c"),
         )
         ranks = (
-            contrib.groupBy("node")
-            .agg(F.sum("c").cast("long").alias("in_sum"))
-            .select(
-                F.col("node").alias("a"),
-                (F.lit(base).cast("long") + F.col("in_sum")).alias("rank"),
+            und.join(_iter_side(share, n_nodes), "a")
+            .groupBy(F.col("b").alias("a"))
+            .agg(
+                (F.lit(base).cast("long") + F.sum("c")).alias("rank"),
+                F.count(F.lit(1)).cast("long").alias("deg"),
             )
         )
         # lineage grows by one join + one agg per round; cutting it
-        # EVERY round pays an eager materialization each time. Cut on
-        # an interval (GraphX-style checkpointInterval) — deep enough
-        # to stay cheap, shallow enough that the plan never compounds
-        if (i + 1) % max(1, checkpoint_interval) == 0 and i != iters - 1:
+        # EVERY round pays an eager materialization each time. Cut
+        # every second round — deep enough to stay cheap, shallow
+        # enough that the plan never compounds
+        if i % 2 == 1 and i != iters - 1:
             ranks = _cut_lineage(ranks, reliable)
-    adj.unpersist()
+    und.unpersist()
     return ranks.select(F.col("a").alias("node"), "rank")
 
 
@@ -411,16 +330,15 @@ def bfs_hops(
     |V| regardless of edge density, which is what makes BFS feasible
     on a 100 TB edge list.
 
-    Every hop's LEVEL is lineage-cut eagerly (r16, guide §5): the
-    frontier feeds both the next hop's join AND the visited set, and
-    the r15 shape (cut `visited` on an interval, keep `frontier`
-    lazy) re-executed every prior hop's join+distinct+anti subtree
-    inside the final action — hop h's lazy frontier embedded hops
-    1..h-1 wholesale, so a 4-hop BFS paid ~2x the traversal and
-    carried a 2,900-line physical plan. One bounded materialization
-    per hop keeps each job frontier-sized, the anti-join side a flat
-    union of materialized levels, and the plan depth constant in
-    ``max_hops``.
+    Every hop's LEVEL is lineage-cut eagerly: the frontier feeds both
+    the next hop's join AND the visited set, so a lazy frontier would
+    embed every prior hop's join+distinct+anti subtree in each later
+    hop. One bounded materialization per hop keeps each job
+    frontier-sized, the anti-join side a flat union of materialized
+    levels, and the plan depth constant in ``max_hops``. The level's
+    row count rides that cut, and the loop stops at the first empty
+    frontier rather than paying a checkpoint per remaining hop. With
+    ``reliable=True`` each hop is a reliable-storage write.
     """
     adj = edges.repartition("a").persist()
     level = _cut_lineage(
@@ -443,7 +361,7 @@ def bfs_hops(
         # pinned shuffle_hash 258 MB / ~10 s). The shuffle_hash hint
         # still keeps the hash-join family — the persisted adj side
         # is never re-exchanged or sorted
-        level = _cut_lineage(
+        level, seen = _observed_cut(
             level.hint("shuffle_hash")
             .join(adj, level["node"] == adj["a"])
             .select(F.col("b").alias("node"))
@@ -451,7 +369,11 @@ def bfs_hops(
             .join(visited.hint("shuffle_hash"), "node", "left_anti")
             .withColumn("hops", F.lit(h).cast("int")),
             reliable,
+            f"bfs_level_{h}",
+            F.count(F.lit(1)).alias("n"),
         )
+        if seen["n"] == 0:
+            break
         levels.append(level)
     adj.unpersist()
     out = levels[0]
@@ -475,59 +397,38 @@ def k_core_peel(
     DataFrame with column ``k`` — broadcast into the degree filter).
     Returns the surviving edges.
 
-    Loops until a CONVERGENCE WITNESS fires: the surviving-edge count
-    per round, observed via ``observe()`` riding the lineage-cut
-    materialization (zero extra jobs). Edge counts only decrease
-    under peeling, so an unchanged count proves the fixpoint; hitting
-    ``max_rounds`` while still changing RAISES rather than returning
-    a silently-too-large "core" (the same converge-or-RAISE contract
-    as :func:`connected_components`). Per round: one partial-agg
-    degree count + two hash semi-joins that SHRINK the edge list —
-    bounded-state iteration, lineage cut per round.
+    Runs in :func:`_fixpoint` with the surviving-edge count as the
+    witness: edge counts only decrease under peeling, so an unchanged
+    count proves the fixpoint, and hitting ``max_rounds`` while still
+    changing RAISES rather than returning a too-large "core". Per
+    round: one partial-agg degree count + two hash semi-joins that
+    SHRINK the edge list.
 
     ``n_edges`` / ``n_nodes``: caller-supplied exact counts of the
     input edge rows and distinct ``a`` values. When BOTH are given
-    (and the caller passes an already-materialized ``und``, e.g. a
-    ``localCheckpoint`` it needed anyway), the initial observe +
-    re-checkpoint job is SKIPPED — r15 paid a full second
-    materialization of the edge set before round 1 just to count
-    rows the caller's own degree aggregate already knew (r16,
-    guide §1.2: don't compute things twice)."""
-    from pyspark.sql import Observation
-
+    (and the caller passes an already-materialized ``und``), the
+    initial observe + checkpoint job that would count them is
+    skipped."""
     if n_edges is not None and n_nodes is not None:
-        edges = und
-        prev_n = int(n_edges)
-        alive_bound = int(n_nodes)
+        edges, prev_n, alive_bound = und, int(n_edges), int(n_nodes)
     else:
-        obs0 = Observation("kcore_peel_0")
-        edges = _cut_lineage(
-            und.observe(
-                obs0,
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("a").alias("nodes"),
-            ),
+        edges, seen = _observed_cut(
+            und,
             reliable,
+            "k_core_peel_seed",
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct("a").alias("nodes"),
         )
-        prev_n = obs0.get["n"]
-        # the alive side only ever SHRINKS (peeling is monotone), so
-        # the initial node count bounds every round's broadcast
-        # decision. It rides the SAME observation as the edge count
-        # (zero extra jobs); approx_count_distinct's ~5% rsd gets a
-        # 1.1x safety margin — fine for a strategy threshold with 2x
-        # headroom, and far tighter than the edge-count proxy
-        # (measured: the proxy blocked the broadcast at x4 and cost
-        # a 16.7x shuffle ratio)
-        alive_bound = int(obs0.get["nodes"] * 1.1)
-    # r16: per-round loop-frame compaction REVERTED (r15 verdict
-    # item 1) — the k-core A/B pairs showed no signal and the
-    # quiet-box artifact regressed (2.74 -> 3.04 s); the coalesce on
-    # every round's checkpoint narrowed real degree-agg parallelism.
-    converged = False
-    for i in range(1, max_rounds + 1):
+        prev_n = seen["n"]
+        # the alive side only ever SHRINKS, so the initial node count
+        # bounds every round's broadcast decision; approx_count_
+        # distinct's ~5% rsd gets a 1.1x safety margin — fine for a
+        # strategy threshold with 2x headroom
+        alive_bound = int(seen["nodes"] * 1.1)
+
+    def peel(_i: int, edges: DataFrame) -> DataFrame:
         # the degree-agg subtree appears in BOTH semi-joins of one
-        # plan; exchange reuse dedupes it (verified: persisting alive
-        # changed shuffle bytes by zero), so no cache is needed
+        # plan; exchange reuse dedupes it, so no cache is needed
         alive = (
             edges.groupBy("a")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -535,32 +436,20 @@ def k_core_peel(
             .filter(F.col("c") >= F.col("k"))
             .select("a")
         )
-        obs = Observation(f"kcore_peel_{i}")
-        edges = _cut_lineage(
-            edges.join(
-                _iter_side(alive.withColumnRenamed("a", "xa"), alive_bound),
-                F.col("a") == F.col("xa"),
-                "left_semi",
-            ).join(
-                _iter_side(alive.withColumnRenamed("a", "ya"), alive_bound),
-                F.col("b") == F.col("ya"),
-                "left_semi",
-            ).observe(obs, F.count(F.lit(1)).alias("n")),
-            reliable,
+        return edges.join(
+            _iter_side(alive.withColumnRenamed("a", "xa"), alive_bound),
+            F.col("a") == F.col("xa"),
+            "left_semi",
+        ).join(
+            _iter_side(alive.withColumnRenamed("a", "ya"), alive_bound),
+            F.col("b") == F.col("ya"),
+            "left_semi",
         )
-        new_n = obs.get["n"]
-        if new_n == prev_n:
-            converged = True
-            break
-        prev_n = new_n
-    if not converged:
-        raise RuntimeError(
-            f"k_core peel did not reach a fixpoint within {max_rounds} "
-            "rounds — raise max_rounds (a truncated peel returns a "
-            "too-LARGE core, and a round-unrolled oracle cannot catch "
-            "it)"
-        )
-    return edges
+
+    return _fixpoint(
+        peel, edges, F.count(F.lit(1)), prev_n, max_rounds,
+        "k_core_peel", reliable,
+    )
 
 
 def label_propagation(
@@ -580,21 +469,15 @@ def label_propagation(
     partial-agg friendly, no per-round window sort. Bounded-state
     iteration, lineage cut per round.
 
-    Duplicate ``(a, b)`` rows are dropped HERE (fused into the loop
-    repartition — hashpartitioning(b) satisfies the dedup
-    aggregate's ClusteredDistribution, zero extra exchange), because
-    duplicate edges would double votes; callers no longer need to
-    pre-distinct (r16, guide §2.4 — one exchange builds the deduped
-    loop-partitioned frame)."""
-    undp = und.repartition("b").dropDuplicates().persist()
+    Either orientation of an edge suffices: the edge frame adds the
+    reverse of every row and drops duplicate ``(a, b)`` rows (which
+    would double votes), so callers need not symmetrize or
+    pre-distinct."""
+    undp = _loop_edges(und, "a", "b", "b").persist()
     labels = undp.select("a").distinct().withColumn("lab", F.col("a"))
     # node count measured once (warms the undp persist); the label
     # table holds exactly n_nodes rows every round
     n_nodes = labels.count()
-    # r16: loop-frame compaction REVERTED here (r15 verdict item 1 —
-    # quiet-box artifact regressed 4.79 -> 5.66 s: at LPA_ROUNDS=4
-    # the extra count action + narrowed per-round join parallelism
-    # cost more than the saved near-empty tasks).
     for _ in range(rounds):
         votes = (
             undp.join(

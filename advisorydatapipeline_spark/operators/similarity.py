@@ -1117,12 +1117,7 @@ def dbscan_chebyshev(pts: DataFrame, eps: int, mp: DataFrame) -> DataFrame:
         pairs.join(core.withColumnRenamed("id", "a"), "a", "left_semi")
         .join(core.withColumnRenamed("id", "b"), "b", "left_semi")
     )
-    # jump_hops=0 (r15): on this percolation graph pointer jumping
-    # buys ~1 round but costs a hop broadcast-build + join PER round —
-    # measured slower at every hops>=1 (r6: hops0 5.4-6.8 s vs hops1
-    # 6.9-8.2 s solo sf0.1; r15 with the min-neighbor seed: 11 rounds
-    # vs 10, ~1/3 fewer per-round jobs). Convergence stays witnessed.
-    cc = connected_components(cedges, "a", "b", jump_hops=0).select(
+    cc = connected_components(cedges, "a", "b").select(
         F.col("node").alias("id"), F.col("component").alias("cluster_id")
     )
     # isolated cores (no core neighbor) are their own singleton cluster

@@ -130,9 +130,9 @@ def dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS: connected components over the exact-Jaccard
     pair graph (min-reachable-id labeling). Pairs say "these two are
     dups"; the component is the dedup unit — keep ``min(doc_id)`` per
-    cluster, drop the rest. Pregel-style min-label propagation with
-    pointer jumping (operators/graph.py); the oracle replays it as a
-    recursive reachability CTE."""
+    cluster, drop the rest. Pregel-style min-label propagation
+    (operators/graph.py); the oracle replays it as a recursive
+    reachability CTE."""
     from advisorydatapipeline_spark.operators.graph import (
         connected_components,
     )
@@ -145,10 +145,7 @@ def dedup_clusters(spark, sf_dir):
         max_doc_freq=MAX_DOC_FREQ,
     ).persist()
     pairs = jaccard_pairs(idx, "doc_id", MIN_JACCARD)
-    # jump_hops=0 (r15): near-dup graphs converge in ONE round under
-    # the min-neighbor seed, so the per-round hop join is pure
-    # overhead here (rounds pinned in plans/r15/cc_seed_rounds_*)
-    cc = connected_components(pairs, "id_a", "id_b", jump_hops=0)
+    cc = connected_components(pairs, "id_a", "id_b")
     return cc.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
@@ -486,10 +483,7 @@ def canonical_corpus(spark, sf_dir):
         docs, "doc_id", "text", 3, max_doc_freq=MAX_DOC_FREQ
     ).persist()
     pairs = jaccard_pairs(idx, "doc_id", MIN_JACCARD)
-    # jump_hops=0 (r15): near-dup graphs converge in ONE round under
-    # the min-neighbor seed, so the per-round hop join is pure
-    # overhead here (rounds pinned in plans/r15/cc_seed_rounds_*)
-    cc = connected_components(pairs, "id_a", "id_b", jump_hops=0)
+    cc = connected_components(pairs, "id_a", "id_b")
     drops = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("drop_id")
     )
@@ -937,10 +931,7 @@ def syndicated_families(spark, sf_dir):
         docs, "doc_id", "text", 3, max_doc_freq=MAX_DOC_FREQ
     ).persist()
     pairs = jaccard_pairs(idx, "doc_id", MIN_JACCARD)
-    # jump_hops=0 (r15): near-dup graphs converge in ONE round under
-    # the min-neighbor seed, so the per-round hop join is pure
-    # overhead here (rounds pinned in plans/r15/cc_seed_rounds_*)
-    cc = connected_components(pairs, "id_a", "id_b", jump_hops=0)
+    cc = connected_components(pairs, "id_a", "id_b")
     src = docs.select("doc_id", "source")
     return (
         cc.select(

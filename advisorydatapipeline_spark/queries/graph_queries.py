@@ -332,6 +332,7 @@ def k_core_suppliers(spark, sf_dir):
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     from advisorydatapipeline_spark.operators.graph import (
         _cut_lineage,
+        _loop_edges,
         k_core_peel,
     )
 
@@ -344,25 +345,15 @@ def k_core_suppliers(spark, sf_dir):
         .distinct()
     )
     # cut once so neither the k computation nor the peel re-derives
-    # the join+distinct. r16 (guide §2.4): repartition("a") BEFORE
-    # the dedup — hashpartitioning(a) satisfies the dedup aggregate,
-    # so the edge set crosses one exchange instead of two, AND the
-    # checkpoint preserves hash(a), which every peel round's degree
-    # aggregate (groupBy("a")) then reuses with no further exchange
-    # (broadcast semi-joins preserve the edge side's partitioning
-    # round over round).
-    und = _cut_lineage(
-        e0.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .union(e0.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .repartition("a")
-        .dropDuplicates(),
-        False,
-    )
+    # the join+distinct; the checkpoint keeps hash(a), which every
+    # peel round's degree aggregate (groupBy("a")) reuses with no
+    # further exchange (broadcast semi-joins preserve the edge side's
+    # partitioning round over round)
+    und = _cut_lineage(_loop_edges(e0, "src", "dst", "a"), False)
     deg0 = und.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # r16: the ks aggregate already scans every degree row, so the
-    # exact edge/node counts ride the SAME 1-row cut — k_core_peel
-    # then skips its initial observe + re-checkpoint job (a full
-    # second materialization of the edge set, guide §1.2).
+    # the ks aggregate already scans every degree row, so the exact
+    # edge/node counts ride the SAME 1-row cut and k_core_peel skips
+    # its own counting job
     stats = _cut_lineage(
         deg0.agg(
             F.greatest(
@@ -467,15 +458,8 @@ def label_propagation_communities(spark, sf_dir):
         )
         .distinct()
     )
-    # r16: no query-side .distinct() + lineage cut — label_propagation
-    # now dedups INSIDE its loop repartition (one exchange builds the
-    # deduped loop-partitioned frame), and the former _cut_lineage was
-    # a whole extra materialization job of the edge set feeding a
-    # single consumer (guide §2.4 / §1.2).
-    und = e0.select(F.col("src").alias("a"), F.col("dst").alias("b")).union(
-        e0.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    )
-    labels = label_propagation(und, LPA_ROUNDS)
+    # label_propagation adds the reverse orientation and dedups
+    labels = label_propagation(e0.toDF("a", "b"), LPA_ROUNDS)
     return labels.groupBy(F.col("lab").alias("community_id")).agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),
         F.min("a").cast("long").alias("min_member"),

@@ -1661,8 +1661,8 @@ def dbscan_grid_clusters(spark, sf_dir):
     cell equi-join (grid_proximity_join's plan — a constant 9x
     replication instead of the oracle's quadratic inequality join);
     points with >= minPts neighbors are CORES, clusters are connected
-    components of the core-core graph (the pointer-jumping CC
-    operator), non-core points with a core neighbor attach as
+    components of the core-core graph (the min-label CC operator),
+    non-core points with a core neighbor attach as
     BORDER (min neighboring core label — deterministic), the rest is
     NOISE. The clustering family kmeans can't cover: no k chosen up
     front, arbitrary-shape clusters, an explicit noise verdict.

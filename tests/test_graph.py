@@ -226,3 +226,73 @@ def test_label_propagation_two_cliques(spark):
     labs = {r.a: r.lab for r in label_propagation(und, 4).collect()}
     assert labs[1] == labs[2] == labs[3] == 1
     assert labs[11] == labs[12] == labs[13] == 10
+
+
+def test_bfs_stops_at_empty_frontier(spark, monkeypatch):
+    """Once the frontier drains, BFS pays no further per-hop cut: a
+    3-node path from one end needs the seed cut plus 3 hops (the
+    third finds nothing), not one cut per allowed hop."""
+    from advisorydatapipeline_spark.operators import graph
+
+    calls = []
+    real = graph._cut_lineage
+
+    def counting(df, reliable):
+        calls.append(1)
+        return real(df, reliable)
+
+    monkeypatch.setattr(graph, "_cut_lineage", counting)
+    got = _bfs(spark, [(1, 2), (2, 3)], [1], 20)
+    assert got == {1: 0, 2: 1, 3: 2}
+    assert len(calls) == 4
+
+
+def test_connected_components_plan_size_estimate_stays_bounded(spark):
+    """Each lineage cut keeps the statistics of the plan it cut. The
+    per-round edge join multiplies its sides' estimates, which adds
+    about 10 bits per round on this graph (11 rounds: the minimum
+    node sits 11 hops from both chain ends); a per-round self-join of
+    the labels would square the estimate instead and pass 2**128
+    within a few rounds."""
+    import sys
+
+    order = [17, 4, 21, 9, 13, 6, 19, 2, 11, 22, 7, 0, 15, 1, 18, 10, 3,
+             20, 8, 14, 5, 16, 12]
+    edges = spark.createDataFrame(
+        list(zip(order, order[1:])), "a long, b long"
+    )
+    cc = connected_components(edges, "a", "b")
+    assert {r.component for r in cc.collect()} == {0}
+    limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        # py4j hands the Scala BigInt over as a decimal string
+        size = cc._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    finally:
+        sys.set_int_max_str_digits(limit)
+    assert size < 2**128
+
+
+def test_raising_loops_release_their_cache(spark):
+    """A loop that hits its round cap must still unpersist the edge
+    frame it cached."""
+    import pytest as _pytest
+
+    from advisorydatapipeline_spark.operators.graph import k_core_peel
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "a long, b long"
+    )
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, "a", "b", max_iter=2)
+    assert cache.isEmpty()
+    path = [(i, i + 1) for i in range(1, 5)]
+    und = spark.createDataFrame(
+        path + [(b, a) for a, b in path], "a long, b long"
+    )
+    ks = spark.createDataFrame([(2,)], "k long")
+    with _pytest.raises(RuntimeError, match="fixpoint"):
+        k_core_peel(und, ks, max_rounds=1)
+    assert cache.isEmpty()
