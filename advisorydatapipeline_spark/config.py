@@ -23,7 +23,6 @@ def _utcnow() -> datetime:
 class PipelineConfig:
     base_path: str
     cache_ttl_hours: float = 24.0
-    incremental: bool = True
     # injectable clock for deterministic TTL cutoffs
     clock: Callable[[], datetime] = field(default=_utcnow)
 

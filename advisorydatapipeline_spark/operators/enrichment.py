@@ -13,10 +13,9 @@ dataflow. Here the same contract runs *on the executors*:
   retry/backoff.
 - The fetch function is injected (``UpstreamSource.enrichment_fn``),
   so tests run a deterministic fake and production plugs a real HTTP
-  client — mirroring the reference's pluggable
-  ``UpstreamSourceConfiguration(enrichment_function=...,
-  normalization_function=..., priority=...)``
-  (enrichment/definitions.py:25-37).
+  client — mirroring the reference's pluggable upstream-source
+  dataclass (enrichment function, normalization function, priority;
+  enrichment/definitions.py:25-37).
 
 Scale notes: the worklist is repartitioned to ``parallelism`` before
 the UDF so the rate limit and the HTTP concurrency are both set by
@@ -28,11 +27,10 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -116,46 +114,3 @@ def enrich_map_in_pandas(
     work = worklist.select(k1, k2).distinct().repartition(n, k1, k2)
     return work.mapInPandas(run, out_schema)
 
-
-@dataclass
-class EnrichmentRegistry:
-    """Priority-ordered source registry; conflict resolution downstream
-    is the W1 window (priority DESC, timestamp DESC) the reference
-    uses (map_new_info_with_udf.py:41-50)."""
-
-    sources: list[UpstreamSource] = field(default_factory=list)
-
-    def register(self, source: UpstreamSource) -> None:
-        if any(s.name == source.name for s in self.sources):
-            raise ValueError(f"duplicate enrichment source {source.name!r}")
-        self.sources.append(source)
-
-    def by_priority(self) -> list[UpstreamSource]:
-        return sorted(self.sources, key=lambda s: -s.priority)
-
-    def enrich_all(
-        self,
-        worklist: DataFrame,
-        key_cols: tuple[str, str] = ("cve_id", "package"),
-    ) -> DataFrame:
-        """Run every source and union results tagged with
-        (enrichment_source, priority) — the input the W1 priority-dedup
-        window resolves."""
-        outs = []
-        for s in self.by_priority():
-            enriched = enrich_map_in_pandas(worklist, s, key_cols)
-            outs.append(
-                enriched.select(
-                    "*",
-                    F.lit(s.name).alias("enrichment_source"),
-                    F.lit(s.priority).alias("priority"),
-                )
-            )
-        if not outs:
-            raise ValueError("no enrichment sources registered")
-        merged = outs[0]
-        for o in outs[1:]:
-            # sources may return different result fields; align by
-            # name (the reference normalizes per-source before union)
-            merged = merged.unionByName(o, allowMissingColumns=True)
-        return merged

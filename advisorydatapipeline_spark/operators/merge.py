@@ -13,10 +13,10 @@ MERGE clause matrix
 with first-matching-clause-wins ordering, computed as ONE outer join
 plus row-local conditional projection — the same logical plan a
 Delta/Iceberg MERGE compiles to before its file-rewrite step. The
-result is the post-merge state of the target; pair with
-``upsert.upsert_to_path``'s write-to-temp-then-swap to persist it
-atomically on plain parquet, or write it through a MERGE-native table
-format when one is attached.
+result is the post-merge state of the target; persist it on plain
+parquet with ``sources.io.replace_table`` (one write to a temp path,
+then a rename onto the target), or write it through a MERGE-native
+table format when one is attached.
 
 Scale design: the single shuffle is the key-equi outer join. Spark
 cannot broadcast a FULL outer join, so with insert clauses present

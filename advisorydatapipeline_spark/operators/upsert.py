@@ -8,38 +8,30 @@ using a real ``left_anti`` join (same physical plan, clearer intent).
 The reference reads prod and overwrites prod *in the same query*
 (state_machine/pipeline.py:72-95), dodging the
 lazy-plan-over-deleted-files hazard only by accident (SURVEY.md §3.3).
-:func:`upsert_to_path` fixes that with write-to-temp-then-swap. A
+:func:`upsert_to_path` fixes that with ``sources.io.replace_table``:
+one write of the merge to a temp path, then a rename onto prod. A
 table format with native MERGE (Delta/Iceberg) is the real fix at
 scale; jars are not in this image, so that connector is stubbed
 behind an import-try in sources/.
 
 Scale notes: the anti-join shuffles both sides on the key unless the
-new side is small — at 100 TB prod with a small daily delta, broadcast
-the *new* side (Catalyst/AQE does this automatically under the
-threshold; ``broadcast_new`` forces it).
+new side is small — at 100 TB prod with a small daily delta,
+Catalyst/AQE broadcasts the *new* side under the threshold.
 """
 
 from __future__ import annotations
 
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from advisorydatapipeline_spark.sources.io import read_table, replace_table
 
 
-def upsert(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    keys: Sequence[str],
-    *,
-    broadcast_new: bool = False,
-) -> DataFrame:
+def upsert(new_df: DataFrame, old_df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """New rows win per key; old rows survive only where the key is
     absent from ``new_df``. Columns are aligned by name."""
     probe = new_df.select(*keys).dropDuplicates(list(keys))
-    if broadcast_new:
-        probe = F.broadcast(probe)
     survivors = old_df.join(probe, on=list(keys), how="left_anti")
     return new_df.unionByName(survivors.select(*new_df.columns))
 
@@ -50,17 +42,9 @@ def upsert_to_path(
     prod_path: str,
     keys: Sequence[str],
     schema,
-    *,
-    read_table,
-    write_table,
 ) -> None:
-    """Safe read-merge-overwrite against one prod path: materialize the
-    merge to ``<path>__tmp`` first, then swap — never plan over files
-    being deleted."""
+    """Read-merge-overwrite against one prod path: the merge is written
+    once and swapped in by rename (``replace_table``), so no plan ever
+    reads files being deleted."""
     old_df = read_table(spark, prod_path, schema)
-    merged = upsert(new_df, old_df, keys)
-    tmp = prod_path.rstrip("/") + "__tmp"
-    write_table(merged, tmp, schema=schema)
-    final = read_table(spark, tmp, schema)
-    write_table(final, prod_path, schema=schema)
-    shutil.rmtree(tmp.removeprefix("file:"), ignore_errors=True)
+    replace_table(spark, upsert(new_df, old_df, keys), prod_path, schema)

@@ -17,15 +17,14 @@ the same guarantees:
 Differences from the reference, by design (SURVEY.md §7):
 - enrichment runs on the executors (operators/enrichment.py
   mapInPandas) instead of driver collect() + thread pool;
-- the prod upsert materializes to a temp path then swaps
-  (operators/upsert.upsert_to_path) instead of reading and
-  overwriting the same files in one query;
-- counts for logging are lazy ``observe()`` metrics, not extra jobs.
+- the prod upsert and the cache persist write once to a temp path,
+  then rename it onto the target (sources/io.replace_table) instead
+  of reading and overwriting the same files in one query.
 """
 
 from __future__ import annotations
 
-import shutil
+from collections import Counter
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
@@ -47,9 +46,9 @@ from advisorydatapipeline_spark.operators.ttl_cache import (
 from advisorydatapipeline_spark.operators.upsert import upsert_to_path
 from advisorydatapipeline_spark.operators.window_ops import top_k_per_key
 from advisorydatapipeline_spark.sources.io import (
-    observed,
     read_table,
     register_view,
+    replace_table,
     write_table,
 )
 
@@ -126,7 +125,11 @@ def run_enrich_phase(
     sources: list[NormalizedSource],
 ) -> DataFrame:
     """TTL-cache-gated enrichment per source; returns the union of all
-    normalized enrichment staged this run."""
+    normalized enrichment staged this run. Staging paths and cache rows
+    are keyed by source name, so names must be unique."""
+    dupes = [n for n, c in Counter(s.upstream.name for s in sources).items() if c > 1]
+    if dupes:
+        raise ValueError(f"duplicate enrichment source name {dupes[0]!r}")
     now = config.clock()
 
     # worklist: advisory keys not manually overridden (reference
@@ -157,7 +160,6 @@ def run_enrich_phase(
         ttl_h = config.cache_ttl_hours
         cutoff = now - timedelta(hours=ttl_h)
         todo = pending_work(worklist, cache, KEYS, src.upstream.name, cutoff)
-        todo, n_obs = observed(todo, f"enrich_{src.upstream.name}_{run_id}")
 
         raw = enrich_map_in_pandas(todo, src.upstream, KEYS)
         raw_path = f"{config.run_path(run_id)}/enrichment/raw/{src.upstream.name}"
@@ -179,17 +181,14 @@ def run_enrich_phase(
         # cache merge AFTER successful staging (reference cache.py:109)
         cache = update_cache(cache, todo, KEYS, src.upstream.name, now)
 
-    # persist the merged cache once for all sources (temp-then-swap to
-    # avoid planning over files we are deleting)
-    tmp = config.cache_path + "__tmp"
-    write_table(
+    # persist the merged cache once for all sources; the merge reads
+    # the cache files it replaces, hence replace_table
+    replace_table(
+        spark,
         cache.withColumnRenamed("package", "package_name"),
-        tmp,
-        schema=schemas.ENRICHMENT_CACHE_SCHEMA,
+        config.cache_path,
+        schemas.ENRICHMENT_CACHE_SCHEMA,
     )
-    cache_final = read_table(spark, tmp, schemas.ENRICHMENT_CACHE_SCHEMA)
-    write_table(cache_final, config.cache_path, schema=schemas.ENRICHMENT_CACHE_SCHEMA)
-    shutil.rmtree(tmp.removeprefix("file:"), ignore_errors=True)
 
     merged = normalized_parts[0]
     for part in normalized_parts[1:]:
@@ -310,15 +309,7 @@ def run_state_machine_phase(
     staged = read_table(spark, staged_path, schemas.STATE_MACHINE_SCHEMA)
     register_view(staged, "processed_cve_state_machine")
 
-    upsert_to_path(
-        spark,
-        staged,
-        prod_path,
-        list(KEYS),
-        schemas.STATE_MACHINE_SCHEMA,
-        read_table=read_table,
-        write_table=write_table,
-    )
+    upsert_to_path(spark, staged, prod_path, list(KEYS), schemas.STATE_MACHINE_SCHEMA)
     return read_table(spark, prod_path, schemas.STATE_MACHINE_SCHEMA)
 
 

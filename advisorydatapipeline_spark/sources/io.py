@@ -135,6 +135,29 @@ def write_table(
         writer.format(fmt).save(path)
 
 
+def replace_table(
+    spark: SparkSession, df: DataFrame, path: str, schema: T.StructType
+) -> None:
+    """Replace the parquet table at ``path`` with ``df``, safely even
+    when ``df`` reads ``path`` itself (a read-merge-overwrite).
+
+    ``df`` is written once, in full, to the sibling ``<path>__tmp``;
+    only then is ``path`` deleted and the temp dir renamed onto it
+    through the session's Hadoop FileSystem (one code path for local
+    and remote paths). A run that dies between the delete and the
+    rename leaves the complete new table in ``<path>__tmp``. A failed
+    rename raises.
+    """
+    path = path.rstrip("/")
+    tmp = f"{path}__tmp"
+    write_table(df, tmp, schema=schema)
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs.delete(hpath(path), True)
+    if not fs.rename(hpath(tmp), hpath(path)):
+        raise OSError(f"could not rename {tmp} onto {path}")
+
+
 def write_raw(
     spark: SparkSession,
     content: str | bytes,

@@ -9,8 +9,8 @@ operators, so the advisory pipeline can run continuously:
 - session windows (the streaming twin of queries/aggregates.py
   sessionization)
 - ``foreachBatch`` upsert into the prod state table — the reference's
-  anti-join+union upsert applied per micro-batch, giving exactly-once
-  state maintenance over files
+  anti-join+union upsert applied per micro-batch and swapped in by
+  rename, giving exactly-once state maintenance over files
 
 Tests drive these with ``availableNow`` + memory sink and assert
 equality with the batch twins (tests/test_streaming.py).
@@ -123,7 +123,6 @@ def start_streaming_upsert(
     (operators/upsert.upsert_to_path) transactionally via foreachBatch.
     """
     from advisorydatapipeline_spark.operators.upsert import upsert_to_path
-    from advisorydatapipeline_spark.sources.io import read_table, write_table
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -137,13 +136,7 @@ def start_streaming_upsert(
         payload = [c for c in batch_df.columns if c not in keys]
         latest = max_by_per_key(batch_df, keys, ["event_time"], payload)
         upsert_to_path(
-            spark,
-            latest.select(*batch_df.columns),
-            prod_path,
-            keys,
-            schema,
-            read_table=read_table,
-            write_table=write_table,
+            spark, latest.select(*batch_df.columns), prod_path, keys, schema
         )
 
     writer = (
@@ -173,7 +166,8 @@ def start_streaming_merge(
     MERGE clauses express semantics last-writer-wins upsert cannot,
     e.g. ACCUMULATE across batches (``WHEN MATCHED UPDATE SET n =
     t.n + s.n``) for incremental rollups. Each batch reads prod,
-    merges (one outer join), and writes temp-then-swap — the same
+    merges (one outer join), and replaces prod through
+    ``sources.io.replace_table`` (one write, then a rename) — the same
     exactly-once-per-batch discipline as the upsert sink; on a
     MERGE-native table format the foreachBatch body is the single
     place to swap in a real ``MERGE INTO``.
@@ -184,14 +178,14 @@ def start_streaming_merge(
     CUMULATIVE per-key state each trigger, which an accumulating
     MERGE would double-count."""
     from advisorydatapipeline_spark.operators.merge import merge_into
-    from advisorydatapipeline_spark.sources.io import read_table, write_table
+    from advisorydatapipeline_spark.sources.io import read_table, replace_table
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         source = prepare(batch_df) if prepare is not None else batch_df
-        # read prod, MERGE the batch in, write temp-then-swap (same
+        # read prod, MERGE the batch in, replace prod (same
         # lazy-plan-over-deleted-files discipline as upsert_to_path)
         target = read_table(spark, prod_path, schema)
         merged = merge_into(
@@ -201,13 +195,7 @@ def start_streaming_merge(
             when_matched=when_matched,
             when_not_matched=when_not_matched,
         )
-        tmp = prod_path.rstrip("/") + "__tmp"
-        write_table(merged, tmp, schema=schema)
-        final = read_table(spark, tmp, schema)
-        write_table(final, prod_path, schema=schema)
-        import shutil as _sh
-
-        _sh.rmtree(tmp.removeprefix("file:"), ignore_errors=True)
+        replace_table(spark, merged, prod_path, schema)
 
     writer = (
         updates.writeStream.outputMode("append")

@@ -2,8 +2,8 @@
 """Single-command pipeline driver: ingest -> enrich -> state machine.
 
 The literal CLI twin of the reference's ``run.py`` (reference
-run.py:57-59 runs run_ingestion_pipeline / enrich_pipeline /
-state_machine_pipeline back to back with a timestamp run id); here the
+run.py:57-59 runs its ingestion, enrichment and state-machine
+pipelines back to back with a timestamp run id); here the
 same three phases are ``pipeline.run_pipeline`` over this engine's
 operators, with the same guarantees (run-id staging isolation,
 TTL-cached enrichment, upsert-to-prod last).
@@ -32,12 +32,10 @@ from datetime import datetime, timezone
 sys.path.insert(0, ".")
 
 
-def _read_any(spark, path: str, schema: str):
-    if path.endswith(".json") or path.endswith(".jsonl"):
-        return spark.read.schema(schema).json(path)
-    if path.endswith(".csv"):
-        return spark.read.schema(schema).option("header", "true").csv(path)
-    return spark.read.parquet(path)
+def _fmt(path: str) -> str:
+    if path.endswith((".json", ".jsonl")):
+        return "json"
+    return "csv" if path.endswith(".csv") else "parquet"
 
 
 def main() -> int:
@@ -49,6 +47,7 @@ def main() -> int:
     ap.add_argument("--overrides", default=None)
     args = ap.parse_args()
 
+    from advisorydatapipeline_spark import schemas
     from advisorydatapipeline_spark.config import PipelineConfig
     from advisorydatapipeline_spark.operators.enrichment import (
         UpstreamSource,
@@ -59,19 +58,19 @@ def main() -> int:
         run_pipeline,
     )
     from advisorydatapipeline_spark.session import get_spark
+    from advisorydatapipeline_spark.sources.io import read_table
     from pyspark.sql import types as T
 
     now = datetime.now(timezone.utc)
     run_id = args.run_id or now.strftime("%Y%m%d_%H%M%S")
     spark = get_spark(f"advisory_pipeline_{run_id}")
 
-    adv_schema = "package_name string, cve_id string, fixed_version string"
-    ov_schema = (
-        "cve_id string, package string, status string, "
-        "fixed_version string, internal_status string"
-    )
+    adv_schema = schemas.ADVISORY_SCHEMA
+    ov_schema = schemas.NOT_APPLICABLE_SCHEMA
     if args.advisories:
-        advisories = _read_any(spark, args.advisories, adv_schema)
+        advisories = read_table(
+            spark, args.advisories, adv_schema, fmt=_fmt(args.advisories)
+        )
     else:
         advisories = spark.createDataFrame(
             [
@@ -82,7 +81,9 @@ def main() -> int:
             adv_schema,
         )
     if args.overrides:
-        overrides = _read_any(spark, args.overrides, ov_schema)
+        overrides = read_table(
+            spark, args.overrides, ov_schema, fmt=_fmt(args.overrides)
+        )
     else:
         overrides = spark.createDataFrame(
             [("cve-3", "GAMMA", "Not applicable here", None,

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from advisorydatapipeline_spark.operators.enrichment import (
-    EnrichmentRegistry,
     UpstreamSource,
     enrich_map_in_pandas,
 )
@@ -72,18 +71,3 @@ def test_enrich_failed_rows_surface_as_nulls(spark):
     assert rows["ok"].found is True
     assert rows["bad"].found is None and rows["bad"].fixed_version is None
 
-
-def test_registry_union_tags_source_and_priority(spark, worklist):
-    reg = EnrichmentRegistry()
-    reg.register(UpstreamSource("primary", make_fake_fetch(), RESULT_SCHEMA, priority=9))
-    reg.register(UpstreamSource("backup", make_fake_fetch(), RESULT_SCHEMA, priority=1))
-    with pytest.raises(ValueError):
-        reg.register(UpstreamSource("primary", make_fake_fetch(), RESULT_SCHEMA))
-    out = reg.enrich_all(worklist)
-    counts = dict(
-        out.groupBy("enrichment_source").count().collect()
-    )
-    assert counts == {"primary": 3, "backup": 3}
-    pr = {r.enrichment_source: r.priority for r in out.select(
-        "enrichment_source", "priority").distinct().collect()}
-    assert pr == {"primary": 9, "backup": 1}

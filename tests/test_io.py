@@ -156,3 +156,19 @@ def test_write_raw_file_uri_scheme(spark, tmp_path):
     path = str(tmp_path / "uri.txt")
     write_raw(spark, "via-uri", "file:" + path)
     assert open(path).read() == "via-uri"
+
+
+@pytest.mark.parametrize("scheme", ["", "file:"])
+def test_replace_table_over_its_own_input(spark, tmp_path, scheme):
+    from advisorydatapipeline_spark.sources.io import replace_table
+
+    path = scheme + str(tmp_path / "t")
+    write_table(spark.createDataFrame([("a", 1)], SIMPLE), path, schema=SIMPLE)
+    # the new table is derived from the files it replaces
+    grown = read_table(spark, path, SIMPLE).unionByName(
+        spark.createDataFrame([("b", 2)], SIMPLE)
+    )
+    replace_table(spark, grown, path, SIMPLE)
+    back = read_table(spark, path, SIMPLE)
+    assert sorted((r.k, r.v) for r in back.collect()) == [("a", 1), ("b", 2)]
+    assert not (tmp_path / "t__tmp").exists()

@@ -52,14 +52,46 @@ def test_upsert_to_path_same_path_safe(spark, tmp_path):
         spark.createDataFrame([(2, "o2"), (3, "o3")], schema), prod, schema=schema
     )
     new = spark.createDataFrame([(1, "n1"), (2, "n2")], schema)
-    upsert_to_path(
-        spark, new, prod, ["k"], schema,
-        read_table=read_table, write_table=write_table,
-    )
+    upsert_to_path(spark, new, prod, ["k"], schema)
     back = read_table(spark, prod, schema)
     assert sorted((r.k, r.v) for r in back.collect()) == [
         (1, "n1"), (2, "n2"), (3, "o3"),
     ]
+    assert not (tmp_path / "prod__tmp").exists()
+
+
+def test_upsert_to_path_writes_once(spark, tmp_path):
+    """The read-merge-overwrite runs no more Spark jobs than one plain
+    write of the same merge: the swap is a rename, not a second write."""
+    from pyspark.sql import types as T
+
+    from advisorydatapipeline_spark.sources.io import read_table, write_table
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.IntegerType(), False),
+            T.StructField("v", T.StringType(), True),
+        ]
+    )
+    old = spark.createDataFrame([(i, f"o{i}") for i in range(50)], schema)
+    new = spark.createDataFrame([(i, f"n{i}") for i in range(40, 60)], schema)
+    prod, ref = str(tmp_path / "prod"), str(tmp_path / "ref")
+    write_table(old, prod, schema=schema)
+    write_table(old, ref, schema=schema)
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("upsert_to_path_once", "upsert_to_path")
+        upsert_to_path(spark, new, prod, ["k"], schema)
+        sc.setJobGroup("upsert_plain_write", "write_table(upsert(...))")
+        merged = upsert(new, read_table(spark, ref, schema), ["k"])
+        write_table(merged, str(tmp_path / "out"), schema=schema)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    swap_jobs = tracker.getJobIdsForGroup("upsert_to_path_once")
+    plain_jobs = tracker.getJobIdsForGroup("upsert_plain_write")
+    assert plain_jobs and len(swap_jobs) <= len(plain_jobs)
+    assert read_table(spark, prod, schema).count() == 60
 
 
 def test_topk_and_maxby_agree(spark, sf_dir):

@@ -174,6 +174,8 @@ def test_two_runs_full_lifecycle(spark, cfg_base):
     assert not (
         base / "prod" / "state_machine" / "cve_state_machine__tmp"
     ).exists()
+    assert (base / "enrichment_cache").exists()
+    assert not (base / "enrichment_cache__tmp").exists()
 
 
 def test_ttl_cache_skips_fresh_keys(spark, cfg_base):
@@ -203,3 +205,44 @@ def test_ttl_cache_skips_fresh_keys(spark, cfg_base):
     files = list(raw_b.glob("*.parquet"))
     n = sum(pq.read_metadata(f).num_rows for f in files)
     assert n == 0
+
+
+def test_two_sources_priority_wins_and_views_registered(spark, cfg_base):
+    advisories = adv_df(spark, [("alpha", "CVE-1", None), ("beta", "CVE-2", None)])
+    overrides = ov_df(spark, [])
+    cfg = PipelineConfig(cfg_base, cache_ttl_hours=24.0, clock=lambda: T0)
+    low = make_fetch({("CVE-1", "alpha"): "1.0"})
+    high = make_fetch({("CVE-1", "alpha"): "2.0"})
+    prod = run_pipeline(
+        spark, cfg, "two",
+        advisories=advisories, overrides=overrides,
+        sources=[source("nvd", low, 5, T0), source("ghsa", high, 9, T0)],
+    )
+    row = {(r.cve_id, r.package): r for r in prod.collect()}[("CVE-1", "alpha")]
+    assert row.status == "fixed" and row.fixed_version == "2.0"
+    assert row.data_source == "ghsa" and row.priority == 9
+
+    # each phase hands its staged output on as a temp view
+    assert spark.table("raw_data").count() == 2
+    assert spark.table("raw_not_applicable_cves").count() == 0
+    norm = spark.table("normalized_enrichment")
+    assert sorted(r.enrichment_source for r in norm.collect()) == [
+        "ghsa", "ghsa", "nvd", "nvd",
+    ]
+    assert spark.table("processed_cve_state_machine").count() == 2
+
+
+def test_duplicate_source_names_rejected_before_any_write(spark, cfg_base):
+    fetch = make_fetch({("CVE-1", "alpha"): "1.0"})
+    cfg = PipelineConfig(cfg_base, cache_ttl_hours=24.0, clock=lambda: T0)
+    with pytest.raises(ValueError, match="'nvd'"):
+        run_pipeline(
+            spark, cfg, "dup",
+            advisories=adv_df(spark, [("alpha", "CVE-1", None)]),
+            overrides=ov_df(spark, []),
+            sources=[source("nvd", fetch, 5, T0), source("nvd", fetch, 3, T0)],
+        )
+    base = Path(cfg_base)
+    assert not (base / "staging" / "run_id=dup" / "enrichment").exists()
+    assert not (base / "enrichment_cache").exists()
+    assert not (base / "prod").exists()

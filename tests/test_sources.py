@@ -1,20 +1,14 @@
-"""Source tests: HTTP-JSON flatten, JDBC contract, registry loop."""
+"""Source tests: HTTP-JSON flatten, JDBC contract, advisory DataSource."""
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from advisorydatapipeline_spark.config import PipelineConfig
 from advisorydatapipeline_spark.sources.http_json import (
     advisories_from_json,
     ingest_advisory_source,
 )
 from advisorydatapipeline_spark.sources.jdbc import read_jdbc_table
-from advisorydatapipeline_spark.sources.registry import (
-    SourceConfig,
-    Table,
-    run_ingestion,
-)
 
 ADVISORY_PAYLOAD = {
     "glibc": {
@@ -53,29 +47,6 @@ def test_jdbc_unavailable_degrades_to_empty(spark):
         spark, "jdbc:postgresql://nohost:5432/nodb", "t", schema
     )
     assert df.count() == 0 and df.schema == schema
-
-
-def test_registry_ingestion_stages_and_registers(spark, tmp_path, sf_dir):
-    schema = T.StructType(
-        [
-            T.StructField("r_regionkey", T.IntegerType(), True),
-            T.StructField("r_name", T.StringType(), True),
-        ]
-    )
-    cfg = PipelineConfig(base_path=str(tmp_path))
-    src = SourceConfig(
-        name="star",
-        tables=(Table("region", schema),),
-        reader=lambda s, name: s.read.parquet(f"{sf_dir}/{name}.parquet"),
-        kind="parquet",
-    )
-    out = run_ingestion(spark, cfg, [src], run_id="20240101_000000")
-    assert out["region"].count() == 5
-    assert spark.table("raw_region").count() == 5
-    staged = (
-        tmp_path / "staging" / "run_id=20240101_000000" / "sources" / "region"
-    )
-    assert staged.exists()
 
 
 def test_advisory_datasource_pushdown(spark, tmp_path):
