@@ -21,6 +21,8 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from advisorydatapipeline_spark.operators.upsert import upsert
+
 
 def recent_entries(
     cache_df: DataFrame,
@@ -62,19 +64,13 @@ def update_cache(
     source_col: str = "source_name",
     ts_col: str = "last_accessed",
 ) -> DataFrame:
-    """Merge freshly-processed keys into the cache: evict this
-    source's superseded entries (anti-join), union the new ones with
-    ``last_accessed = now`` (reference: cache.py:109-165 — evict,
-    unionByName, overwrite)."""
+    """Merge freshly-processed keys into the cache: an upsert on
+    (keys, source) whose new rows carry ``last_accessed = now``
+    (reference: cache.py:109-165 — evict, unionByName, overwrite)."""
     new_entries = (
         done_keys.select(*keys)
         .distinct()
         .withColumn(source_col, F.lit(source_name))
         .withColumn(ts_col, F.lit(now))
     )
-    survivors = cache_df.join(
-        new_entries.select(*keys).withColumn(source_col, F.lit(source_name)),
-        on=[*keys, source_col],
-        how="left_anti",
-    )
-    return new_entries.unionByName(survivors.select(*new_entries.columns))
+    return upsert(new_entries, cache_df, [*keys, source_col])

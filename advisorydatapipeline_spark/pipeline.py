@@ -165,8 +165,12 @@ def run_enrich_phase(
         raw_path = f"{config.run_path(run_id)}/enrichment/raw/{src.upstream.name}"
         write_table(raw, raw_path, schema=schemas.RAW_ENRICHMENT_SCHEMA)
         raw_staged = read_table(spark, raw_path, schemas.RAW_ENRICHMENT_SCHEMA)
+        # only answered rows (found IS NOT NULL, see schemas) are
+        # normalized and cached; a key whose fetch failed keeps its
+        # prod state and stays pending for the next run
+        answered = raw_staged.filter(F.col("found").isNotNull())
 
-        normalized = src.normalize(raw_staged)
+        normalized = src.normalize(answered)
         norm_path = (
             f"{config.run_path(run_id)}/enrichment/normalized/"
             f"enrichment_source={src.upstream.name}"
@@ -179,7 +183,7 @@ def run_enrich_phase(
         )
 
         # cache merge AFTER successful staging (reference cache.py:109)
-        cache = update_cache(cache, todo, KEYS, src.upstream.name, now)
+        cache = update_cache(cache, answered, KEYS, src.upstream.name, now)
 
     # persist the merged cache once for all sources; the merge reads
     # the cache files it replaces, hence replace_table

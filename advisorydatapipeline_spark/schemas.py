@@ -36,12 +36,17 @@ NOT_APPLICABLE_SCHEMA = T.StructType(
     ]
 )
 
-# raw enrichment response (reference: enrichment/schemas/raw_nvd_schema.py:9-25)
+# raw enrichment response (reference: enrichment/schemas/raw_nvd_schema.py:9-25).
+# A row is *answered* when ``found`` is not NULL: the upstream said
+# found or not found. A fetch that exhausts its retries surfaces as a
+# row with every result field NULL (operators/enrichment.py); the
+# pipeline neither normalizes nor caches it, so the key is fetched
+# again on the next run.
 RAW_ENRICHMENT_SCHEMA = T.StructType(
     [
         T.StructField("cve_id", T.StringType(), False),
         T.StructField("package", T.StringType(), True),
-        T.StructField("found", T.BooleanType(), False),
+        T.StructField("found", T.BooleanType(), True),
         T.StructField("upstream_fixed_version", T.StringType(), True),
         T.StructField("upstream_status", T.StringType(), True),
         T.StructField("query_timestamp", T.TimestampType(), False),

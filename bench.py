@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: every registry entry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Prints exactly ONE JSON line:
@@ -11,12 +11,13 @@ Two tiers (round-5 restructure — the driver's artifact keeps only a
 bounded tail of this line, so the old single 131-query dict lost its
 head and rounds could not be compared per-query):
 
-- CORE: a stable set of ~45 queries, one per subsystem, reported in
-  the stdout ``queries`` dict EVERY round in full — the longitudinal
-  comparison set. Kept small enough that the whole JSON line survives
-  the driver's truncation.
-- EXTENDED: everything else in the registry worth timing. Timed in
-  the same run, summarized on stdout (``extended_total``), and the
+- CORE: a stable literal set of 51 queries, one per subsystem,
+  reported in the stdout ``queries`` dict EVERY round in full — the
+  longitudinal comparison set. Kept small enough that the whole JSON
+  line survives a reader that keeps only its tail.
+- EXTENDED: every other registry entry, in registry order (derived
+  from ``QUERIES``; there is no second list to keep in sync). Timed
+  in the same run, summarized on stdout (``extended_total``), and the
   full per-query dict for BOTH tiers is written to a committed
   ``BENCH_LOCAL_r{N}.json`` so no timing is ever lost.
 
@@ -107,348 +108,8 @@ QUADRATIC_BASELINE = [
     "bitext_margin_mining",
 ]
 
-EXTENDED = [
-    "grouped_max_by",
-    "decontaminate_overlap",
-    "repetition_stats",
-    "time_rollup",
-    "window_running_metrics",
-    "corpus_ngram_stats",
-    "embedding_centroids",
-    "json_extract_props",
-    "pivot_event_matrix",
-    "small_qty_brand_revenue",
-    "priority_semi_join",
-    "ewma_user_values",
-    "retention_cohorts",
-    "federated_union_scan",
-    "sole_fault_supplier",
-    "customer_order_distribution",
-    "contrastive_triplets",
-    "group_normalized_features",
-    "pmi_collocations",
-    "kmeans_lloyd_step",
-    "dpp_partitioned_join",
-    "incremental_rollup_merge",
-    "regional_market_share",
-    "winnow_neardup_pairs",
-    "session_membership_join",
-    "merge_into_customers",
-    "vocab_oov_rate",
-    "bloom_corpus_probe",
-    "entity_resolution_parts",
-    "histogram_quantile_estimate",
-    "seasonal_dow_indices",
-    "interval_merge_coverage",
-    "column_profile_orders",
-    "inverted_index_postings",
-    "rolling_distinct_users",
-    "gap_fill_interpolate",
-    "event_transition_matrix",
-    "ks_value_drift",
-    "cross_source_dup_matrix",
-    "time_weighted_value",
-    "streaming_sliding_distinct",
-    "cep_pattern_matches",
-    "grid_proximity_join",
-    "asof_join_next_purchase",
-    "asof_join_nearest_purchase",
-    "trending_per_hour",
-    "funnel_time_bound",
-    "session_relative_features",
-    "attribution_last_touch",
-    "percent_of_parent_rollup",
-    "gap_histogram_log2",
-    "temperature_mix_rates",
-    "length_bucket_batching",
-    "ngram_novelty",
-    "daily_autocorr_moments",
-    "chi2_independence_scan",
-    "rfm_segments",
-    "benford_screen",
-    "federated_dim_join",
-    "table_diff_fingerprints",
-    "ab_test_lift",
-    "cohort_ltv_curve",
-    "sorted_neighborhood_pairs",
-    "winsorized_revenue",
-    "basket_pair_lift",
-    "pareto_skyline",
-    "interval_concurrency_curve",
-    "streaming_transition_counts",
-    "lsh_s_curve",
-    "activity_streaks",
-    "bounce_rate_daily",
-    "ship_latency_percentiles",
-    "dedup_pair_evidence",
-    "lorenz_revenue_deciles",
-    "emd_value_distributions",
-    "theil_sen_trend",
-    "centroid_separation",
-    "temperature_mix_apply",
-    "decile_migration_matrix",
-    "shuffle_skew_whatif",
-    "media_decode_stats",
-    "png_decode_stats",
-    "gif_decode_stats",
-    "bpe_encode_tokens",
-    "join_cardinality_whatif",
-    "cdc_chunk_stats",
-    "binary_media_files",
-    "variant_extract_props",
-    "unpivot_event_matrix",
-    "collated_ci_join",
-    "cdc_apply_changelog",
-    "weighted_sample_ares",
-    "constraint_suite_orders",
-    "lateral_topn_join",
-    "attribution_position_based",
-    "pq_adc_topk",
-    "pq_recall_eval",
-    "kaplan_meier_retention",
-    "rake_keywords",
-    "basket_brand_triples",
-    "k_core_suppliers",
-    "char_unigram_surprisal",
-    "cdc_shared_chunks",
-    "bm25_maxscore_topk",
-    "ivf_pq_topk",
-    "scd2_apply_changes",
-    "l_diversity_audit",
-    "cusum_changepoint_revenue",
-    "tokenizer_fertility_lang",
-    "weighted_median_price",
-    "code_switch_chunks",
-    "bloom_join_prune",
-    "temporal_split_leakage",
-    "pseudonymize_join_consistency",
-    "target_encode_segment",
-    "zipf_slope_tokens",
-    "markov_attribution_removal",
-    "knn_label_eval",
-    "langid_confusion_eval",
-    "quantile_normalize_balance",
-    "jackknife_ratio_se",
-    "ivm_join_delta",
-    "geometric_median_embeddings",
-    "ann_hubness_audit",
-    "spearman_rank_corr",
-    "knn_distance_outliers",
-    "forecast_backtest_mae",
-    "sql_session_variables",
-    "dbscan_grid_clusters",
-    "heaps_vocab_growth",
-    "holt_linear_weekly",
-    "label_propagation_communities",
-    "cdc_doc_coverage",
-    "interarrival_burstiness",
-    "gini_revenue_nation",
-    "lm_perplexity_scores",
-    "jpeg_header_stats",
-    "semantic_dedup",
-    "gopher_quality_flags",
-    "dsir_importance_weights",
-    "perceptron_lang_step",
-    "gif_frame_sampling",
-    "wav_frame_energy",
-    "bmp_pixel_stats",
-    "quality_gate_pipeline",
-    "image_phash_neardup",
-    "jpeg_pixel_stats",
-    "audio_fingerprint_neardup",
-    "t_closeness_audit",
-    "mannwhitney_value_drift",
-    "epoch_shard_plan",
-    "avi_mjpeg_frame_sampling",
-    "url_canonical_dedup",
-    "domain_quota_retention",
-    "decontaminate_longest_span",
-    "clip_pair_gate",
-    "clip_source_retention",
-    "mp3_frame_stats",
-    "html_text_extract",
-    "html_block_link_density",
-    "robots_txt_gate",
-    "corpus_datasheet",
-    "bitext_margin_mining",
-    "bitext_margin_mining_ivf",
-    "bitext_ivf_recall",
-    "mp3_granule_synthesis",
-    "pass_at_k_eval",
-    "best_of_n_reward_selection",
-    "unimax_epoch_mix",
-    "wav_dft_bands",
-    "mp3_huffman_decode",
-    "mp3_polyphase_synthesis",
-    "suffix_dup_depths",
-    "kn_bigram_scores",
-    "dpo_pair_builder",
-    "self_consistency_vote",
-    "nucleus_topp_plan",
-    "quant_calibration_absmax",
-    "duplicate_spans_exact",
-    "kn_trigram_scores",
-    "kn_5gram_scores",
-    "moe_router_load",
-    "gradient_noise_scale",
-    "packing_crossdoc_attention",
-    "rlhf_kl_budget",
-    "ams_f2_moment",
-    "distill_disagreement_set",
-    "jm_lambda_em_step",
-    "video_pframe_decode",
-    "grpo_advantage_baseline",
-    "rejection_sampling_keep",
-    "dataset_cartography",
-    "tracin_influence_topk",
-    "speculative_decode_accept",
-    "matryoshka_recall_eval",
-    "rrf_fusion_topk",
-    "rrf_fusion_ivf",
-    "rrf_ivf_recall_eval",
-    "mink_prob_membership",
-    "ema_checkpoint_average",
-    "brier_decomposition_eval",
-    "span_corruption_plan",
-    "unicode_normalize_stats",
-    "pii_multiclass_scrub",
-    "streaming_url_dedup",
-    "c4_line_filters",
-    "line_global_dedup",
-    "hashed_ngram_classifier",
-    "crawl_politeness_plan",
-    "secret_entropy_scrub",
-    "bradley_terry_mm_step",
-    "roc_pr_calibration",
-    "doremi_domain_reweight",
-    "template_slot_fingerprint",
-    "ndcg_ranking_eval",
-    "source_diversity_loo",
-    "flac_stream_stats",
-    "warc_record_stats",
-    "web_corpus_pipeline",
-    "license_compat_audit",
-    "crawl_frontier_refresh",
-    # --- r15 tier-membership audit (r14 verdict item 3): the 113
-    # registry entries that were in NO bench tier — mostly cheap
-    # parity/analytics queries whose only wall-time record was the
-    # gate's combined Spark+DuckDB sec. All folded in so every entry
-    # has a longitudinal Spark-side timing; tests/test_bench_tiers.py
-    # pins CORE ∪ EXTENDED == registry from here on.
-    "advisory_stream_scan",
-    "arrow_doc_stats",
-    "asof_join_cogrouped",
-    "binary_file_scan",
-    "bitwise_aggregates",
-    "calendar_spine_fill",
-    "canonical_corpus",
-    "case_ranked_order",
-    "cast_projection",
-    "ci_compound_key_left_join",
-    "compact_small_files",
-    "conditional_aggregates",
-    "corpus_mixture_waterfill",
-    "csv_scan_roundtrip",
-    "cube_event_matrix",
-    "datetime_derivations",
-    "dedup_simhash",
-    "disjunctive_filter_revenue",
-    "distinct_agg_counts",
-    "distinct_pairs",
-    "doc_chunks_udtf",
-    "double_left_join_merge",
-    "dup_span_fraction",
-    "embedding_norms",
-    "forecast_revenue_band",
-    "full_outer_reconciliation",
-    "funnel_analysis",
-    "fuzzy_name_pairs",
-    "grouped_percentiles",
-    "grouping_sets_returns",
-    "hof_predicates",
-    "http_json_flatten",
-    "idle_customer_balance",
-    "intersect_except_all",
-    "intersect_except_keys",
-    "ivf_recall_eval",
-    "jdbc_absent_empty_relation",
-    "json_scan_roundtrip",
-    "k_anonymity_audit",
-    "key_skew_profile",
-    "large_order_customers",
-    "left_anti_cache_skip",
-    "length_histogram",
-    "limit_offset_page",
-    "log_parse_text",
-    "lsh_recall_eval",
-    "mad_outliers",
-    "media_frame_sampling",
-    "min_gap_events",
-    "multipath_partitioned_scan",
-    "nation_volume_shipping",
-    "not_in_antijoin",
-    "ntile_length_quartiles",
-    "null_predicates",
-    "null_safe_join",
-    "observed_scan_metrics",
-    "orc_scan_roundtrip",
-    "parameterized_sql_filter",
-    "pipe_syntax_aggregate",
-    "price_qty_regression",
-    "promo_revenue_share",
-    "props_map_stats",
-    "quality_report_docs",
-    "range_frame_rolling_sum",
-    "rank_distribution",
-    "recursive_cte_chain",
-    "referential_orphans",
-    "returned_item_ranking",
-    "rhp_recall_eval",
-    "safe_arithmetic",
-    "sample_capped_per_group",
-    "scalar_derivation",
-    "scalar_pandas_udf_quantize",
-    "scan_filter_pushdown",
-    "scd2_intervals",
-    "schema_evolution_scan",
-    "session_window_api",
-    "sketch_aggregates",
-    "skew_salted_join",
-    "sorted_event_type_sets",
-    "source_quota_cap",
-    "split_assignment",
-    "sql_dml_roundtrip",
-    "sql_udf_revenue",
-    "state_machine_udf",
-    "streaming_append_windows",
-    "streaming_dedup_watermarked",
-    "streaming_range_join",
-    "streaming_session_windows",
-    "streaming_sliding_counts",
-    "streaming_stateful_counts",
-    "streaming_static_enrich",
-    "streaming_upsert_merge",
-    "string_functions_suite",
-    "supplier_value_share",
-    "text_fingerprint",
-    "text_token_stats",
-    "topk_per_group",
-    "training_mix_plan",
-    "ttl_cache_merge",
-    "ttl_cutoff_filter",
-    "ttl_pending_work",
-    "udaf_quantized_sum",
-    "union_by_name",
-    "unpivot_metrics",
-    "user_erasure_rewrite",
-    "variant_extract",
-    "vector_pair_dot",
-    "window_value_functions",
-    "winnowing_fingerprints",
-    "xml_scan_roundtrip",
-    "zorder_chunk_stats",
-    "zscore_anomalies",
-]
+# Everything else in the registry, in registry order.
+EXTENDED = [n for n in QUERIES if n not in CORE]
 
 
 def _spark_pids() -> dict[int, int]:

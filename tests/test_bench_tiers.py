@@ -1,17 +1,7 @@
-"""Bench-tier membership audit (r14 verdict item 3).
-
-Every registry entry must belong to exactly one bench tier (CORE or
-EXTENDED) so it has a longitudinal Spark-side timing record — the r14
-judge found 113 entries whose only wall-time evidence was the local
-gate's combined Spark+DuckDB seconds, which cannot separate a Spark
-regression from oracle cost. Runtime exclusions (the labeled
-quadratic baselines) are a SUBSET of the tiers, skipped by bench.py's
-default run with an explicit stderr disclosure — never a silent gap
-in membership.
-
-If this test fails after adding a registry entry: add the entry to
-bench.py EXTENDED (or CORE with a round note).
-"""
+"""Bench-tier membership. EXTENDED is derived from the registry
+(every entry not in CORE), so coverage and disjointness hold by
+construction; CORE is the one literal list, the stable longitudinal
+set, and must name registered entries exactly once."""
 
 from __future__ import annotations
 
@@ -22,38 +12,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from advisorydatapipeline_spark.registry import QUERIES  # noqa: E402
-import advisorydatapipeline_spark.queries  # noqa: F401,E402
 
 
-def test_tiers_cover_registry_exactly():
-    core, ext = set(bench.CORE), set(bench.EXTENDED)
-    registry = set(QUERIES)
-    missing = sorted(registry - (core | ext))
-    stray = sorted((core | ext) - registry)
-    assert not missing, (
-        f"{len(missing)} registry entries in no bench tier "
-        f"(add to bench.EXTENDED): {missing}"
-    )
-    assert not stray, (
-        f"bench tiers name entries not in the registry: {stray}"
-    )
-
-
-def test_tiers_disjoint_and_duplicate_free():
+def test_core_unique_and_registered():
     assert len(bench.CORE) == len(set(bench.CORE)), "CORE has dups"
-    assert len(bench.EXTENDED) == len(set(bench.EXTENDED)), (
-        "EXTENDED has dups"
-    )
-    both = set(bench.CORE) & set(bench.EXTENDED)
-    assert not both, f"entries in both tiers: {sorted(both)}"
-
-
-def test_runtime_exclusions_are_labeled_tier_members():
-    """The quadratic baselines stay tier members (so --only can still
-    measure them) and each one's operator carries an input-size guard
-    — the exclusion is a disclosed runtime skip, not a membership
-    hole."""
-    tiers = set(bench.CORE) | set(bench.EXTENDED)
-    for name in bench.QUADRATIC_BASELINE:
-        assert name in tiers, f"{name} excluded but not in any tier"
-        assert name in QUERIES, f"{name} excluded but not registered"
+    missing = [n for n in bench.CORE if n not in QUERIES]
+    assert not missing, f"CORE names not in the registry: {missing}"

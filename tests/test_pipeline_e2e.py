@@ -246,3 +246,72 @@ def test_duplicate_source_names_rejected_before_any_write(spark, cfg_base):
     assert not (base / "staging" / "run_id=dup" / "enrichment").exists()
     assert not (base / "enrichment_cache").exists()
     assert not (base / "prod").exists()
+
+
+def _staged_raw_rows(cfg_base, run_id, source_name):
+    import pyarrow.parquet as pq
+
+    raw = (
+        Path(cfg_base) / "staging" / f"run_id={run_id}" / "enrichment"
+        / "raw" / source_name
+    )
+    return sum(pq.read_metadata(f).num_rows for f in raw.glob("*.parquet"))
+
+
+def test_upstream_outage_is_not_cached(spark, cfg_base):
+    """A fetch that exhausts its retries is not an answer: the key
+    keeps its prod state, its cache entry is not refreshed, and the
+    next run fetches it again."""
+    advisories = adv_df(spark, [("alpha", "CVE-1", None)])
+    overrides = ov_df(spark, [])
+
+    def cached_at():
+        rows = spark.read.parquet(str(Path(cfg_base) / "enrichment_cache"))
+        return [r.last_accessed for r in rows.collect()]
+
+    def run(run_id, at, fetch):
+        cfg = PipelineConfig(cfg_base, cache_ttl_hours=24.0, clock=lambda: at)
+        src = NormalizedSource(
+            upstream=UpstreamSource(
+                "nvd", fetch, RESULT_SCHEMA, priority=5, backoff_s=0.0
+            ),
+            normalize=default_normalize("nvd", 5, at),
+        )
+        prod = run_pipeline(
+            spark, cfg, run_id,
+            advisories=advisories, overrides=overrides, sources=[src],
+        )
+        return {(r.cve_id, r.package): r for r in prod.collect()}[
+            ("CVE-1", "alpha")
+        ]
+
+    inner = make_fetch({})
+
+    def found_without_fix(cve_id, package):
+        return inner(cve_id, package) | {"found": True}
+
+    def outage(cve_id, package):
+        raise ConnectionError("upstream unavailable")
+
+    row = run("r1", T0, found_without_fix)
+    assert row.status == "pending_upstream"
+    first_fetch = cached_at()
+
+    # past the TTL, the upstream is down for every retry
+    row = run("r2", T0 + timedelta(hours=25), outage)
+    assert _staged_raw_rows(cfg_base, "r2", "nvd") == 1
+    assert row.status == "pending_upstream"
+    assert row.change_type == "unchanged"
+    assert row.data_source == "production"
+    assert cached_at() == first_fetch
+
+    # the upstream is back: the key is fetched again, not cache-skipped
+    fixed = make_fetch({("CVE-1", "alpha"): "1.0"})
+
+    def recovered(cve_id, package):
+        return fixed(cve_id, package)
+
+    row = run("r3", T0 + timedelta(hours=26), recovered)
+    assert _staged_raw_rows(cfg_base, "r3", "nvd") == 1
+    assert row.status == "fixed"
+    assert row.change_type == "status_changed"

@@ -1,7 +1,6 @@
-"""Guard the tool-side query lists: every name in bench tiers and
-audit lists must exist in the registry, with no duplicates — keeps
-the round workflow's 'wire every new entry into all four places'
-contract honest."""
+"""Guard the plan audit's allowlists. The audit itself iterates the
+registry, so the only list a typo can break is an allowlist: a key
+that names no registry entry would silently allow nothing."""
 
 from __future__ import annotations
 
@@ -11,59 +10,30 @@ import os
 BASE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _named_list(path: str, varname: str) -> list[str]:
+def _literal_names(path: str, varname: str) -> list[str]:
+    """The literal elements of a set, or the keys of a dict, assigned
+    to ``varname`` — read from source so a duplicated key (which a
+    literal silently collapses) is still visible."""
     tree = ast.parse(open(os.path.join(BASE, path)).read())
     for node in ast.walk(tree):
         if isinstance(node, ast.Assign) and any(
             isinstance(t, ast.Name) and t.id == varname
             for t in node.targets
         ):
-            return [ast.literal_eval(e) for e in node.value.elts]
+            elts = (
+                node.value.keys
+                if isinstance(node.value, ast.Dict)
+                else node.value.elts
+            )
+            return [ast.literal_eval(e) for e in elts]
     raise AssertionError(f"{varname} not found in {path}")
-
-
-def test_bench_tiers_unique_and_registered():
-    from advisorydatapipeline_spark.registry import QUERIES
-
-    core = _named_list("bench.py", "CORE")
-    ext = _named_list("bench.py", "EXTENDED")
-    names = core + ext
-    assert len(names) == len(set(names)), "duplicate bench entries"
-    missing = [n for n in names if n not in QUERIES]
-    assert not missing, f"bench names not in registry: {missing}"
 
 
 def test_audit_lists_unique_and_registered():
     from advisorydatapipeline_spark.registry import QUERIES
 
-    for path in ("tools/plan_audit.py", "tools/shuffle_audit.py"):
-        audit = _named_list(path, "AUDIT")
-        assert len(audit) == len(set(audit)), f"duplicates in {path}"
-        missing = [n for n in audit if n not in QUERIES]
-        assert not missing, f"{path} names not in registry: {missing}"
-
-
-def _named_dict_keys(path: str, varname: str) -> list[str]:
-    tree = ast.parse(open(os.path.join(BASE, path)).read())
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == varname
-            for t in node.targets
-        ):
-            return [ast.literal_eval(k) for k in node.value.keys]
-    raise AssertionError(f"{varname} not found in {path}")
-
-
-def test_global_window_allowlist_registered_and_audited():
-    """Every GLOBAL_WINDOW_OK key must be a registry entry that the
-    plan audit actually covers — a typo'd or stale key would silently
-    allow nothing (or mask nothing)."""
-    from advisorydatapipeline_spark.registry import QUERIES
-
-    keys = _named_dict_keys("tools/plan_audit.py", "GLOBAL_WINDOW_OK")
-    assert len(keys) == len(set(keys))
-    audit = set(_named_list("tools/plan_audit.py", "AUDIT"))
-    missing = [k for k in keys if k not in QUERIES]
-    assert not missing, f"allowlist names not in registry: {missing}"
-    unaudited = [k for k in keys if k not in audit]
-    assert not unaudited, f"allowlisted but never audited: {unaudited}"
+    for varname in ("NESTED_LOOP_OK", "GLOBAL_WINDOW_OK"):
+        names = _literal_names("tools/plan_audit.py", varname)
+        assert len(names) == len(set(names)), f"duplicates in {varname}"
+        missing = [n for n in names if n not in QUERIES]
+        assert not missing, f"{varname} names not in registry: {missing}"

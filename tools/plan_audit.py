@@ -1,13 +1,14 @@
-"""Physical-plan audit: evidence that headline queries compile to the
-plans you'd want at 100 TB.
+"""Physical-plan audit: evidence that every registry entry compiles
+to the plan you'd want at 100 TB.
 
-For each audited query this captures `.explain("formatted")` and
-greps for: parquet filter pushdown (PushedFilters), join strategies
-(broadcast vs shuffled vs nested-loop), and whole-stage codegen
-spans. Writes PLANS.md with a summary table plus the flagged lines,
-and exits nonzero if a red flag appears (CartesianProduct or
-BroadcastNestedLoopJoin outside the documented ANN allowlist, or a
-filtered parquet scan with no pushed filter).
+For each entry of ``registry.QUERIES`` this captures the executed
+``.explain("formatted")`` plan and greps for: parquet filter pushdown
+(PushedFilters), join strategies (broadcast vs shuffled vs
+nested-loop), and whole-stage codegen spans. Writes PLANS.md with a
+summary table plus the flagged lines, and exits nonzero if a red flag
+appears: CartesianProduct or BroadcastNestedLoopJoin in an entry not
+in NESTED_LOOP_OK, or a partition-less window in an entry not in
+GLOBAL_WINDOW_OK. Both allowlists give each entry's reason.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -24,305 +25,6 @@ sys.path.insert(0, ".")
 from advisorydatapipeline_spark.session import get_spark  # noqa: E402
 from advisorydatapipeline_spark.registry import QUERIES
 import advisorydatapipeline_spark.queries  # noqa: F401  (registers)
-
-AUDIT = [
-    "flagship_advisory_resolution",
-    "scan_filter_pushdown",
-    "ci_compound_key_left_join",
-    "grouped_max_by",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_simhash64",
-    "decontaminate_overlap",
-    "dedup_incremental",
-    "local_supplier_revenue",
-    "sequence_packing",
-    "repetition_stats",
-    "asof_join_last_view",
-    "range_join_views_before_purchase",
-    "time_rollup",
-    "skew_salted_agg",
-    "window_running_metrics",
-    "zscore_anomalies",
-    "scd2_intervals",
-    "grouping_sets_returns",
-    "ann_ivf_topk",
-    "ann_cosine_topk",  # brute-force ground truth: nested-loop expected
-    "tfidf_top_terms",
-    "dup_span_fraction",
-    "split_assignment",
-    "curation_pipeline",
-    "small_qty_brand_revenue",
-    "supplier_value_share",
-    "priority_semi_join",
-    "disjunctive_filter_revenue",
-    "pagerank_suppliers",
-    "ewma_user_values",
-    "retention_cohorts",
-    "funnel_analysis",
-    "min_gap_events",
-    "mad_outliers",
-    "not_in_antijoin",
-    "intersect_except_all",
-    "range_frame_rolling_sum",
-    "props_map_stats",
-    "cube_event_matrix",
-    "unpivot_metrics",
-    "training_mix_plan",
-    "federated_union_scan",
-    "compact_small_files",
-    "full_outer_reconciliation",
-    "window_value_functions",
-    "user_erasure_rewrite",
-    "recursive_cte_chain",
-    "vector_pair_dot",
-    "sample_capped_per_group",
-    "schema_evolution_scan",
-    "sole_fault_supplier",
-    "idle_customer_balance",
-    "customer_order_distribution",
-    "contrastive_triplets",
-    "group_normalized_features",
-    "canonical_corpus",
-    "parameterized_sql_filter",
-    "sql_udf_revenue",
-    "skew_salted_join",
-    "large_order_customers",
-    "ttl_cutoff_filter",
-    "fuzzy_name_pairs",
-    "hll_shard_union",
-    "theta_set_overlap",
-    "modern_sql_aggregates",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "winnowing_fingerprints",
-    "winnow_neardup_pairs",
-    "session_membership_join",
-    "bitmap_exact_distinct",
-    "incremental_rollup_merge",
-    "forecast_revenue_band",
-    "returned_item_ranking",
-    "nation_volume_shipping",
-    "regional_market_share",
-    "price_qty_regression",
-    "sorted_event_type_sets",
-    "calendar_spine_fill",
-    "null_safe_join",
-    "binary_file_scan",
-    "log_parse_text",
-    "pmi_collocations",
-    "neardup_triangles",
-    "kmeans_lloyd_step",
-    "session_window_api",
-    "merge_into_customers",
-    "source_quota_cap",
-    "corpus_mixture_waterfill",
-    "zorder_chunk_stats",
-    "dedup_embedding_rhp",
-    "bm25_doc_ranking",
-    "vocab_oov_rate",
-    "dedup_containment",
-    "bloom_corpus_probe",
-    "entity_resolution_parts",
-    "histogram_quantile_estimate",
-    "rhp_recall_eval",
-    "ivf_recall_eval",
-    "bpe_pair_ranks",
-    "seasonal_dow_indices",
-    "interval_merge_coverage",
-    "bfs_reachable_hops",
-    "column_profile_orders",
-    "inverted_index_postings",
-    "duplicate_passages",
-    "rolling_distinct_users",
-    "gap_fill_interpolate",
-    "event_transition_matrix",
-    "ks_value_drift",
-    "cross_source_dup_matrix",
-    "time_weighted_value",
-    "cep_pattern_matches",
-    "dedup_jaccard_prefix",
-    "grid_proximity_join",
-    "countmin_estimates",
-    "asof_join_next_purchase",
-    "asof_join_nearest_purchase",
-    "trending_per_hour",
-    "funnel_time_bound",
-    "session_relative_features",
-    "attribution_last_touch",
-    "percent_of_parent_rollup",
-    "gap_histogram_log2",
-    "temperature_mix_rates",
-    "length_bucket_batching",
-    "syndicated_families",
-    "ngram_novelty",
-    "daily_autocorr_moments",
-    "chi2_independence_scan",
-    "rfm_segments",
-    "benford_screen",
-    "federated_dim_join",
-    "table_diff_fingerprints",
-    "ab_test_lift",
-    "cohort_ltv_curve",
-    "sorted_neighborhood_pairs",
-    "winsorized_revenue",
-    "basket_pair_lift",
-    "pareto_skyline",
-    "interval_concurrency_curve",
-    "streaming_transition_counts",
-    "lsh_s_curve",
-    "activity_streaks",
-    "bounce_rate_daily",
-    "ship_latency_percentiles",
-    "dedup_pair_evidence",
-    "lorenz_revenue_deciles",
-    "emd_value_distributions",
-    "theil_sen_trend",
-    "kmv_distinct_sketch",
-    "centroid_separation",
-    "temperature_mix_apply",
-    "decile_migration_matrix",
-    "shuffle_skew_whatif",
-    "media_decode_stats",
-    "bpe_encode_tokens",
-    "join_cardinality_whatif",
-    "cdc_chunk_stats",
-    "binary_media_files",
-    "variant_extract_props",
-    "unpivot_event_matrix",
-    "collated_ci_join",
-    "cdc_apply_changelog",
-    "weighted_sample_ares",
-    "constraint_suite_orders",
-    "lateral_topn_join",
-    "attribution_position_based",
-    "pq_adc_topk",
-    "pq_recall_eval",
-    "kaplan_meier_retention",
-    "rake_keywords",
-    "basket_brand_triples",
-    "k_core_suppliers",
-    "char_unigram_surprisal",
-    "cdc_shared_chunks",
-    "bm25_maxscore_topk",
-    "ivf_pq_topk",
-    "scd2_apply_changes",
-    "l_diversity_audit",
-    "cusum_changepoint_revenue",
-    "tokenizer_fertility_lang",
-    "weighted_median_price",
-    "code_switch_chunks",
-    "bloom_join_prune",
-    "temporal_split_leakage",
-    "pseudonymize_join_consistency",
-    "target_encode_segment",
-    "zipf_slope_tokens",
-    "markov_attribution_removal",
-    "knn_label_eval",
-    "langid_confusion_eval",
-    "quantile_normalize_balance",
-    "jackknife_ratio_se",
-    "ivm_join_delta",
-    "geometric_median_embeddings",
-    "ann_hubness_audit",
-    "spearman_rank_corr",
-    "knn_distance_outliers",
-    "forecast_backtest_mae",
-    "sql_session_variables",
-    "dbscan_grid_clusters",
-    "heaps_vocab_growth",
-    "holt_linear_weekly",
-    "label_propagation_communities",
-    "cdc_doc_coverage",
-    "interarrival_burstiness",
-    "gini_revenue_nation",
-    "lm_perplexity_scores",
-    "jpeg_header_stats",
-    "semantic_dedup",
-    "gopher_quality_flags",
-    "dsir_importance_weights",
-    "perceptron_lang_step",
-    "gif_frame_sampling",
-    "wav_frame_energy",
-    "bmp_pixel_stats",
-    "quality_gate_pipeline",
-    "image_phash_neardup",
-    "jpeg_pixel_stats",
-    "audio_fingerprint_neardup",
-    "t_closeness_audit",
-    "mannwhitney_value_drift",
-    "epoch_shard_plan",
-    "avi_mjpeg_frame_sampling",
-    "url_canonical_dedup",
-    "domain_quota_retention",
-    "decontaminate_longest_span",
-    "clip_pair_gate",
-    "clip_source_retention",
-    "mp3_frame_stats",
-    "html_text_extract",
-    "html_block_link_density",
-    "robots_txt_gate",
-    "corpus_datasheet",
-    "bitext_margin_mining",
-    "bitext_margin_mining_ivf",
-    "bitext_ivf_recall",
-    "mp3_granule_synthesis",
-    "pass_at_k_eval",
-    "best_of_n_reward_selection",
-    "unimax_epoch_mix",
-    "wav_dft_bands",
-    "mp3_huffman_decode",
-    "mp3_polyphase_synthesis",
-    "suffix_dup_depths",
-    "kn_bigram_scores",
-    "dpo_pair_builder",
-    "self_consistency_vote",
-    "nucleus_topp_plan",
-    "quant_calibration_absmax",
-    "duplicate_spans_exact",
-    "kn_trigram_scores",
-    "kn_5gram_scores",
-    "moe_router_load",
-    "gradient_noise_scale",
-    "packing_crossdoc_attention",
-    "rlhf_kl_budget",
-    "ams_f2_moment",
-    "distill_disagreement_set",
-    "jm_lambda_em_step",
-    "video_pframe_decode",
-    "grpo_advantage_baseline",
-    "rejection_sampling_keep",
-    "dataset_cartography",
-    "tracin_influence_topk",
-    "speculative_decode_accept",
-    "matryoshka_recall_eval",
-    "rrf_fusion_topk",
-    "rrf_fusion_ivf",
-    "rrf_ivf_recall_eval",
-    "mink_prob_membership",
-    "ema_checkpoint_average",
-    "brier_decomposition_eval",
-    "span_corruption_plan",
-    "unicode_normalize_stats",
-    "pii_multiclass_scrub",
-    "streaming_url_dedup",
-    "c4_line_filters",
-    "line_global_dedup",
-    "hashed_ngram_classifier",
-    "crawl_politeness_plan",
-    "secret_entropy_scrub",
-    "bradley_terry_mm_step",
-    "roc_pr_calibration",
-    "doremi_domain_reweight",
-    "template_slot_fingerprint",
-    "ndcg_ranking_eval",
-    "source_diversity_loo",
-    "flac_stream_stats",
-    "warc_record_stats",
-    "web_corpus_pipeline",
-    "license_compat_audit",
-    "crawl_frontier_refresh",
-]
 
 # documented exceptions: broadcast-side cross joins in the ANN
 # exact/assignment plans (operators/similarity.py), and the 1-row
@@ -501,6 +203,16 @@ NESTED_LOOP_OK = {
     # inherits robots_txt_gate's tiny-ruleset prefix theta join (its
     # member subtree; see that entry's note)
     "web_corpus_pipeline",
+    # two 1-row broadcast count scalars (n_candidates, n_verified)
+    # beside the 1-row n_true aggregate (the recall-ppm assembly)
+    "lsh_recall_eval",
+    # 1-row broadcast (n_rows, n_keys) totals onto the top-N
+    # TakeOrdered rows
+    "key_skew_profile",
+    # broadcast N_CENTROIDS-row (8) centroid set x the embeddings scan:
+    # the nearest-centroid assignment, same IVF-assign plan as
+    # kmeans_lloyd_step; pairs are then an equi-join per centroid
+    "dedup_embedding_cosine",
 }
 
 # Global (partition-less) window allowlist: every surviving
@@ -752,7 +464,7 @@ def plan_of(df) -> str:
 
 def audit(spark, sf_dir: str):
     rows, details, failures = [], [], []
-    for name in AUDIT:
+    for name in QUERIES:
         handles = []
         if name in CHECKPOINTED:
             df, handles = CHECKPOINTED[name](spark, sf_dir)
@@ -829,11 +541,11 @@ def main() -> int:
         "| query | parquet scans | scans w/ pushed filters | read cols/scan | "
         "joins | codegen spans | red flags |\n|---|---|---|---|---|---|---|\n"
         + "\n".join(rows)
-        + "\n\nBroadcastNestedLoopJoin is expected (and allowlisted) only "
-        "in the ANN exact/assignment plans (broadcast-small query/centroid "
-        "set) and in the 1-row broadcast global-scalar cross joins of "
-        "`tfidf_top_terms` / `supplier_value_share` — a single-row build "
-        "side, not a data-scale nested loop.\n\n## Join/pushdown lines\n\n"
+        + "\n\nBroadcastNestedLoopJoin is allowlisted only for the entries "
+        "in `NESTED_LOOP_OK` (tools/plan_audit.py), each with its reason: "
+        "a broadcast-small query/centroid set or a 1-row global-scalar "
+        "build side, not a data-scale nested loop.\n\n"
+        "## Join/pushdown lines\n\n"
         + "\n".join(details)
     )
     with open("PLANS.md", "w") as f:

@@ -1,4 +1,4 @@
-"""Shuffle-volume audit: quantify bytes moved per headline query.
+"""Shuffle-volume audit: quantify bytes moved per registry entry.
 
 The plan audit (tools/plan_audit.py) proves plan SHAPE (pushdown,
 join strategies, codegen); this tool measures the actual shuffle
@@ -22,212 +22,6 @@ sys.path.insert(0, ".")
 
 from advisorydatapipeline_spark.session import get_spark  # noqa: E402
 from advisorydatapipeline_spark.registry import QUERIES  # noqa: E402
-
-AUDIT = [
-    "flagship_advisory_resolution",
-    "pricing_summary",
-    "local_supplier_revenue",
-    "forecast_revenue_band",
-    "returned_item_ranking",
-    "sessionization",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_simhash64",
-    "canonical_corpus",
-    "ann_ivf_topk",
-    "hll_shard_union",
-    "incremental_rollup_merge",
-    "sequence_packing",
-    "pagerank_suppliers",
-    "skew_salted_agg",
-    "time_rollup",
-    "curation_pipeline",
-    "winnow_neardup_pairs",
-    "winnowing_fingerprints",
-    "bitmap_exact_distinct",
-    "freq_sketch_merge",
-    "session_membership_join",
-    "modern_sql_aggregates",
-    "merge_into_customers",
-    "source_quota_cap",
-    "corpus_mixture_waterfill",
-    "zorder_chunk_stats",
-    "dedup_embedding_rhp",
-    "bm25_doc_ranking",
-    "vocab_oov_rate",
-    "dedup_containment",
-    "bloom_corpus_probe",
-    "entity_resolution_parts",
-    "histogram_quantile_estimate",
-    "bpe_pair_ranks",
-    "seasonal_dow_indices",
-    "interval_merge_coverage",
-    "bfs_reachable_hops",
-    "column_profile_orders",
-    "inverted_index_postings",
-    "duplicate_passages",
-    "rolling_distinct_users",
-    "gap_fill_interpolate",
-    "event_transition_matrix",
-    "ks_value_drift",
-    "cross_source_dup_matrix",
-    "time_weighted_value",
-    "cep_pattern_matches",
-    "dedup_jaccard_prefix",
-    "grid_proximity_join",
-    "countmin_estimates",
-    "asof_join_next_purchase",
-    "asof_join_nearest_purchase",
-    "trending_per_hour",
-    "funnel_time_bound",
-    "session_relative_features",
-    "attribution_last_touch",
-    "percent_of_parent_rollup",
-    "gap_histogram_log2",
-    "temperature_mix_rates",
-    "length_bucket_batching",
-    "syndicated_families",
-    "ngram_novelty",
-    "daily_autocorr_moments",
-    "chi2_independence_scan",
-    "rfm_segments",
-    "benford_screen",
-    "federated_dim_join",
-    "table_diff_fingerprints",
-    "ab_test_lift",
-    "cohort_ltv_curve",
-    "sorted_neighborhood_pairs",
-    "winsorized_revenue",
-    "basket_pair_lift",
-    "pareto_skyline",
-    "interval_concurrency_curve",
-    "streaming_transition_counts",
-    "lsh_s_curve",
-    "activity_streaks",
-    "bounce_rate_daily",
-    "ship_latency_percentiles",
-    "dedup_pair_evidence",
-    "lorenz_revenue_deciles",
-    "emd_value_distributions",
-    "theil_sen_trend",
-    "kmv_distinct_sketch",
-    "centroid_separation",
-    "temperature_mix_apply",
-    "decile_migration_matrix",
-    "shuffle_skew_whatif",
-    "media_decode_stats",
-    "bpe_encode_tokens",
-    "join_cardinality_whatif",
-    "cdc_chunk_stats",
-    "binary_media_files",
-    "variant_extract_props",
-    "unpivot_event_matrix",
-    "collated_ci_join",
-    "attribution_position_based",
-    "pq_adc_topk",
-    "rake_keywords",
-    "basket_brand_triples",
-    "k_core_suppliers",
-    "char_unigram_surprisal",
-    "cdc_shared_chunks",
-    "bm25_maxscore_topk",
-    "ivf_pq_topk",
-    "scd2_apply_changes",
-    "weighted_median_price",
-    "code_switch_chunks",
-    "bloom_join_prune",
-    "zipf_slope_tokens",
-    "markov_attribution_removal",
-    "ivm_join_delta",
-    "dbscan_grid_clusters",
-    "label_propagation_communities",
-    "lm_perplexity_scores",
-    "semantic_dedup",
-    "dsir_importance_weights",
-    "perceptron_lang_step",
-    "gif_frame_sampling",
-    "wav_frame_energy",
-    "bmp_pixel_stats",
-    "quality_gate_pipeline",
-    "image_phash_neardup",
-    "jpeg_pixel_stats",
-    "audio_fingerprint_neardup",
-    "t_closeness_audit",
-    "mannwhitney_value_drift",
-    "epoch_shard_plan",
-    "avi_mjpeg_frame_sampling",
-    "url_canonical_dedup",
-    "domain_quota_retention",
-    "decontaminate_longest_span",
-    "clip_pair_gate",
-    "clip_source_retention",
-    "mp3_frame_stats",
-    "html_text_extract",
-    "html_block_link_density",
-    "robots_txt_gate",
-    "corpus_datasheet",
-    "bitext_margin_mining",
-    "bitext_margin_mining_ivf",
-    "bitext_ivf_recall",
-    "mp3_granule_synthesis",
-    "pass_at_k_eval",
-    "best_of_n_reward_selection",
-    "unimax_epoch_mix",
-    "wav_dft_bands",
-    "mp3_huffman_decode",
-    "mp3_polyphase_synthesis",
-    "suffix_dup_depths",
-    "kn_bigram_scores",
-    "dpo_pair_builder",
-    "self_consistency_vote",
-    "nucleus_topp_plan",
-    "quant_calibration_absmax",
-    "duplicate_spans_exact",
-    "kn_trigram_scores",
-    "kn_5gram_scores",
-    "moe_router_load",
-    "gradient_noise_scale",
-    "packing_crossdoc_attention",
-    "rlhf_kl_budget",
-    "ams_f2_moment",
-    "distill_disagreement_set",
-    "jm_lambda_em_step",
-    "video_pframe_decode",
-    "grpo_advantage_baseline",
-    "rejection_sampling_keep",
-    "dataset_cartography",
-    "tracin_influence_topk",
-    "speculative_decode_accept",
-    "matryoshka_recall_eval",
-    "rrf_fusion_topk",
-    "rrf_fusion_ivf",
-    "rrf_ivf_recall_eval",
-    "mink_prob_membership",
-    "ema_checkpoint_average",
-    "brier_decomposition_eval",
-    "span_corruption_plan",
-    "unicode_normalize_stats",
-    "pii_multiclass_scrub",
-    "streaming_url_dedup",
-    "c4_line_filters",
-    "line_global_dedup",
-    "hashed_ngram_classifier",
-    "crawl_politeness_plan",
-    "secret_entropy_scrub",
-    "bradley_terry_mm_step",
-    "roc_pr_calibration",
-    "doremi_domain_reweight",
-    "template_slot_fingerprint",
-    "ndcg_ranking_eval",
-    "source_diversity_loo",
-    "flac_stream_stats",
-    "warc_record_stats",
-    "web_corpus_pipeline",
-    "license_compat_audit",
-    "crawl_frontier_refresh",
-]
 
 
 def _get(url: str):
@@ -256,7 +50,7 @@ def main() -> int:
     ).write.format("noop").mode("overwrite").save()
 
     rows = []
-    for name in AUDIT:
+    for name in QUERIES:
         sc.setJobGroup(name, name)
         QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite"
