@@ -1,25 +1,30 @@
-"""Interpolated n-gram language-model perplexity scoring
-(beyond-reference; north-star text analysis).
+"""N-gram language-model perplexity scoring (beyond-reference;
+north-star text analysis).
 
 The standard LLM-corpus quality filter (CCNet / Gopher / RedPajama
 style): train a word-level n-gram LM on the corpus, score each
 document by its cross-entropy under that model, and gate on the
 score — gibberish and wrong-charset text scores high surprisal,
-boilerplate scores low. This module trains and applies the model in
-ONE distributed plan: a Jelinek-Mercer-interpolated trigram model
+boilerplate scores low. Each model is trained and applied in ONE
+distributed plan. Two smoothings:
 
-    p(w3 | w1 w2) = 0.5 * C(w1w2w3)/C(w1w2)      (trigram ML)
-                  + 0.3 * C(w2w3)/C(w2)          (bigram backoff)
-                  + 0.2 * C(w3)/N                (unigram backoff)
+- :func:`ngram_lm_doc_scores` — a Jelinek-Mercer-interpolated trigram
 
-with counts taken from the corpus being scored, so every n-gram in a
-document has nonzero ML probability and no smoothing floor is needed.
+      p(w3 | w1 w2) = 0.5 * C(w1w2w3)/C(w1w2)      (trigram ML)
+                    + 0.3 * C(w2w3)/C(w2)          (bigram backoff)
+                    + 0.2 * C(w3)/N                (unigram backoff)
 
-Oracle-exactness (the reason for the integer staging): each ML
-component is quantized ONCE per distinct trigram type to integer
-parts-per-billion via BIGINT ``DIV`` (``(C_num * 1e9) DIV C_den``),
-the interpolation is exact integer arithmetic
-(``(5*p3 + 3*p2 + 2*p1) DIV 10``), and only then does a single
+  with counts taken from the corpus being scored, so every n-gram in
+  a document has nonzero ML probability and no smoothing floor is
+  needed.
+- :func:`kneser_ney_scores` — interpolated Kneser-Ney (the KenLM
+  default) at any order >= 2; the registry runs orders 2, 3 and 5.
+
+Oracle-exactness (the reason for the integer staging): every
+probability component is quantized to integer parts-per-billion via
+BIGINT ``DIV`` (JM: ``(C_num * 1e9) DIV C_den``, mixed as
+``(5*p3 + 3*p2 + 2*p1) DIV 10``; KN: the per-level floors listed on
+:func:`kneser_ney_scores`), and only then does a single
 ``floor(1e6 * ln(1e9 / p_ppb))`` convert the rational probability to
 integer micro-nats — the same discipline as
 ``char_unigram_surprisal`` (queries/text_analysis.py), so every
@@ -28,27 +33,24 @@ bit-identically. Perplexity = exp(mean_surprisal_micro / 1e6); the
 exp is left to the consumer to keep the gated columns integral.
 
 Scale design (100 TB):
-- Trigrams are built by a map-side ``transform`` over each doc's own
-  token array — no window, no per-doc shuffle. The only shuffles are
-  hash partial-aggregations on n-gram keys (<= 3 small string cols;
-  document text never moves) and the score join on the trigram key.
-- The scored-trigram table is corpus-sized (distinct trigram types),
-  so the apply join is a shuffle hash join on (w1,w2,w3) — NOT a
-  broadcast. Unigram/bigram denominators join the trigram table on
-  term keys the same way; N joins as a broadcast 1-row aggregate.
-- The tokenized corpus is persisted once and read by the four count
-  branches + the final doc rollup within the single materializing
+- N-grams are built by a map-side ``transform`` over each doc's own
+  token array — no per-doc window, no per-doc shuffle. The shuffles
+  are hash partial-aggregations on n-gram keys (small string cols;
+  document text never moves), the level joins and the apply join on
+  the n-gram key.
+- The scored n-gram table is corpus-sized (distinct n-gram types),
+  so the apply join is a shuffle hash join — NOT a broadcast. Only
+  the 1-row model aggregates (N, count-of-counts) are broadcast.
+- The tokenized corpus is persisted once and read by every count
+  branch + the final doc rollup within the single materializing
   action (registry cache contract, registry.py:12).
 - ppb quantization bounds: ``C * 1e9`` overflows BIGINT at
   C > ~9.2e9 token occurrences for one n-gram type; a 100 TB corpus
   needs the scale dropped to 1e6 (ppm) via the ``scale`` parameter
-  (the interpolation weights and plan shape are unchanged by the
-  scale constant). This is GUARDED, not just documented: the plan
-  carries ``max(unigram count)`` on the same broadcast 1-row
-  aggregate as N and raises in-plan (``raise_error``) the moment any
-  count could overflow ``count * scale`` — every numerator in the
-  ppb expressions (trigram, bigram, unigram counts) is bounded by
-  the max unigram count, so one comparison covers all three. A
+  (the weights and plan shape are unchanged by the scale constant).
+  This is GUARDED, not just documented: the plan carries the count
+  bounds on its broadcast 1-row aggregates and raises in-plan
+  (``raise_error``) the moment any product could overflow — a
   100 TB run fails loud with the remediation in the message instead
   of silently wrapping.
 
@@ -61,6 +63,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from advisorydatapipeline_spark.functions.text import tokens
 
@@ -70,433 +73,6 @@ MICRO = 1_000_000  # surprisal quantum: micro-nats
 # Jelinek-Mercer interpolation weights (tri, bi, uni) in tenths:
 # exact integer mix  (5*p3 + 3*p2 + 2*p1) DIV 10.
 LAMBDA_TENTHS = (5, 3, 2)
-
-
-def kneser_ney_bigram_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = PPB,
-) -> DataFrame:
-    """Per-document surprisal under an INTERPOLATED KNESER-NEY bigram
-    LM (Kneser & Ney 1995; the KenLM default) — the canonical n-gram
-    smoothing, distinguished from the Jelinek-Mercer mix in
-    :func:`ngram_lm_doc_scores` by its two hallmarks:
-
-    - the lower-order distribution is the CONTINUATION probability
-      P_cont(w2) = N1+(.w2) / N1+(..)  (type counts: in how many
-      distinct contexts does w2 appear — "Francisco" is frequent but
-      follows only "San", so its continuation mass is tiny);
-    - the higher order is ABSOLUTE-DISCOUNTED with D estimated from
-      the corpus's own count-of-counts, D = n1 / (n1 + 2*n2), and the
-      freed mass lambda(w1) = D * N1+(w1.) / c(w1.) backs off.
-
-    Exactness: D stays the exact RATIONAL dn/dd (dn = n1,
-    dd = n1 + 2*n2), so the discounted term is
-    (cb*dd - dn) / (dd*ctx1) with NO float discount; the model is
-    quantized at exactly three documented floor points the oracle
-    replays verbatim:
-
-      disc_ppb = ((cb*dd - dn) * scale) DIV (dd * ctx1)
-      lam_ppb  = ((dn * n1w1) * scale) DIV (dd * ctx1)
-      p_ppb    = GREATEST(disc_ppb + (lam_ppb * ncw2) DIV nall, 1)
-
-    then one float ln to micro-nats (the char_unigram_surprisal
-    discipline). cb >= 1 and dn < dd make cb*dd - dn > 0 — observed
-    bigrams need no max(.., 0) clamp.
-
-    Scale (100 TB): counts/type-counts are hash partial-aggs on
-    string keys; the context totals ctx(w1) = sum_w2 cb reuse the
-    bigram table (no second corpus pass); count-of-counts (n1, n2,
-    nall, max bounds) ride ONE broadcast 1-row aggregate; the apply
-    join is a shuffle hash join on (w1, w2). Overflow is GUARDED
-    in-plan like ngram_lm_doc_scores, and every guard is a DIVISION
-    comparison over broadcast 1-row aggregates (r13 ADVICE: the
-    guard products themselves must not wrap before the comparison):
-    cb*dd*scale AND dn*n1w1*scale via GREATEST(max_cb, max_t1) vs
-    max_safe DIV dd (dn <= dd, n1w1 <= max_t1 the max per-context
-    type count — the TIGHT r15 bound; the earlier dn-vs-nall form
-    false-tripped on corpora whose singleton-type count is large
-    even though every real per-row product is small, the kn5 sf0.1
-    lesson); lam_ppb*ncw2 via nall > max_safe (lam_ppb <= scale,
-    ncw2 <= nall); and the raw denominator dd*ctx1 via dd vs
-    (2^63-1) DIV sum_cb (ctx1 <= sum_cb). Any trip raises with the
-    remediation (scale=1_000_000).
-
-    Returns: doc_id, n_tokens, n_bigrams, surprisal_micro,
-    mean_surprisal_micro (NULL when the doc has < 2 tokens).
-    """
-    out, handles = kneser_ney_bigram_plan(
-        docs, id_col=id_col, text_col=text_col, scale=scale
-    )
-    # eager materialize + unpersist: the leak discipline shared with
-    # the trigram version below; the un-materialized plan stays
-    # inspectable via kneser_ney_bigram_plan (r15 — the r14 ADVICE
-    # blind spot: the checkpointed result is a Scan ExistingRDD, so
-    # plan-shape coverage lives in tests/test_explain_plans.py and
-    # tools/plan_audit.py's CHECKPOINTED seam table, both of which
-    # audit THIS lazy plan).
-    try:
-        res = out.localCheckpoint(eager=True)
-    finally:
-        for h in handles:
-            h.unpersist()
-    return res
-
-
-def kneser_ney_bigram_plan(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = PPB,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The lazy plan behind :func:`kneser_ney_bigram_scores`: returns
-    ``(result, persisted handles)`` so plan-only callers (the pinned
-    plan-shape pytest and tools/plan_audit.py) can inspect the real
-    physical plan and unpersist without materializing."""
-    max_safe = (2**63 - 1) // scale
-    tk = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("tk")
-    ).persist()
-
-    bi_doc = (
-        _ngram_rows(tk, 2, ("w1", "w2"))
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist()
-    )
-    bi = bi_doc.groupBy("w1", "w2").agg(
-        F.sum("cnt").cast("long").alias("cb")
-    ).persist()
-    ctx = bi.groupBy("w1").agg(
-        F.sum("cb").cast("long").alias("ctx1"),
-        F.count(F.lit(1)).cast("long").alias("n1w1"),
-    )
-    cont = bi.groupBy("w2").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw2")
-    )
-    # max per-context type count for the lam-numerator bound: the r15
-    # tight guard (the old dn-vs-nall bound false-tripped on corpora
-    # where dn*nall is astronomical but the REAL product dn*t is tiny
-    # — the kn5 sf0.1 lesson; dn <= dd, so dd*max_t bounds dn*t)
-    mt = ctx.agg(F.max("n1w1").cast("long").alias("max_t1"))
-    # D = n1/(n1+2n2) is undefined on a corpus with NO count-1/2
-    # bigram types (possible on low-entropy synthetic corpora);
-    # textbook fallback is the default discount D = 1/2, kept
-    # rational as (dn, dd) = (1, 2) so exactness is untouched.
-    model = bi.agg(
-        F.sum((F.col("cb") == 1).cast("long")).cast("long").alias("_n1"),
-        (
-            F.sum((F.col("cb") == 1).cast("long"))
-            + 2 * F.sum((F.col("cb") == 2).cast("long"))
-        ).cast("long").alias("_dd"),
-        F.count(F.lit(1)).cast("long").alias("nall"),
-        F.max("cb").cast("long").alias("max_cb"),
-        F.sum("cb").cast("long").alias("sum_cb"),
-    ).select(
-        F.when(F.col("_dd") == 0, F.lit(1).cast("long"))
-        .otherwise(F.col("_n1")).alias("dn"),
-        F.when(F.col("_dd") == 0, F.lit(2).cast("long"))
-        .otherwise(F.col("_dd")).alias("dd"),
-        "nall",
-        "max_cb",
-        "sum_cb",
-    )
-
-    sc = (
-        bi.join(ctx, "w1")
-        .join(cont, "w2")
-        .crossJoin(F.broadcast(model))
-        .crossJoin(F.broadcast(mt))
-        .select(
-            "w1",
-            "w2",
-            F.expr(
-                # Division-form guards: every comparison operand is a
-                # pre-bounded BIGINT off the broadcast rows, so the
-                # guards themselves cannot wrap (r14, closing r13
-                # ADVICE item 1). Covered products, in order: cb*dd
-                # (then *scale) via max_cb; dn*n1w1 (then *scale) via
-                # dd*max_t1 (dn<=dd, n1w1<=max_t1 — the TIGHT r15
-                # bound; the old dn-vs-nall form false-tripped at
-                # corpus scale); lam_ppb*ncw2 (lam_ppb<=scale,
-                # ncw2<=nall) via nall; the raw denominator dd*ctx1
-                # (ctx1<=sum_cb, vs 2^63-1).
-                f"CASE WHEN GREATEST(max_cb, max_t1) > {max_safe} DIV dd"
-                f" OR nall > {max_safe}"
-                f" OR dd > {2**63 - 1} DIV GREATEST(sum_cb, 1) THEN "
-                f"CAST(raise_error(CONCAT("
-                f"'kneser_ney_bigram_scores: count-of-counts scale ', "
-                f"dd, ' would overflow count*{scale} in BIGINT; ', "
-                f"'re-run with scale=1000000 (ppm)')) AS BIGINT) "
-                f"ELSE GREATEST("
-                f"(((cb * dd - dn) * {scale}) DIV (dd * ctx1))"
-                f" + (((((dn * n1w1) * {scale}) DIV (dd * ctx1))"
-                f" * ncw2) DIV nall), CAST(1 AS BIGINT)) END"
-            ).alias("p_ppb"),
-        )
-        .select(
-            "w1",
-            "w2",
-            F.floor(
-                MICRO * F.log(F.lit(float(scale)) / F.col("p_ppb"))
-            ).cast("long").alias("s_micro"),
-        )
-    )
-
-    agg = (
-        bi_doc.join(sc, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_bigrams"),
-            F.sum(F.col("cnt") * F.col("s_micro")).cast("long").alias(
-                "surprisal_micro"
-            ),
-            F.expr(
-                "CAST(sum(cnt * s_micro) DIV sum(cnt) AS BIGINT)"
-            ).alias("mean_surprisal_micro"),
-        )
-    )
-    out = (
-        tk.select("doc_id", F.size("tk").cast("long").alias("n_tokens"))
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.coalesce(F.col("n_bigrams"), F.lit(0).cast("long")).alias(
-                "n_bigrams"
-            ),
-            "surprisal_micro",
-            "mean_surprisal_micro",
-        )
-    )
-    return out, [tk, bi_doc, bi]
-
-
-def kneser_ney_trigram_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = PPB,
-) -> DataFrame:
-    """Per-document surprisal under an interpolated KNESER-NEY
-    TRIGRAM LM with full backoff recursion (Chen & Goodman 1999's
-    interpolated-KN formulation; KenLM's default order is 5 — the
-    trigram proves the recursion generalizes beyond
-    :func:`kneser_ney_bigram_scores`'s single backoff level):
-
-        p(w3|w1w2) = (c(w1w2w3) - D3)+ / c(w1w2.)
-                   + lam3(w1w2) * p_KN(w3|w2)
-        p_KN(w3|w2) = (cc(w2w3) - D2)+ / cc(w2.)
-                   + lam2(w2) * P_cont(w3)
-
-    with MODIFIED lower-order counts (the KN hallmark, one level
-    deeper than the bigram version): cc(w2w3) = N1+(.w2w3) — in how
-    many distinct left contexts w1 does the bigram occur — and
-    P_cont(w3) = N1+(.w3) / N1+(..) taken over those modified
-    bigram types, so each lower level counts TYPES of the level
-    above, never raw tokens. Each level's absolute discount is the
-    exact RATIONAL D = n1/(n1+2n2) from that level's own
-    count-of-counts, with the independent degenerate fallback
-    (dn, dd) = (1, 2) when a level has no count-1/2 types (the
-    sf0.1 synthetic-corpus lesson, pytest-pinned per level).
-
-    Exactness: five documented ppb floor points replayed verbatim
-    by the oracle —
-
-      p2_ppb   = ((cc*dd2 - dn2) * scale) DIV (dd2 * ctxc)
-      lam2_ppb = ((dn2 * t2) * scale) DIV (dd2 * ctxc)
-      pl_ppb   = p2_ppb + (lam2_ppb * ncw3) DIV nall
-      p3_ppb   = ((c3*dd3 - dn3) * scale) DIV (dd3 * c2ctx)
-      lam3_ppb = ((dn3 * t3) * scale) DIV (dd3 * c2ctx)
-      p_ppb    = GREATEST(p3_ppb + (lam3_ppb * pl_ppb) DIV scale, 1)
-
-    then one float ln to micro-nats. Scored trigrams are observed
-    by construction (model trained on the corpus being scored), so
-    cc >= 1 and the discounted numerators never go negative
-    (cb*dd - dn >= dd*(cb-1) >= 0).
-
-    Scale (100 TB): counts are hash partial-aggs on <=3 string keys
-    (the modified counts cc are a count(*) over distinct trigram
-    TYPES — one extra shuffle on (w2,w3), never a second corpus
-    pass); both count-of-counts rows ride broadcast 1-row
-    aggregates; the apply join is a shuffle hash join on
-    (w1,w2,w3). Overflow guards are DIVISION comparisons over the
-    broadcast rows (pre-bounded operands, the r14 lm discipline,
-    TIGHTENED r15 — the kn5 sf0.1 lesson: lam numerators are bounded
-    by dd*max_t, the max per-context type count, not by the global
-    type count, which false-trips on singleton-heavy corpora):
-    GREATEST(max_c3, max_t3) vs max_safe DIV dd3 (dn3 <= dd3,
-    t3 <= max_t3), GREATEST(max_cc, max_t2) vs max_safe DIV dd2,
-    nall vs max_safe (lam2_ppb <= scale, ncw3 <= nall), and the raw
-    denominators dd3*c2ctx / dd2*ctxc via (2^63-1) DIV
-    sum-of-counts bounds. lam3_ppb*pl_ppb <=
-    2*scale^2 < 2^63 for scale <= 1e9, so the final mix needs no
-    guard. Any trip raises in-plan with the scale=1_000_000
-    remediation.
-
-    Returns: doc_id, n_tokens, n_trigrams, surprisal_micro,
-    mean_surprisal_micro (NULL when the doc has < 3 tokens).
-    """
-    out, handles = kneser_ney_trigram_plan(
-        docs, id_col=id_col, text_col=text_col, scale=scale
-    )
-    # eager materialize + unpersist: same leak discipline as the
-    # bigram version above; the un-materialized plan stays
-    # inspectable via kneser_ney_trigram_plan
-    try:
-        res = out.localCheckpoint(eager=True)
-    finally:
-        for h in handles:
-            h.unpersist()
-    return res
-
-
-def kneser_ney_trigram_plan(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    scale: int = PPB,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The lazy plan behind :func:`kneser_ney_trigram_scores`:
-    returns ``(result, persisted handles)`` so plan-only callers can
-    unpersist without materializing."""
-    max_safe = (2**63 - 1) // scale
-    abs_max = 2**63 - 1
-    tk = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("tk")
-    ).persist()
-
-    tri_doc = (
-        _ngram_rows(tk, 3, ("w1", "w2", "w3"))
-        .groupBy("doc_id", "w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist()
-    )
-    tri = tri_doc.groupBy("w1", "w2", "w3").agg(
-        F.sum("cnt").cast("long").alias("c3")
-    ).persist()
-    ctx3 = tri.groupBy("w1", "w2").agg(
-        F.sum("c3").cast("long").alias("c2ctx"),
-        F.count(F.lit(1)).cast("long").alias("t3"),
-    )
-    # modified bigram counts: cc(w2,w3) = distinct w1 types above
-    # (tri rows are distinct types, so count(*) IS the type count)
-    cc2 = tri.groupBy("w2", "w3").agg(
-        F.count(F.lit(1)).cast("long").alias("cc")
-    ).persist()
-    ctxc = cc2.groupBy("w2").agg(
-        F.sum("cc").cast("long").alias("ctxc"),
-        F.count(F.lit(1)).cast("long").alias("t2"),
-    )
-    cont3 = cc2.groupBy("w3").agg(
-        F.count(F.lit(1)).cast("long").alias("ncw3")
-    )
-
-    def _coc(frame: DataFrame, cnt: str, lvl: str) -> DataFrame:
-        # per-level count-of-counts -> exact-rational discount, with
-        # the independent degenerate (1, 2) fallback
-        return frame.agg(
-            F.sum((F.col(cnt) == 1).cast("long")).cast("long").alias("_n1"),
-            (
-                F.sum((F.col(cnt) == 1).cast("long"))
-                + 2 * F.sum((F.col(cnt) == 2).cast("long"))
-            ).cast("long").alias("_dd"),
-            F.count(F.lit(1)).cast("long").alias(f"n{lvl}all"),
-            F.max(cnt).cast("long").alias(f"max_{cnt}"),
-            F.sum(cnt).cast("long").alias(f"sum_{cnt}"),
-        ).select(
-            F.when(F.col("_dd") == 0, F.lit(1).cast("long"))
-            .otherwise(F.col("_n1")).alias(f"dn{lvl}"),
-            F.when(F.col("_dd") == 0, F.lit(2).cast("long"))
-            .otherwise(F.col("_dd")).alias(f"dd{lvl}"),
-            f"n{lvl}all",
-            f"max_{cnt}",
-            f"sum_{cnt}",
-        )
-
-    m3 = _coc(tri, "c3", "3")
-    m2 = _coc(cc2, "cc", "2").withColumnRenamed("n2all", "nall")
-    # tight lam-numerator bounds (r15, the kn5 sf0.1 lesson): dn <= dd
-    # and t <= max_t, so dd*max_t bounds dn*t without the false-trip
-    # of the old dn-vs-nall form
-    mt3 = ctx3.agg(F.max("t3").cast("long").alias("max_t3"))
-    mt2 = ctxc.agg(F.max("t2").cast("long").alias("max_t2"))
-
-    sc = (
-        tri.join(ctx3, ["w1", "w2"])
-        .join(cc2, ["w2", "w3"])
-        .join(ctxc, "w2")
-        .join(cont3, "w3")
-        .crossJoin(F.broadcast(m3))
-        .crossJoin(F.broadcast(m2))
-        .crossJoin(F.broadcast(mt3))
-        .crossJoin(F.broadcast(mt2))
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            F.expr(
-                f"CASE WHEN GREATEST(max_c3, max_t3) > {max_safe} DIV dd3"
-                f" OR GREATEST(max_cc, max_t2) > {max_safe} DIV dd2"
-                f" OR nall > {max_safe}"
-                f" OR dd3 > {abs_max} DIV GREATEST(sum_c3, 1)"
-                f" OR dd2 > {abs_max} DIV GREATEST(sum_cc, 1) THEN "
-                f"CAST(raise_error(CONCAT("
-                f"'kneser_ney_trigram_scores: count magnitudes would "
-                f"overflow count*{scale} in BIGINT; ', "
-                f"'re-run with scale=1000000 (ppm)')) AS BIGINT) "
-                f"ELSE GREATEST("
-                f"(((c3 * dd3 - dn3) * {scale}) DIV (dd3 * c2ctx))"
-                f" + (((((dn3 * t3) * {scale}) DIV (dd3 * c2ctx))"
-                f" * ("
-                f"(((cc * dd2 - dn2) * {scale}) DIV (dd2 * ctxc))"
-                f" + (((((dn2 * t2) * {scale}) DIV (dd2 * ctxc))"
-                f" * ncw3) DIV nall)"
-                f")) DIV {scale}), CAST(1 AS BIGINT)) END"
-            ).alias("p_ppb"),
-        )
-        .select(
-            "w1",
-            "w2",
-            "w3",
-            F.floor(
-                MICRO * F.log(F.lit(float(scale)) / F.col("p_ppb"))
-            ).cast("long").alias("s_micro"),
-        )
-    )
-
-    agg = (
-        tri_doc.join(sc, ["w1", "w2", "w3"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_trigrams"),
-            F.sum(F.col("cnt") * F.col("s_micro")).cast("long").alias(
-                "surprisal_micro"
-            ),
-            F.expr(
-                "CAST(sum(cnt * s_micro) DIV sum(cnt) AS BIGINT)"
-            ).alias("mean_surprisal_micro"),
-        )
-    )
-    out = (
-        tk.select("doc_id", F.size("tk").cast("long").alias("n_tokens"))
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.coalesce(F.col("n_trigrams"), F.lit(0).cast("long")).alias(
-                "n_trigrams"
-            ),
-            "surprisal_micro",
-            "mean_surprisal_micro",
-        )
-    )
-    return out, [tk, tri_doc, tri, cc2]
 
 
 def _ngram_rows(tk: DataFrame, n: int, names: tuple[str, ...]) -> DataFrame:
@@ -662,72 +238,78 @@ def ngram_lm_doc_scores(
     )
 
 
-def kneser_ney_5gram_scores(
+def kneser_ney_scores(
     docs: DataFrame,
+    order: int,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     scale: int = PPB,
 ) -> DataFrame:
-    """Per-document surprisal under an interpolated KNESER-NEY
-    5-GRAM LM — KenLM's DEFAULT order (r14 verdict item 8; the
-    trigram proved the backoff recursion generalizes, this runs it
-    at production depth). Four discounted levels + the continuation
-    unigram, each lower level built from MODIFIED counts (types of
-    the level above, never raw tokens — Chen & Goodman 1999's
-    recursive c_KN definition):
+    """Per-document surprisal under an interpolated KNESER-NEY LM of
+    the given ``order`` (Kneser & Ney 1995; Chen & Goodman 1999's
+    recursive formulation; KenLM's default order is 5). For each
+    order-n n-gram w1..wn, with levels k = n down to 2:
 
-        p5(w5|w1..w4) = (c5 - D5)+/c(w1..w4.) + lam5 * p4
-        p4(w5|w2..w4) = (cc4 - D4)+/cc(w2..w4.) + lam4 * p3
-        p3(w5|w3w4)   = (cc3 - D3)+/cc(w3w4.) + lam3 * p2
-        p2(w5|w4)     = (cc2 - D2)+/cc(w4.) + lam2 * P_cont(w5)
+        p_k(wn | w_{n-k+1}..w_{n-1})
+            = (c_k - D_k)+ / c_k(ctx .) + lam_k * p_{k-1}
+        p_1(wn) = P_cont(wn) = N1+(. wn) / N1+(. .)
 
-    where cc4(w2..w5) = N1+(.w2..w5) over raw 5-gram types,
-    cc3(w3w4w5) = N1+(.w3w4w5) over cc4 types, cc2(w4w5) =
-    N1+(.w4w5) over cc3 types, and P_cont(w5) = N1+(.w5)/N1+(..)
-    over cc2 types. Each level's absolute discount is the exact
-    RATIONAL D = n1/(n1+2n2) from THAT level's own count-of-counts,
-    with the independent degenerate (1, 2) fallback per level (the
-    synthetic-corpus lesson, pytest-pinned).
+    Level k keys on the last k words and its context is the first
+    k-1 of those. c_n is the raw n-gram count; every lower c_k is the
+    MODIFIED count N1+(. key) — how many distinct left contexts the
+    key has among level k+1's types (the KN hallmark: "Francisco" is
+    frequent but follows only "San", so its continuation mass is
+    tiny). Each level's absolute discount is the exact RATIONAL
+    D_k = n1 / (n1 + 2*n2) from that level's own count-of-counts,
+    with an independent (dn, dd) = (1, 2) fallback when a level has
+    no count-1/2 types (the synthetic-corpus lesson, pytest-pinned
+    per level), and lam_k = D_k * t_k / c_k(ctx .) where t_k is the
+    number of types in the context.
 
-    Exactness: nine documented ppb floor points replayed verbatim by
-    the oracle — per level k in {2,3,4,5}:
+    Exactness: per level k, two documented ppb floor points
 
-      pk_ppb   = ((ck*ddk - dnk) * scale) DIV (ddk * ctxk)
-      lamk_ppb = ((dnk * tk) * scale) DIV (ddk * ctxk)
+      disc_k = ((c_k*dd_k - dn_k) * scale) DIV (dd_k * ctx_k)
+      lam_k  = ((dn_k * t_k) * scale) DIV (dd_k * ctx_k)
 
-    mixed bottom-up as pl2 = p2 + (lam2 * ncw5) DIV nall, then
-    pl_k = pk + (lamk * pl_{k-1}) DIV scale, finally
-    p_ppb = GREATEST(pl5, 1), one float ln to micro-nats. Scored
-    5-grams are observed by construction, so every modified count
-    >= 1 and the discounted numerators never go negative.
+    mixed bottom-up as pl_2 = disc_2 + (lam_2 * ncw) DIV nall, then
+    pl_k = disc_k + (lam_k * pl_{k-1}) DIV scale, finally
+    p_ppb = GREATEST(pl_n, 1) and one float ln to micro-nats. Scored
+    n-grams are observed by construction (the model is trained on
+    the corpus being scored), so every count >= 1 and the discounted
+    numerators never go negative (c*dd - dn >= dd*(c-1) >= 0).
 
-    Scale (100 TB): each level is ONE hash partial-agg on string
-    keys over the level above (5-gram types -> 4 -> 3 -> 2 -> 1;
-    the corpus itself is read once); context totals / per-context
-    type counts are PARTITIONED WINDOWS over each level's own frame
-    (r15, guide §2.4 — the former groupBy-ctx + join-back pair cost
-    two corpus-sized exchanges per level where the window costs
-    one), so the scoring chain is 3 level equi-joins + the apply
-    join instead of 8; all four count-of-counts rows (each carrying
-    its level's max_t bound — one pass) ride broadcast 1-row
-    aggregates. Overflow guards are DIVISION comparisons
-    over the broadcast rows, one per level
-    (GREATEST(max_count, max_t) vs max_safe DIV dd — max_t is the
-    level's max per-context type count, bounding the lam numerator
-    dn*t by dd*max_t; bounding it by the GLOBAL type count instead
-    false-trips on singleton-heavy corpora, which this operator's
-    own sf0.1 fixture proved) plus the raw denominator bounds (dd
-    vs (2^63-1) DIV sum) and nall <= max_safe; every lam*pl mix is
-    <= 2*scale^2 < 2^63. Any trip raises in-plan with the
-    scale=1_000_000 remediation.
+    Scale (100 TB): each lower level is ONE hash partial-agg over the
+    level above (the corpus itself is read once); context totals and
+    per-context type counts are PARTITIONED WINDOWS over each level's
+    own frame (guide §2.4 — one exchange per level where a
+    groupBy-ctx + join-back pair costs two), so the scoring chain is
+    n-2 level equi-joins + the apply join; each level's
+    count-of-counts row carries its max_t bound and rides a broadcast
+    1-row aggregate. Overflow guards are DIVISION comparisons over
+    those rows, so the guards themselves cannot wrap: per level
+    GREATEST(max_c, max_t) vs max_safe DIV dd (c*dd*scale, and
+    dn*t*scale since dn <= dd and t <= max_t — bounding t by the
+    GLOBAL type count instead false-trips on singleton-heavy corpora,
+    the kn_5gram_scores sf0.1 lesson), dd vs (2^63-1) DIV sum_c (the
+    raw denominator dd*ctx, ctx <= sum_c), and nall vs max_safe
+    (lam_2 <= scale, ncw <= nall); every lam*pl mix is <= 2*scale^2
+    < 2^63. Any trip raises in-plan with the scale=1_000_000
+    remediation.
 
-    Returns: doc_id, n_tokens, n_5grams, surprisal_micro,
-    mean_surprisal_micro (NULL when the doc has < 5 tokens).
+    Returns: doc_id, n_tokens, n_<order>grams (``n_bigrams`` /
+    ``n_trigrams`` at orders 2 / 3), surprisal_micro,
+    mean_surprisal_micro (NULL when the doc has < ``order`` tokens).
     """
-    out, handles = kneser_ney_5gram_plan(
-        docs, id_col=id_col, text_col=text_col, scale=scale
+    out, handles = kneser_ney_plan(
+        docs, order, id_col=id_col, text_col=text_col, scale=scale
     )
+    # eager materialize + unpersist (the cache-leak discipline); the
+    # un-materialized plan stays inspectable via kneser_ney_plan —
+    # the checkpointed result is a Scan ExistingRDD, so plan-shape
+    # coverage lives in tests/test_explain_plans.py and
+    # tools/plan_audit.py's CHECKPOINTED seam, both of which audit
+    # THIS lazy plan
     try:
         res = out.localCheckpoint(eager=True)
     finally:
@@ -736,175 +318,107 @@ def kneser_ney_5gram_scores(
     return res
 
 
-def kneser_ney_5gram_plan(
+def kneser_ney_plan(
     docs: DataFrame,
+    order: int,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     scale: int = PPB,
 ) -> tuple[DataFrame, list[DataFrame]]:
-    """The lazy plan behind :func:`kneser_ney_5gram_scores`: returns
-    ``(result, persisted handles)`` so plan-only callers (pytest,
-    plan_audit's CHECKPOINTED seam) can inspect the real plan."""
-    max_safe = (2**63 - 1) // scale
+    """The lazy plan behind :func:`kneser_ney_scores`: returns
+    ``(result, persisted handles)`` so plan-only callers (the pinned
+    plan-shape pytest and tools/plan_audit.py) can inspect the real
+    physical plan and unpersist without materializing."""
+    if order < 2:
+        raise ValueError(f"kneser_ney_plan: order must be >= 2, got {order}")
     abs_max = 2**63 - 1
+    max_safe = abs_max // scale
+    words = tuple(f"w{i}" for i in range(1, order + 1))
+    n_col = {2: "n_bigrams", 3: "n_trigrams"}.get(order, f"n_{order}grams")
     tk = docs.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("tk")
     ).persist()
-
-    W5 = ("w1", "w2", "w3", "w4", "w5")
-    g5_doc = (
-        _ngram_rows(tk, 5, W5)
-        .groupBy("doc_id", *W5)
+    g_doc = (
+        _ngram_rows(tk, order, words)
+        .groupBy("doc_id", *words)
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .persist()
     )
-    g5 = g5_doc.groupBy(*W5).agg(
-        F.sum("cnt").cast("long").alias("c5")
+
+    # The level tower, top-down. Level k's rows are distinct types
+    # keyed on the last k words, so the next level's modified count
+    # is a plain count(*) grouped by the shorter key.
+    cnt = g_doc.groupBy(*words).agg(
+        F.sum("cnt").cast("long").alias(f"c{order}")
     )
-
-    # Context totals / per-context type counts as WINDOWS over each
-    # level's own frame (r15 optimization, guide §2.4: a window
-    # partitioned by the same key as a preceding aggregation needs no
-    # second shuffle pair) — the former groupBy-ctx + join-back per
-    # level cost two exchanges of corpus-sized string-keyed tables
-    # each; the window costs one. The scoring chain below then joins
-    # only the four ENRICHED level frames (3 equi-joins instead of 8).
-    from pyspark.sql.window import Window
-
-    def _ctx_enriched(
-        frame: DataFrame, cnt: str, ctx_cols: list[str], lvl: str
-    ) -> DataFrame:
-        w = Window.partitionBy(*ctx_cols)
-        return frame.select(
+    levels: dict[int, DataFrame] = {}
+    for k in range(order, 1, -1):
+        key = words[order - k:]
+        w = Window.partitionBy(*key[:-1])
+        cols = [
             "*",
-            F.sum(cnt).over(w).cast("long").alias(f"ctx{lvl}c"),
-            F.count(F.lit(1)).over(w).cast("long").alias(f"t{lvl}"),
+            F.sum(f"c{k}").over(w).cast("long").alias(f"ctx{k}"),
+            F.count(F.lit(1)).over(w).cast("long").alias(f"t{k}"),
+        ]
+        if k == 2:
+            # continuation type count N1+(. wn)
+            cols.append(
+                F.count(F.lit(1))
+                .over(Window.partitionBy(words[-1]))
+                .cast("long")
+                .alias("ncw")
+            )
+        levels[k] = cnt.select(*cols).persist()
+        cnt = levels[k].groupBy(*key[1:]).agg(
+            F.count(F.lit(1)).cast("long").alias(f"c{k - 1}")
         )
 
-    # modified counts, one type-collapse per level (g5 rows are
-    # distinct types, so count(*) IS the distinct-left-context count)
-    g5e = _ctx_enriched(g5, "c5", ["w1", "w2", "w3", "w4"], "5").persist()
-    cc4 = g5e.groupBy("w2", "w3", "w4", "w5").agg(
-        F.count(F.lit(1)).cast("long").alias("cc4")
-    )
-    cc4e = _ctx_enriched(cc4, "cc4", ["w2", "w3", "w4"], "4").persist()
-    cc3 = cc4e.groupBy("w3", "w4", "w5").agg(
-        F.count(F.lit(1)).cast("long").alias("cc3")
-    )
-    cc3e = _ctx_enriched(cc3, "cc3", ["w3", "w4"], "3").persist()
-    cc2 = cc3e.groupBy("w4", "w5").agg(
-        F.count(F.lit(1)).cast("long").alias("cc2")
-    )
-    # continuation type count ncw5 = count over (w5) rides a second
-    # window on the same (small) cc2 frame
-    cc2e = _ctx_enriched(cc2, "cc2", ["w4"], "2").select(
-        "*",
-        F.count(F.lit(1))
-        .over(Window.partitionBy("w5"))
-        .cast("long")
-        .alias("ncw5"),
-    ).persist()
+    sc = levels[order]
+    for k in range(order - 1, 1, -1):
+        sc = sc.join(levels[k], list(words[order - k:]))
+    for k in levels:
+        sc = sc.crossJoin(F.broadcast(_coc(levels[k], k)))
 
-    def _coc(frame: DataFrame, cnt: str, lvl: str) -> DataFrame:
-        # count-of-counts + the tight lam-numerator bound max_t in
-        # ONE pass over the enriched frame (t{lvl} repeats within a
-        # context; its max is unaffected)
-        return frame.agg(
-            F.sum((F.col(cnt) == 1).cast("long")).cast("long").alias("_n1"),
-            (
-                F.sum((F.col(cnt) == 1).cast("long"))
-                + 2 * F.sum((F.col(cnt) == 2).cast("long"))
-            ).cast("long").alias("_dd"),
-            F.count(F.lit(1)).cast("long").alias(f"n{lvl}all"),
-            F.max(cnt).cast("long").alias(f"max_{cnt}"),
-            F.sum(cnt).cast("long").alias(f"sum_{cnt}"),
-            F.max(f"t{lvl}").cast("long").alias(f"max_t{lvl}"),
-        ).select(
-            F.when(F.col("_dd") == 0, F.lit(1).cast("long"))
-            .otherwise(F.col("_n1")).alias(f"dn{lvl}"),
-            F.when(F.col("_dd") == 0, F.lit(2).cast("long"))
-            .otherwise(F.col("_dd")).alias(f"dd{lvl}"),
-            f"n{lvl}all",
-            f"max_{cnt}",
-            f"sum_{cnt}",
-            f"max_t{lvl}",
+    guard = " OR ".join(
+        [f"GREATEST(max_c{k}, max_t{k}) > {max_safe} DIV dd{k}" for k in levels]
+        + [f"n2all > {max_safe}"]
+        + [f"dd{k} > {abs_max} DIV GREATEST(sum_c{k}, 1)" for k in levels]
+    )
+
+    def disc_lam(k: int) -> tuple[str, str]:
+        return (
+            f"(((c{k} * dd{k} - dn{k}) * {scale}) DIV (dd{k} * ctx{k}))",
+            f"(((dn{k} * t{k}) * {scale}) DIV (dd{k} * ctx{k}))",
         )
 
-    # tight lam-numerator bounds (r15): each level's dn*t*scale is
-    # bounded by dd*max_t*scale where max_t is that level's max
-    # per-context type count — the dn-vs-nall form false-trips on
-    # singleton-heavy corpora (this operator's own sf0.1 corpus has
-    # 225k singleton 5-gram types: dn5*n5all is astronomical while
-    # the largest REAL product is dd5 * 4 * scale)
-    m5 = _coc(g5e, "c5", "5")
-    m4 = _coc(cc4e, "cc4", "4")
-    m3 = _coc(cc3e, "cc3", "3")
-    m2 = _coc(cc2e, "cc2", "2").withColumnRenamed("n2all", "nall")
-
-    guard = (
-        f"GREATEST(max_c5, max_t5) > {max_safe} DIV dd5"
-        f" OR GREATEST(max_cc4, max_t4) > {max_safe} DIV dd4"
-        f" OR GREATEST(max_cc3, max_t3) > {max_safe} DIV dd3"
-        f" OR GREATEST(max_cc2, max_t2) > {max_safe} DIV dd2"
-        f" OR nall > {max_safe}"
-        f" OR dd5 > {abs_max} DIV GREATEST(sum_c5, 1)"
-        f" OR dd4 > {abs_max} DIV GREATEST(sum_cc4, 1)"
-        f" OR dd3 > {abs_max} DIV GREATEST(sum_cc3, 1)"
-        f" OR dd2 > {abs_max} DIV GREATEST(sum_cc2, 1)"
-    )
-    pl2 = (
-        f"(((cc2 * dd2 - dn2) * {scale}) DIV (dd2 * ctx2c))"
-        f" + (((((dn2 * t2) * {scale}) DIV (dd2 * ctx2c))"
-        f" * ncw5) DIV nall)"
-    )
-    pl3 = (
-        f"(((cc3 * dd3 - dn3) * {scale}) DIV (dd3 * ctx3c))"
-        f" + (((((dn3 * t3) * {scale}) DIV (dd3 * ctx3c))"
-        f" * ({pl2})) DIV {scale})"
-    )
-    pl4 = (
-        f"(((cc4 * dd4 - dn4) * {scale}) DIV (dd4 * ctx4c))"
-        f" + (((((dn4 * t4) * {scale}) DIV (dd4 * ctx4c))"
-        f" * ({pl3})) DIV {scale})"
-    )
-    pl5 = (
-        f"(((c5 * dd5 - dn5) * {scale}) DIV (dd5 * ctx5c))"
-        f" + (((((dn5 * t5) * {scale}) DIV (dd5 * ctx5c))"
-        f" * ({pl4})) DIV {scale})"
-    )
-    sc = (
-        g5e.join(cc4e, ["w2", "w3", "w4", "w5"])
-        .join(cc3e, ["w3", "w4", "w5"])
-        .join(cc2e, ["w4", "w5"])
-        .crossJoin(F.broadcast(m5))
-        .crossJoin(F.broadcast(m4))
-        .crossJoin(F.broadcast(m3))
-        .crossJoin(F.broadcast(m2))
-        .select(
-            *W5,
-            F.expr(
-                f"CASE WHEN {guard} THEN "
-                f"CAST(raise_error(CONCAT("
-                f"'kneser_ney_5gram_scores: count magnitudes would "
-                f"overflow count*{scale} in BIGINT; ', "
-                f"'re-run with scale=1000000 (ppm)')) AS BIGINT) "
-                f"ELSE GREATEST({pl5}, CAST(1 AS BIGINT)) END"
-            ).alias("p_ppb"),
-        )
-        .select(
-            *W5,
-            F.floor(
-                MICRO * F.log(F.lit(float(scale)) / F.col("p_ppb"))
-            ).cast("long").alias("s_micro"),
-        )
+    disc, lam = disc_lam(2)
+    pl = f"{disc} + (({lam} * ncw) DIV n2all)"
+    for k in range(3, order + 1):
+        disc, lam = disc_lam(k)
+        pl = f"{disc} + (({lam} * ({pl})) DIV {scale})"
+    sc = sc.select(
+        *words,
+        F.expr(
+            f"CASE WHEN {guard} THEN "
+            f"CAST(raise_error(CONCAT("
+            f"'kneser_ney_scores(order={order}): count magnitudes would "
+            f"overflow count*{scale} in BIGINT; ', "
+            f"'re-run with scale=1000000 (ppm)')) AS BIGINT) "
+            f"ELSE GREATEST({pl}, CAST(1 AS BIGINT)) END"
+        ).alias("p_ppb"),
+    ).select(
+        *words,
+        F.floor(
+            MICRO * F.log(F.lit(float(scale)) / F.col("p_ppb"))
+        ).cast("long").alias("s_micro"),
     )
 
     agg = (
-        g5_doc.join(sc, list(W5))
+        g_doc.join(sc, list(words))
         .groupBy("doc_id")
         .agg(
-            F.sum("cnt").cast("long").alias("n_5grams"),
+            F.sum("cnt").cast("long").alias(n_col),
             F.sum(F.col("cnt") * F.col("s_micro")).cast("long").alias(
                 "surprisal_micro"
             ),
@@ -919,11 +433,36 @@ def kneser_ney_5gram_plan(
         .select(
             "doc_id",
             "n_tokens",
-            F.coalesce(F.col("n_5grams"), F.lit(0).cast("long")).alias(
-                "n_5grams"
-            ),
+            F.coalesce(F.col(n_col), F.lit(0).cast("long")).alias(n_col),
             "surprisal_micro",
             "mean_surprisal_micro",
         )
     )
-    return out, [tk, g5_doc, g5e, cc4e, cc3e, cc2e]
+    return out, [tk, g_doc, *levels.values()]
+
+
+def _coc(level: DataFrame, k: int) -> DataFrame:
+    """Level k's 1-row model: count-of-counts -> the exact-rational
+    discount (dn{k}, dd{k}) with its independent (1, 2) fallback for a
+    level with no count-1/2 types, plus the guard bounds n{k}all,
+    max_c{k}, sum_c{k} and max_t{k} — one pass over the level frame
+    (t{k} repeats within a context; its max is unaffected)."""
+    c = F.col(f"c{k}")
+    n1 = F.sum((c == 1).cast("long"))
+    return level.agg(
+        n1.cast("long").alias("_n1"),
+        (n1 + 2 * F.sum((c == 2).cast("long"))).cast("long").alias("_dd"),
+        F.count(F.lit(1)).cast("long").alias(f"n{k}all"),
+        F.max(c).cast("long").alias(f"max_c{k}"),
+        F.sum(c).cast("long").alias(f"sum_c{k}"),
+        F.max(f"t{k}").cast("long").alias(f"max_t{k}"),
+    ).select(
+        F.when(F.col("_dd") == 0, F.lit(1).cast("long"))
+        .otherwise(F.col("_n1")).alias(f"dn{k}"),
+        F.when(F.col("_dd") == 0, F.lit(2).cast("long"))
+        .otherwise(F.col("_dd")).alias(f"dd{k}"),
+        f"n{k}all",
+        f"max_c{k}",
+        f"sum_c{k}",
+        f"max_t{k}",
+    )

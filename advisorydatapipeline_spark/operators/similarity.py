@@ -279,7 +279,7 @@ def embedding_near_dupes_pandas(
 
     out_schema = "id_a long, id_b long, cosine double"
 
-    def score_bucket(pdf: pd.DataFrame):
+    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame(columns=["id_a", "id_b", "cosine"])
         pdf = pdf.sort_values("vec_id" if id_col == "vec_id" else id_col)
@@ -642,7 +642,7 @@ def allpairs_cosine_blocked(
         F.col("_bp.bl").alias("_bl"), F.col("_bp.bh").alias("_bh"),
     )
 
-    def score_block_pair(pdf: pd.DataFrame):
+    def score_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return pd.DataFrame(columns=["id_a", "id_b", "cosine"])
         bl, bh = int(pdf["_bl"].iloc[0]), int(pdf["_bh"].iloc[0])

@@ -1468,13 +1468,11 @@ def kn_bigram_scores(spark, sf_dir):
     the discount D = n1/(n1+2n2) comes from the corpus's own
     count-of-counts, carried as an exact rational so the whole model
     is integer-ppb with three documented floor points the oracle
-    replays verbatim (operators/lm.py:kneser_ney_bigram_scores for
+    replays verbatim (operators/lm.py:kneser_ney_scores, order 2, for
     the scale + overflow-guard notes)."""
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_bigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
-    return kneser_ney_bigram_scores(load(spark, sf_dir, "documents"))
+    return kneser_ney_scores(load(spark, sf_dir, "documents"), 2)
 
 
 @query(
@@ -1586,13 +1584,11 @@ def kn_trigram_scores(spark, sf_dir):
     exact rational from that level's own count-of-counts with an
     independent degenerate (1,2) fallback. Five documented ppb floor
     points, one final float ln; the oracle replays every floor
-    verbatim (operators/lm.py:kneser_ney_trigram_scores for the
+    verbatim (operators/lm.py:kneser_ney_scores, order 3, for the
     scale + division-form overflow-guard notes)."""
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_trigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
-    return kneser_ney_trigram_scores(load(spark, sf_dir, "documents"))
+    return kneser_ney_scores(load(spark, sf_dir, "documents"), 3)
 
 
 # --- Kneser-Ney order 5 (KenLM's default order; r14 verdict item 8) --
@@ -1603,7 +1599,7 @@ def _kn5_oracle() -> str:
     modified type-count levels, continuation unigram — each level's
     rational discount from its own count-of-counts with the (1, 2)
     degenerate fallback; the nine ppb floor points mirror
-    operators/lm.kneser_ney_5gram_plan verbatim."""
+    operators/lm.kneser_ney_plan at order 5 verbatim."""
     pl2 = (
         "(((b2.cc2 * m2.dd2 - m2.dn2) * 1000000000)"
         " // (m2.dd2 * x2.ctx2c))"
@@ -1752,14 +1748,12 @@ def kn_5gram_scores(spark, sf_dir):
     level's own count-of-counts with an independent (1, 2) degenerate
     fallback. Nine documented ppb floor points, one final float ln;
     the oracle replays every floor verbatim
-    (operators/lm.py:kneser_ney_5gram_scores for the scale +
+    (operators/lm.py:kneser_ney_scores, order 5, for the scale +
     division-form overflow-guard notes — each level is one hash
     partial-agg over the level above; the corpus is read once)."""
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_5gram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
-    return kneser_ney_5gram_scores(load(spark, sf_dir, "documents"))
+    return kneser_ney_scores(load(spark, sf_dir, "documents"), 5)
 
 
 # --- Gopher quality rules (Rae et al. 2021 §A1.1) --------------------

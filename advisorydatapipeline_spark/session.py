@@ -65,6 +65,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # no [Stage N:> bars on stderr: they bury bench/gate output
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # saveAsTable target for bucketed tables (operators/bucketing):
         # keep it out of the repo/cwd

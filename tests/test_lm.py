@@ -193,9 +193,7 @@ def test_kneser_ney_matches_hand_computation(spark):
     documented ppb floor points)."""
     import math
 
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_bigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     docs = [
         (0, "the cat sat on the mat"),
@@ -206,7 +204,7 @@ def test_kneser_ney_matches_hand_computation(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         r["doc_id"]: r.asDict()
-        for r in kneser_ney_bigram_scores(df).collect()
+        for r in kneser_ney_scores(df, 2).collect()
     }
 
     # pure-Python model
@@ -267,15 +265,13 @@ def test_kneser_ney_degenerate_count_of_counts(spark):
     """A corpus whose every bigram repeats >= 3 times must fall back
     to the default discount D = 1/2 instead of dividing by zero (the
     sf0.1 synthetic-corpus lesson)."""
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_bigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     df = spark.createDataFrame(
         [(i, "x y x y x y x y") for i in range(3)],
         "doc_id long, text string",
     )
-    rows = kneser_ney_bigram_scores(df).collect()
+    rows = kneser_ney_scores(df, 2).collect()
     assert all(r["surprisal_micro"] is not None for r in rows)
     assert all(r["n_bigrams"] == 7 for r in rows)
 
@@ -339,9 +335,7 @@ def _kn_trigram_reference(docs, scale=1_000_000_000):
 
 
 def test_kn_trigram_matches_hand_computation(spark):
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_trigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     docs = [
         (0, "the cat sat on the mat and the cat ran"),
@@ -358,7 +352,7 @@ def test_kn_trigram_matches_hand_computation(spark):
             r["surprisal_micro"],
             r["mean_surprisal_micro"],
         )
-        for r in kneser_ney_trigram_scores(df).collect()
+        for r in kneser_ney_scores(df, 3).collect()
     }
     assert got == _kn_trigram_reference(docs)
     # this corpus exercises the REAL discount path at BOTH levels
@@ -381,9 +375,7 @@ def test_kn_trigram_degenerate_levels_fall_back(spark):
     zero."""
     from collections import Counter
 
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_trigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     # level-3 degenerate: every trigram type repeats >= 3 times
     docs_a = [(i, "x y z x y z x y z x y z") for i in range(4)]
@@ -417,7 +409,7 @@ def test_kn_trigram_degenerate_levels_fall_back(spark):
                 r["surprisal_micro"],
                 r["mean_surprisal_micro"],
             )
-            for r in kneser_ney_trigram_scores(df).collect()
+            for r in kneser_ney_scores(df, 3).collect()
         }
         assert got == _kn_trigram_reference(docs)
         assert all(v[2] is not None for v in got.values())
@@ -428,16 +420,14 @@ def test_kn_trigram_overflow_guard_fails_loud(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_trigram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     docs = [(0, "a b c a b c a b c"), (1, "a b c d e f")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     # max trigram count is 3 ('a b c'); shrink the safe window so the
     # max_c3 * dd3 product check trips (dd3 >= 1)
     with pytest.raises((PySparkException, Py4JJavaError)) as exc:
-        kneser_ney_trigram_scores(df, scale=(2**63 - 1) // 2).collect()
+        kneser_ney_scores(df, 3, scale=(2**63 - 1) // 2).collect()
     assert "scale=1000000" in str(exc.value)
     # ppm remediation matches the reference model at ppm
     got = {
@@ -447,7 +437,7 @@ def test_kn_trigram_overflow_guard_fails_loud(spark):
             r["surprisal_micro"],
             r["mean_surprisal_micro"],
         )
-        for r in kneser_ney_trigram_scores(df, scale=1_000_000).collect()
+        for r in kneser_ney_scores(df, 3, scale=1_000_000).collect()
     }
     assert got == _kn_trigram_reference(docs, scale=1_000_000)
 
@@ -549,9 +539,7 @@ def _kn5_collect(df_rows):
 
 
 def test_kn_5gram_matches_hand_computation(spark):
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_5gram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     docs = [
         (0, "the cat sat on the mat and the cat sat on the rug now"),
@@ -561,7 +549,7 @@ def test_kn_5gram_matches_hand_computation(spark):
         (4, ""),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = _kn5_collect(kneser_ney_5gram_scores(df).collect())
+    got = _kn5_collect(kneser_ney_scores(df, 5).collect())
     assert got == _kn5_reference(docs)
     # the corpus exercises the REAL discount path at every level
     from collections import Counter
@@ -583,9 +571,7 @@ def test_kn_5gram_degenerate_levels_fall_back(spark):
     (every suffix has 3 left contexts) while raw counts are all 1."""
     from collections import Counter
 
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_5gram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     # level-5 degenerate: 3-token period over >= 15 tokens -> each
     # distinct 5-gram appears >= 3 times within each doc set
@@ -618,7 +604,7 @@ def test_kn_5gram_degenerate_levels_fall_back(spark):
 
     for docs in (docs_a, docs_b):
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        got = _kn5_collect(kneser_ney_5gram_scores(df).collect())
+        got = _kn5_collect(kneser_ney_scores(df, 5).collect())
         assert got == _kn5_reference(docs)
         assert all(v[2] is not None for v in got.values())
 
@@ -628,17 +614,15 @@ def test_kn_5gram_overflow_guard_fails_loud(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PySparkException
 
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_5gram_scores,
-    )
+    from advisorydatapipeline_spark.operators.lm import kneser_ney_scores
 
     docs = [(0, "a b c d e " * 3), (1, "a b c d e f g h")]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     with pytest.raises((PySparkException, Py4JJavaError)) as exc:
-        kneser_ney_5gram_scores(df, scale=(2**63 - 1) // 2).collect()
+        kneser_ney_scores(df, 5, scale=(2**63 - 1) // 2).collect()
     assert "scale=1000000" in str(exc.value)
     # ppm remediation matches the reference model at ppm
     got = _kn5_collect(
-        kneser_ney_5gram_scores(df, scale=1_000_000).collect()
+        kneser_ney_scores(df, 5, scale=1_000_000).collect()
     )
     assert got == _kn5_reference(docs, scale=1_000_000)

@@ -259,6 +259,33 @@ def test_embedding_near_dupes_pandas_matches_expression(spark, sf_dir):
     assert a == b  # bit-identical, including the cosine doubles
 
 
+def test_grouped_pandas_scorers_have_inferable_hints(spark):
+    """applyInPandas infers the eval type from the scorer's type
+    hints and warns when it cannot; a scorer that annotates its
+    argument but not its return makes every build of the operator
+    warn. Building both grouped scorers must stay silent."""
+    import warnings
+
+    from advisorydatapipeline_spark.operators.similarity import (
+        allpairs_cosine_blocked,
+        embedding_near_dupes_pandas,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, -1.0]) for i in range(4)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        embedding_near_dupes_pandas(emb, cents, 0.5)
+        allpairs_cosine_blocked(emb, 0.5, n_blocks=2)
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
+
+
 def test_ivf_recall_against_brute_ground_truth(spark, sf_dir):
     """The IVF path is the designated 100 TB ANN strategy; prove its
     quality, not just that it runs: recall@k against the exact brute

@@ -103,15 +103,13 @@ NESTED_LOOP_OK = {
     "ams_f2_moment",
     # 1-row broadcast train-token-total scalar (unigram denominator)
     "jm_lambda_em_step",
-    # 1-row broadcast count-of-counts model scalar (dn, dd, nall)
+    # Kneser-Ney orders 2, 3 and 5 (operators/lm.kneser_ney_plan):
+    # one 1-row broadcast count-of-counts model row per discounted
+    # level (order - 1 rows, each carrying its level's max_t bound),
+    # audited on the lazy seam instead of the checkpointed Scan
+    # ExistingRDD
     "kn_bigram_scores",
-    # two 1-row broadcast count-of-counts model scalars (trigram +
-    # modified-bigram levels) + the max_t bound rows — visible now
-    # that the audit reads the lazy seam instead of the checkpointed
-    # Scan ExistingRDD
     "kn_trigram_scores",
-    # four 1-row model scalars + the combined max_t bound row
-    # (KenLM-default order 5)
     "kn_5gram_scores",
     # 1-row broadcast (Nt, Ns) smoothing-denominator scalar
     "dsir_importance_weights",
@@ -355,31 +353,14 @@ GLOBAL_WINDOW_OK = {
 # tests/test_explain_plans.py.
 
 
-def _seam_kn_bigram(spark, sf_dir):
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_bigram_plan,
-    )
-    from advisorydatapipeline_spark.queries.helpers import load
+def _seam_kn(order):
+    def seam(spark, sf_dir):
+        from advisorydatapipeline_spark.operators.lm import kneser_ney_plan
+        from advisorydatapipeline_spark.queries.helpers import load
 
-    return kneser_ney_bigram_plan(load(spark, sf_dir, "documents"))
+        return kneser_ney_plan(load(spark, sf_dir, "documents"), order)
 
-
-def _seam_kn_trigram(spark, sf_dir):
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_trigram_plan,
-    )
-    from advisorydatapipeline_spark.queries.helpers import load
-
-    return kneser_ney_trigram_plan(load(spark, sf_dir, "documents"))
-
-
-def _seam_kn_5gram(spark, sf_dir):
-    from advisorydatapipeline_spark.operators.lm import (
-        kneser_ney_5gram_plan,
-    )
-    from advisorydatapipeline_spark.queries.helpers import load
-
-    return kneser_ney_5gram_plan(load(spark, sf_dir, "documents"))
+    return seam
 
 
 def _seam_duplicate_spans(spark, sf_dir):
@@ -393,9 +374,9 @@ def _seam_duplicate_spans(spark, sf_dir):
 
 
 CHECKPOINTED = {
-    "kn_bigram_scores": _seam_kn_bigram,
-    "kn_trigram_scores": _seam_kn_trigram,
-    "kn_5gram_scores": _seam_kn_5gram,
+    "kn_bigram_scores": _seam_kn(2),
+    "kn_trigram_scores": _seam_kn(3),
+    "kn_5gram_scores": _seam_kn(5),
     "duplicate_spans_exact": _seam_duplicate_spans,
 }
 
