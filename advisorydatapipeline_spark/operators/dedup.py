@@ -287,37 +287,20 @@ def minhash_near_dupes(
 # --- SimHash -----------------------------------------------------------------
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16
-) -> DataFrame:
-    """Per-doc SimHash over distinct tokens: bit b is the sign of the
-    +1/-1 vote sum of token-hash bit b. Returns (id, simhash)."""
-    toked = df.select(F.col(id_col), F.array_distinct(tokens(text_col)).alias("_ts"))
-    toked = toked.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, id_col
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-doc 16-bit SimHash over distinct tokens: bit b is the sign
+    of the +1/-1 vote sum of token-hash bit b. Returns (id, simhash);
+    the one-block case of :func:`simhash64_blocks`."""
+    return simhash64_blocks(df, id_col, text_col, [16]).withColumnRenamed(
+        "block_0", "simhash"
     )
-    tok = toked.select(F.col(id_col), F.explode("_ts").alias("tok")).withColumn(
-        "h", hash64(F.col("tok"))
-    )
-    # raw-bit sums + count instead of +-1 CASE votes (see simhash64_bands)
-    bit_sums = [
-        F.expr(f"sum(shiftright(h, {b}) & 1)").alias(f"s_{b}")
-        for b in range(bits)
-    ]
-    agg = tok.groupBy(id_col).agg(*bit_sums, F.count("*").alias("n"))
-    sig = " + ".join(
-        f"(CASE WHEN 2 * s_{b} >= n THEN {2**b} ELSE 0 END)" for b in range(bits)
-    )
-    return agg.selectExpr(id_col, f"CAST({sig} AS BIGINT) AS simhash")
 
 
-def simhash_buckets(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16
-) -> DataFrame:
+def simhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Dedup by identical SimHash: one row per signature bucket with
     keeper id and population."""
     return (
-        simhash(df, id_col, text_col, bits)
+        simhash(df, id_col, text_col)
         .groupBy("simhash")
         .agg(F.min(id_col).alias("keep_id"), F.count("*").cast("long").alias("n_docs"))
     )
@@ -383,7 +366,8 @@ def simhash64_blocks(
     (bit ranges of the signature, widths summing to 64) instead of
     one assembled BIGINT — bit 63 would overflow a signed long, and
     the blocks are exactly what both the combination-key candidate
-    join and the XOR-popcount verification consume.
+    join and the XOR-popcount verification consume. ``widths=[16]``
+    is the 16-bit :func:`simhash` (bits 0-15 only).
 
     Bit sources: the portable md5 hash is 60 bits, so bits 0-31 come
     from ``hash64(tok)`` and bits 32-63 from ``hash64(tok || '#2')``
@@ -452,22 +436,6 @@ def simhash64_blocks(
         for bd, (s, w) in enumerate(zip(starts, widths))
     ]
     return agg.selectExpr(id_col, *block_exprs)
-
-
-def simhash64_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    bands: int = 4,
-    band_bits: int = 16,
-) -> DataFrame:
-    """Back-compat band view: equal-width blocks renamed band_*."""
-    out = simhash64_blocks(df, id_col, text_col, [band_bits] * bands)
-    return out.select(
-        id_col,
-        *[F.col(f"block_{bd}").alias(f"band_{bd}") for bd in range(bands)],
-    )
 
 
 def simhash64_near_dupes(

@@ -524,49 +524,23 @@ def encode_flac_fixture(doc_id: int) -> bytes:
 def decode_flac_stats(media_df):
     """Per-payload FULL FLAC decode via :func:`decode_flac` (frame
     walk, CRC verification, Rice decode, fixed-predictor
-    reconstruction); corrupt / non-FLAC payloads yield a NULL row
-    (``container = 'unknown'``), matching the other codec arms.
-    mapInPandas, narrow, Arrow-batched — payload bytes never
-    shuffle; 6 scalar columns leave the operator."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    schema = (
-        "media_id long, container string, sample_rate int, "
-        "n_frames int, n_samples long, sample_sum long, "
-        "sample_sqsum long"
+    reconstruction); NULL-row contract (operators/multimodal.py)."""
+    from advisorydatapipeline_spark.operators.multimodal import (
+        map_payloads,
+        unknown_row,
     )
 
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    sr, nf, samples = decode_flac(b)
-                    out.append(
-                        (
-                            row["media_id"],
-                            "flac",
-                            sr,
-                            nf,
-                            len(samples),
-                            sum(samples),
-                            sum(s * s for s in samples),
-                        )
-                    )
-                except ValueError:
-                    out.append(
-                        (row["media_id"], "unknown", None, None,
-                         None, None, None)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "container", "sample_rate", "n_frames",
-                    "n_samples", "sample_sum", "sample_sqsum",
-                ],
-            )
+    def decode(b: bytes) -> dict:
+        sr, nf, samples = decode_flac(b)
+        return {"container": "flac", "sample_rate": sr, "n_frames": nf,
+                "n_samples": len(samples), "sample_sum": sum(samples),
+                "sample_sqsum": sum(s * s for s in samples)}
 
-    return media_df.mapInPandas(op, schema)
+    return map_payloads(
+        media_df,
+        "media_id long, container string, sample_rate int, "
+        "n_frames int, n_samples long, sample_sum long, "
+        "sample_sqsum long",
+        decode,
+        null_row=unknown_row,
+    )

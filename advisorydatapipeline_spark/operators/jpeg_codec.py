@@ -540,44 +540,23 @@ def encode_jpeg_cellgrid(doc_id: int, *, group: int = 6) -> bytes:
 def decode_jpeg_stats(media_df):
     """Per-payload FULL baseline-JPEG pixel decode via
     :func:`decode_jpeg_pixels` (entropy decode -> dequant -> IDCT);
-    corrupt / non-JPEG / non-baseline payloads yield a NULL row
-    (``container = 'unknown'``), matching decode_bmp_stats.
-    mapInPandas, narrow, Arrow-batched — payload bytes never shuffle;
-    5 scalar columns leave the operator."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    schema = (
-        "media_id long, container string, width int, height int, "
-        "n_blocks int, pixel_sum long"
+    NULL-row contract (operators/multimodal.py), non-baseline
+    payloads included."""
+    from advisorydatapipeline_spark.operators.multimodal import (
+        map_payloads,
+        unknown_row,
     )
 
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "width": None,
-                    "height": None,
-                    "n_blocks": None,
-                    "pixel_sum": None,
-                }
-                try:
-                    w, h, img = decode_jpeg_pixels(b)
-                    rec.update(
-                        container="jpeg",
-                        width=w,
-                        height=h,
-                        n_blocks=((w + 7) // 8) * ((h + 7) // 8),
-                        pixel_sum=int(img.astype("int64").sum()),
-                    )
-                except ValueError:
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
+    def decode(b: bytes) -> dict:
+        w, h, img = decode_jpeg_pixels(b)
+        return {"container": "jpeg", "width": w, "height": h,
+                "n_blocks": ((w + 7) // 8) * ((h + 7) // 8),
+                "pixel_sum": int(img.astype("int64").sum())}
 
-    return media_df.mapInPandas(op, schema)
+    return map_payloads(
+        media_df,
+        "media_id long, container string, width int, height int, "
+        "n_blocks int, pixel_sum long",
+        decode,
+        null_row=unknown_row,
+    )

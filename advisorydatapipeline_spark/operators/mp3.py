@@ -28,8 +28,6 @@ contains no media code; this is north-star multimodal surface
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
 # MPEG-1 Layer III bitrate table, kbps, by 4-bit header index.
@@ -91,6 +89,16 @@ def parse_mp3_stream(payload: bytes) -> dict:
     is_vbr, mono, id3_len, byte_len``. ValueError on anything that
     is not a clean MPEG-1 Layer III stream (documented scope in the
     module header); frames must tile the payload exactly."""
+    try:
+        return _parse_mp3_stream_checked(payload)
+    except IndexError as exc:  # pragma: no cover - defensive
+        # unreachable by construction (every read is bounds-checked
+        # first), but the ValueError-only contract must hold even if
+        # a guard is wrong
+        raise ValueError(f"corrupt MP3 payload: {exc}") from exc
+
+
+def _parse_mp3_stream_checked(payload: bytes) -> dict:
     pos = 0
     id3_len = 0
     if payload[:3] == b"ID3":
@@ -164,50 +172,19 @@ def parse_mp3_stream(payload: bytes) -> dict:
 
 
 def decode_mp3_stats(media_df: DataFrame) -> DataFrame:
-    """Per-payload MP3 stream stats via :func:`parse_mp3_stream`.
-    Non-MP3 / corrupt payloads yield a NULL row
-    (``container = 'unknown'``) instead of raising.
-
-    mapInPandas, narrow, Arrow-batched: payload bytes never shuffle —
-    only 9 scalar columns leave the operator (the jpeg_header_stats
-    shape)."""
-    import pandas as pd
-
-    schema = (
-        "media_id long, container string, sample_rate int, "
-        "n_frames long, duration_samples long, bitrate_sum_kbps long, "
-        "is_vbr boolean, mono boolean, id3_len long, byte_len long"
+    """Per-payload MP3 stream stats via :func:`parse_mp3_stream`;
+    NULL-row contract that keeps ``byte_len``
+    (operators/multimodal.py)."""
+    from advisorydatapipeline_spark.operators.multimodal import (
+        map_payloads,
+        unknown_row_with_len,
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = (
-                    bytes(row["payload"])
-                    if row["payload"] is not None
-                    else b""
-                )
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "sample_rate": None,
-                    "n_frames": None,
-                    "duration_samples": None,
-                    "bitrate_sum_kbps": None,
-                    "is_vbr": None,
-                    "mono": None,
-                    "id3_len": None,
-                    "byte_len": len(b),
-                }
-                try:
-                    rec.update(parse_mp3_stream(b), container="mp3")
-                except (ValueError, IndexError):
-                    # IndexError is unreachable by construction (every
-                    # read is bounds-checked first) but the skip
-                    # contract must hold even if a guard is wrong
-                    rec["container"] = "unknown"
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, schema)
+    return map_payloads(
+        media_df,
+        "media_id long, container string, sample_rate int, "
+        "n_frames long, duration_samples long, bitrate_sum_kbps long, "
+        "is_vbr boolean, mono boolean, id3_len long, byte_len long",
+        lambda b: {**parse_mp3_stream(b), "container": "mp3"},
+        null_row=unknown_row_with_len,
+    )

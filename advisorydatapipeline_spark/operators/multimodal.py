@@ -33,6 +33,19 @@ H.264/VP9/AV1, non-baseline JPEG color) raises
 (import-try gate), or runs a clearly-marked deterministic fake when
 ``fake=True``.
 
+Every per-payload decode operator (here and in flac_codec, jpeg_codec,
+mp3, video and warc) is one :func:`map_payloads` call: a pure decode
+function of the payload bytes plus an output schema. Decode functions
+raise ONLY ``ValueError`` on corrupt input, and each operator follows
+one of two corruption contracts:
+
+- NULL-row: a corrupt payload yields one row with
+  ``container = 'unknown'`` and every other field NULL (an arm may
+  keep a field it can compute without decoding, such as ``byte_len``);
+- skip: a corrupt payload yields zero rows.
+
+Either way one bad object cannot kill a 100 TB scan.
+
 Scale design (100 TB of media): payloads never shuffle — every
 operator here is ``mapInPandas`` (narrow, per-partition, Arrow-
 batched). Metadata-only derivations project the binary column away
@@ -44,7 +57,7 @@ sizes; batch size is bounded by
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -64,6 +77,63 @@ DECODED_SCHEMA = (
     "media_id long, media_type string, width int, height int, "
     "n_frames int, sample_rate int"
 )
+
+
+def map_payloads(
+    media_df: DataFrame,
+    schema: str,
+    decode: Callable[[bytes], dict | list[dict]],
+    *,
+    null_row: Callable[[bytes], dict] | None = None,
+) -> DataFrame:
+    """Run ``decode`` over every ``(media_id, payload)`` row of
+    ``media_df`` as one narrow Arrow-batched ``mapInPandas`` hop; other
+    input columns are ignored and payload bytes never shuffle.
+
+    ``decode(payload_bytes)`` (a NULL payload arrives as ``b""``)
+    returns the row's fields other than ``media_id`` as a dict, or a
+    list of such dicts for a 1 -> N arm; schema fields it leaves out
+    are NULL. It raises only ``ValueError`` on corrupt input, and the
+    operator then follows one of two contracts:
+
+    - NULL-row (``null_row`` given): emit ``null_row(payload_bytes)``,
+      normally :func:`unknown_row` — ``container = 'unknown'``, every
+      other field NULL;
+    - skip (``null_row=None``): emit no row.
+
+    ``schema`` is a flat DDL string whose first column is
+    ``media_id``."""
+    names = [c.split()[0] for c in schema.split(",")]
+    fields = names[1:]
+
+    def decode_batches(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
+                b = bytes(payload) if payload is not None else b""
+                try:
+                    got = decode(b)
+                except ValueError:
+                    if null_row is None:
+                        continue
+                    got = null_row(b)
+                for rec in [got] if isinstance(got, dict) else got:
+                    out.append((media_id, *(rec.get(f) for f in fields)))
+            yield pd.DataFrame(out, columns=names)
+
+    return media_df.mapInPandas(decode_batches, schema)
+
+
+def unknown_row(payload: bytes) -> dict:
+    """NULL-row contract row: ``container = 'unknown'``, all else NULL."""
+    return {"container": "unknown"}
+
+
+def unknown_row_with_len(payload: bytes) -> dict:
+    """NULL-row contract row that keeps the payload's ``byte_len``."""
+    return {"container": "unknown", "byte_len": len(payload)}
 
 
 def attach_payload(
@@ -220,36 +290,19 @@ def decode_bmp_pixels(payload: bytes) -> tuple[int, int, int]:
 
 def decode_bmp_stats(media_df: DataFrame) -> DataFrame:
     """Per-payload full BMP pixel decode via
-    :func:`decode_bmp_pixels`; corrupt / non-BMP payloads yield a
-    NULL row (``container = 'unknown'``). mapInPandas, narrow."""
-    schema = (
+    :func:`decode_bmp_pixels`; NULL-row contract."""
+
+    def decode(b: bytes) -> dict:
+        w, h, ps = decode_bmp_pixels(b)
+        return {"container": "bmp", "width": w, "height": h, "pixel_sum": ps}
+
+    return map_payloads(
+        media_df,
         "media_id long, container string, width int, height int, "
-        "pixel_sum long"
+        "pixel_sum long",
+        decode,
+        null_row=unknown_row,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "width": None,
-                    "height": None,
-                    "pixel_sum": None,
-                }
-                try:
-                    w, h, ps = decode_bmp_pixels(b)
-                    rec.update(
-                        container="bmp", width=w, height=h, pixel_sum=ps
-                    )
-                except ValueError:
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, schema)
 
 
 # --- Audio fingerprint (energy-delta bits) + Hamming-banded near-dup -
@@ -261,6 +314,11 @@ def decode_bmp_stats(media_df: DataFrame) -> DataFrame:
 
 AUDIO_FP_BITS = 64
 AUDIO_FP_FRAMES = AUDIO_FP_BITS + 1  # 65 frames -> 64 deltas
+#: a 64-bit signature as four 16-bit blocks, the shape
+#: dedup.blocks_near_dupes consumes (audio fingerprint and image dHash)
+_BLOCKS_SCHEMA = (
+    "media_id long, block_0 long, block_1 long, block_2 long, block_3 long"
+)
 
 
 def _mix2(x: int) -> int:
@@ -319,50 +377,21 @@ def audio_fingerprint_blocks(
     """(media_id, block_0..block_3) 64-bit audio fingerprint per WAV
     payload: REAL RIFF/PCM frame decode (:func:`wav_frame_rows`),
     per-frame energy, bit f = [E(f+1) > E(f)] over the first 65
-    frames, packed as four 16-bit blocks. Corrupt / non-WAV / short
-    (<65 frames) payloads contribute zero rows.
+    frames, packed as four 16-bit blocks. Skip contract; short
+    (<65 frames) payloads contribute zero rows too."""
 
-    mapInPandas, narrow, Arrow-batched — payload bytes never shuffle;
-    5 scalar columns leave the operator."""
-    schema = (
-        "media_id long, block_0 long, block_1 long, "
-        "block_2 long, block_3 long"
-    )
+    def decode(b: bytes) -> list[dict]:
+        frames = wav_frame_rows(b, frame_len)
+        if len(frames) < AUDIO_FP_FRAMES:
+            return []
+        energies = [fr[2] for fr in frames[:AUDIO_FP_FRAMES]]
+        blocks = [0, 0, 0, 0]
+        for f in range(AUDIO_FP_BITS):
+            if energies[f + 1] > energies[f]:
+                blocks[f // 16] |= 1 << (f % 16)
+        return [{f"block_{k}": v for k, v in enumerate(blocks)}]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    frames = wav_frame_rows(b, frame_len)
-                except ValueError:
-                    continue
-                if len(frames) < AUDIO_FP_FRAMES:
-                    continue
-                energies = [fr[2] for fr in frames[:AUDIO_FP_FRAMES]]
-                blocks = [0, 0, 0, 0]
-                for f in range(AUDIO_FP_BITS):
-                    if energies[f + 1] > energies[f]:
-                        blocks[f // 16] |= 1 << (f % 16)
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "block_0": blocks[0],
-                        "block_1": blocks[1],
-                        "block_2": blocks[2],
-                        "block_3": blocks[3],
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "block_0", "block_1",
-                    "block_2", "block_3",
-                ],
-            )
-
-    return media_df.mapInPandas(op, schema)
+    return map_payloads(media_df, _BLOCKS_SCHEMA, decode)
 
 
 def audio_fp_near_dupes(
@@ -482,43 +511,13 @@ def bmp_dhash_blocks(payload: bytes) -> tuple[int, int, int, int]:
 
 def image_dhash_blocks(media_df: DataFrame) -> DataFrame:
     """(media_id, block_0..block_3) dHash signature per image payload
-    via :func:`bmp_dhash_blocks`. Corrupt / non-BMP / non-grid-sized
-    payloads contribute zero rows (corrupt-skip contract).
+    via :func:`bmp_dhash_blocks`. Skip contract (non-grid-sized
+    payloads are corrupt here)."""
 
-    mapInPandas, narrow, Arrow-batched — payload bytes never shuffle;
-    exactly 5 scalar columns leave the operator."""
-    schema = (
-        "media_id long, block_0 long, block_1 long, "
-        "block_2 long, block_3 long"
-    )
+    def decode(b: bytes) -> dict:
+        return {f"block_{k}": v for k, v in enumerate(bmp_dhash_blocks(b))}
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    b0, b1, b2, b3 = bmp_dhash_blocks(b)
-                except ValueError:
-                    continue
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "block_0": b0,
-                        "block_1": b1,
-                        "block_2": b2,
-                        "block_3": b3,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "block_0", "block_1",
-                    "block_2", "block_3",
-                ],
-            )
-
-    return media_df.mapInPandas(op, schema)
+    return map_payloads(media_df, _BLOCKS_SCHEMA, decode)
 
 
 def image_phash_near_dupes(
@@ -678,6 +677,18 @@ def encode_wav(
     return header + sample * n_samples
 
 
+_WAV_RATES = {1: 8000, 3: 11025, 5: 16000, 7: 44100}
+
+
+def encode_bmp_or_wav(i: int) -> bytes:
+    """Header-decode fixture for id ``i``: a solid BMP (even id) or a
+    constant PCM-WAV (odd id) whose header fields are id arithmetic
+    (the media_decode_stats / binary_media_files oracles replay it)."""
+    if i % 2 == 0:
+        return encode_bmp(4 + i % 32, 2 + i % 16, i % 251)
+    return encode_wav(_WAV_RATES[i % 8], 50 + i % 500, i % 100)
+
+
 def encode_wav_pattern(
     sample_rate: int, n_samples: int, seed: int = 0
 ) -> bytes:
@@ -709,46 +720,22 @@ def wav_frame_features(
     emits per-frame energy (sum of squared samples — exact BIGINT)
     and zero-crossing count (sign flips within the frame), the two
     canonical framewise audio features. 1 -> N row expansion; the
-    final (partial) frame is kept with its true sample count.
-    Corrupt / non-WAV payloads contribute zero rows.
+    final (partial) frame is kept with its true sample count. Skip
+    contract."""
 
-    mapInPandas, narrow, Arrow-batched — payload bytes never shuffle;
-    only 5 scalar columns per frame leave the operator."""
-    import struct
+    def decode(b: bytes) -> list[dict]:
+        return [
+            {"frame_idx": fi, "n_in_frame": n_in, "energy": energy,
+             "zero_crossings": zc}
+            for fi, n_in, energy, zc in wav_frame_rows(b, frame_len)
+        ]
 
-    schema = (
+    return map_payloads(
+        media_df,
         "media_id long, frame_idx int, n_in_frame int, "
-        "energy long, zero_crossings int"
+        "energy long, zero_crossings int",
+        decode,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    frames = wav_frame_rows(b, frame_len)
-                except ValueError:
-                    continue
-                for fi, n_in, energy, zc in frames:
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": fi,
-                            "n_in_frame": n_in,
-                            "energy": energy,
-                            "zero_crossings": zc,
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "n_in_frame",
-                    "energy", "zero_crossings",
-                ],
-            )
-
-    return media_df.mapInPandas(op, schema)
 
 
 def decode_wav(payload: bytes) -> tuple[int, int, int]:
@@ -1001,45 +988,21 @@ def _decode_png_checked(payload: bytes, struct, zlib):
 
 
 def decode_png_stats(media_df: DataFrame) -> DataFrame:
-    """Full-pixel PNG decode as a narrow Arrow-batched hop: payloads
-    in, 6 scalar stat columns out (bytes never shuffle). Non-PNG or
-    corrupt payloads yield a NULL-stat row instead of raising — one
-    bad object can't kill a 100 TB scan."""
-    schema = (
+    """Full-pixel PNG decode via :func:`decode_png`; NULL-row
+    contract."""
+
+    def decode(b: bytes) -> dict:
+        w, h, bd, ct, ps = decode_png(b)
+        return {"container": "png", "width": w, "height": h,
+                "bit_depth": bd, "color_type": ct, "pixel_sum": ps}
+
+    return map_payloads(
+        media_df,
         "media_id long, container string, width int, height int, "
-        "bit_depth int, color_type int, pixel_sum long"
+        "bit_depth int, color_type int, pixel_sum long",
+        decode,
+        null_row=unknown_row,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "width": None,
-                    "height": None,
-                    "bit_depth": None,
-                    "color_type": None,
-                    "pixel_sum": None,
-                }
-                try:
-                    w, h, bd, ct, ps = decode_png(b)
-                    rec.update(
-                        container="png",
-                        width=w,
-                        height=h,
-                        bit_depth=bd,
-                        color_type=ct,
-                        pixel_sum=ps,
-                    )
-                except ValueError:
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, schema)
 
 
 _GIF_SIGS = (b"GIF87a", b"GIF89a")
@@ -1373,45 +1336,22 @@ def sample_gif_frames(media_df: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL frame sampling over animated-GIF payloads (1 -> N row
     expansion): one output row per SAMPLED frame with its decoded
     pixel sum; unsampled frames are sub-block-skipped, never
-    decompressed. Corrupt / non-GIF payloads contribute zero rows
-    (the mapInPandas skip contract).
+    decompressed. Skip contract."""
 
-    mapInPandas, narrow, Arrow-batched — payload bytes never
-    shuffle; only 5 scalar columns per sampled frame leave."""
-    schema = (
+    def decode(b: bytes) -> list[dict]:
+        w, h, _nc, nf, frames = decode_gif_frames(b, every_n)
+        return [
+            {"frame_idx": fi, "n_frames": nf, "width": w, "height": h,
+             "pixel_sum": ps}
+            for fi, ps in frames
+        ]
+
+    return map_payloads(
+        media_df,
         "media_id long, frame_idx int, n_frames int, "
-        "width int, height int, pixel_sum long"
+        "width int, height int, pixel_sum long",
+        decode,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    w, h, _nc, nf, frames = decode_gif_frames(b, every_n)
-                except ValueError:
-                    continue
-                for fi, ps in frames:
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": fi,
-                            "n_frames": nf,
-                            "width": w,
-                            "height": h,
-                            "pixel_sum": ps,
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "n_frames",
-                    "width", "height", "pixel_sum",
-                ],
-            )
-
-    return media_df.mapInPandas(op, schema)
 
 
 def parse_gif_header(payload: bytes) -> tuple[int, int]:
@@ -1517,43 +1457,21 @@ def _decode_gif_checked(payload: bytes) -> tuple[int, int, int, int]:
 
 
 def decode_gif_stats(media_df: DataFrame) -> DataFrame:
-    """Full GIF decode as a narrow Arrow-batched hop (GIF twin of
-    :func:`decode_png_stats`): payloads in, 5 scalar stat columns
-    out (bytes never shuffle). Non-GIF or corrupt payloads yield a
-    NULL-stat row instead of raising."""
-    schema = (
+    """Full GIF decode via :func:`decode_gif` (GIF twin of
+    :func:`decode_png_stats`); NULL-row contract."""
+
+    def decode(b: bytes) -> dict:
+        w, h, nc, ps = decode_gif(b)
+        return {"container": "gif", "width": w, "height": h,
+                "n_colors": nc, "pixel_sum": ps}
+
+    return map_payloads(
+        media_df,
         "media_id long, container string, width int, height int, "
-        "n_colors int, pixel_sum long"
+        "n_colors int, pixel_sum long",
+        decode,
+        null_row=unknown_row,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "width": None,
-                    "height": None,
-                    "n_colors": None,
-                    "pixel_sum": None,
-                }
-                try:
-                    w, h, nc, ps = decode_gif(b)
-                    rec.update(
-                        container="gif",
-                        width=w,
-                        height=h,
-                        n_colors=nc,
-                        pixel_sum=ps,
-                    )
-                except ValueError:
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, schema)
 
 
 _JPEG_SOF_MARKERS = frozenset(
@@ -1657,112 +1575,66 @@ def parse_jpeg_header(payload: bytes) -> tuple[int, int, int, bool]:
 
 def decode_jpeg_header_stats(media_df: DataFrame) -> DataFrame:
     """Per-payload JPEG frame-header stats via
-    :func:`parse_jpeg_header`. Non-JPEG / corrupt payloads yield a
-    NULL row (``container = 'unknown'``) instead of raising.
+    :func:`parse_jpeg_header`; NULL-row contract that keeps
+    ``byte_len``."""
 
-    mapInPandas, narrow, Arrow-batched: payload bytes never shuffle —
-    only 7 scalar columns leave the operator."""
-    schema = (
+    def decode(b: bytes) -> dict:
+        w, h, nc, prog = parse_jpeg_header(b)
+        return {"container": "jpeg", "width": w, "height": h,
+                "n_components": nc, "progressive": prog,
+                "byte_len": len(b)}
+
+    return map_payloads(
+        media_df,
         "media_id long, container string, width int, height int, "
-        "n_components int, progressive boolean, byte_len long"
+        "n_components int, progressive boolean, byte_len long",
+        decode,
+        null_row=unknown_row_with_len,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "width": None,
-                    "height": None,
-                    "n_components": None,
-                    "progressive": None,
-                    "byte_len": len(b),
-                }
-                try:
-                    w, h, nc, prog = parse_jpeg_header(b)
-                    rec.update(
-                        container="jpeg",
-                        width=w,
-                        height=h,
-                        n_components=nc,
-                        progressive=prog,
-                    )
-                except ValueError:
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, schema)
 
 
 def decode_media_headers(media_df: DataFrame) -> DataFrame:
     """REAL media decode for codec-free container formats (round-5
     upgrade of the all-stub arm): BMP and PCM-WAV headers are fixed
     public byte layouts, so their dimensions/sample counts decode in
-    pure Python — no PIL/av needed. Unknown magic bytes yield a NULL
-    row (``container = 'unknown'``) instead of raising, so one bad
-    object can't kill a 100 TB scan.
+    pure Python — no PIL/av needed. NULL-row contract that keeps
+    ``byte_len``; unknown magic bytes are corrupt here.
 
     The PNG/GIF/JPEG arms are HEADER-ONLY: a well-formed header
     yields its container tag and dimensions without validating the
     pixel stream, so ``container = 'png'`` does not imply the body is
     decodable — use ``decode_png_stats`` / ``decode_gif_stats`` /
-    ``jpeg_codec.decode_jpeg_stats`` for that guarantee.
-
-    mapInPandas, narrow, Arrow-batched: payload bytes never shuffle.
+    ``jpeg_codec.decode_jpeg_stats`` for that guarantee. Every header
+    arm is O(1) or a marker-segment scan: no inflate, no LZW.
     """
-    schema = (
+
+    def decode(b: bytes) -> dict:
+        if b[:2] == b"BM":
+            w, h, _bpp = decode_bmp(b)
+            rec = {"container": "bmp", "width": w, "height": h}
+        elif b[:4] == b"RIFF":
+            sr, n, _bits = decode_wav(b)
+            rec = {"container": "wav", "sample_rate": sr, "n_samples": n}
+        elif b[:8] == _PNG_SIG:
+            w, h, _bd, _ct = parse_png_header(b)
+            rec = {"container": "png", "width": w, "height": h}
+        elif b[:6] in _GIF_SIGS:
+            w, h = parse_gif_header(b)
+            rec = {"container": "gif", "width": w, "height": h}
+        elif b[:2] == b"\xff\xd8":
+            w, h, _nc, _prog = parse_jpeg_header(b)
+            rec = {"container": "jpeg", "width": w, "height": h}
+        else:
+            raise ValueError("unknown container")
+        return {**rec, "byte_len": len(b)}
+
+    return map_payloads(
+        media_df,
         "media_id long, container string, width int, height int, "
-        "sample_rate int, n_samples int, byte_len long"
+        "sample_rate int, n_samples int, byte_len long",
+        decode,
+        null_row=unknown_row_with_len,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                rec = {
-                    "media_id": row["media_id"],
-                    "container": "unknown",
-                    "width": None,
-                    "height": None,
-                    "sample_rate": None,
-                    "n_samples": None,
-                    "byte_len": len(b),
-                }
-                try:
-                    if b[:2] == b"BM":
-                        w, h, _bpp = decode_bmp(b)
-                        rec.update(container="bmp", width=w, height=h)
-                    elif b[:4] == b"RIFF":
-                        sr, n, _bits = decode_wav(b)
-                        rec.update(
-                            container="wav", sample_rate=sr, n_samples=n
-                        )
-                    elif b[:8] == _PNG_SIG:
-                        # header arm stays O(1): IHDR fixed-offset
-                        # parse only — full pixel decode is
-                        # decode_png_stats' job
-                        w, h, _bd, _ct = parse_png_header(b)
-                        rec.update(container="png", width=w, height=h)
-                    elif b[:6] in _GIF_SIGS:
-                        # O(1) logical-screen parse — full LZW decode
-                        # is decode_gif_stats' job
-                        w, h = parse_gif_header(b)
-                        rec.update(container="gif", width=w, height=h)
-                    elif b[:2] == b"\xff\xd8":
-                        # marker-segment scan to the SOF frame header
-                        w, h, _nc, _prog = parse_jpeg_header(b)
-                        rec.update(container="jpeg", width=w, height=h)
-                except ValueError:
-                    pass
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, schema)
 
 
 def decode_media(media_df: DataFrame, *, fake: bool = False) -> DataFrame:

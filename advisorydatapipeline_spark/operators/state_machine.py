@@ -211,16 +211,19 @@ def register_udfs(spark) -> None:
 
 def transition_udf() -> Column:
     """DataFrame-API struct-returning UDF factory (reference:
-    state_transitions.py:187-213)."""
-    return F.udf(full_transition, TRANSITION_RESULT_SCHEMA)
+    state_transitions.py:187-213). ``useArrow=False`` pins the plain
+    pickled Python UDF: left unset, PySpark tries to infer an eval
+    type from type hints and warns on every call, and a tuple return
+    hint is rejected outright."""
+    return F.udf(full_transition, TRANSITION_RESULT_SCHEMA, useArrow=False)
 
 
 def with_transition_udf(df: DataFrame, from_col: str, to_col: str) -> DataFrame:
     """UDF-evaluated twin of :func:`with_transition` — used by the
     equivalence tests, not the hot path."""
-    valid = F.udf(is_valid_transition, T.BooleanType())
-    apply_ = F.udf(apply_transition, T.StringType())
-    reason = F.udf(transition_explanation, T.StringType())
+    valid = F.udf(is_valid_transition, T.BooleanType(), useArrow=False)
+    apply_ = F.udf(apply_transition, T.StringType(), useArrow=False)
+    reason = F.udf(transition_explanation, T.StringType(), useArrow=False)
     return (
         df.withColumn("transition_valid", valid(F.col(from_col), F.col(to_col)))
         .withColumn("new_state", apply_(F.col(from_col), F.col(to_col)))

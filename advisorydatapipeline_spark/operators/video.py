@@ -16,9 +16,9 @@ rest — is implementable end to end without any codec library.
   decode + IDCT; unsampled frames are skipped by chunk size alone
   (their bytes are never parsed — the skip-cost model a real frame
   sampler has, proven by a test that corrupts an unsampled frame).
-- :func:`avi_frame_samples` — the Spark operator: mapInPandas,
-  narrow, Arrow-batched; payload bytes never shuffle; 1 -> N row
-  expansion to (media_id, frame_idx, width, height, pixel_sum).
+- :func:`avi_frame_samples` — the Spark operator (a
+  ``multimodal.map_payloads`` arm): 1 -> N row expansion to
+  (media_id, frame_idx, width, height, pixel_sum).
 
 ValueError-only corruption contract like every codec arm. The IPV1
 section below (r14) adds a repo-canonical INTER-frame codec —
@@ -34,15 +34,13 @@ contains no media code; this is north-star multimodal surface
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from advisorydatapipeline_spark.operators.jpeg_codec import (
     decode_jpeg_pixels,
     encode_jpeg_baseline,
 )
+from advisorydatapipeline_spark.operators.multimodal import map_payloads
 
 # fixture geometry: 24x16 frames = 3x2 JPEG blocks, DC-only
 AVI_FRAME_W, AVI_FRAME_H = 24, 16
@@ -316,88 +314,40 @@ def ipframe_frame_samples(
     media_df: DataFrame, *, every_n: int = 3
 ) -> DataFrame:
     """Frame sampling over IPV1 payloads via
-    :func:`decode_ipframe_video`; corrupt / non-IPV1 payloads
-    contribute zero rows. mapInPandas, narrow, Arrow-batched —
-    payload bytes never shuffle; 7 scalar columns per sampled frame
-    leave the operator."""
-    schema = (
+    :func:`decode_ipframe_video`; skip contract
+    (operators/multimodal.py)."""
+
+    def decode(b: bytes) -> list[dict]:
+        return [
+            {"frame_idx": f, "is_iframe": isi, "width": w, "height": h,
+             "pixel_sum": ps, "resid_sum": rs}
+            for f, isi, w, h, ps, rs in decode_ipframe_video(b, every_n)
+        ]
+
+    return map_payloads(
+        media_df,
         "media_id long, frame_idx int, is_iframe int, width int, "
-        "height int, pixel_sum long, resid_sum long"
+        "height int, pixel_sum long, resid_sum long",
+        decode,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = (
-                    bytes(row["payload"])
-                    if row["payload"] is not None
-                    else b""
-                )
-                try:
-                    frames = decode_ipframe_video(b, every_n)
-                except ValueError:
-                    continue
-                for f, isi, w, h, ps, rs in frames:
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": f,
-                            "is_iframe": isi,
-                            "width": w,
-                            "height": h,
-                            "pixel_sum": ps,
-                            "resid_sum": rs,
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "is_iframe", "width",
-                    "height", "pixel_sum", "resid_sum",
-                ],
-            )
-
-    return media_df.mapInPandas(op, schema)
 
 
 def avi_frame_samples(
     media_df: DataFrame, *, every_n: int = 3
 ) -> DataFrame:
     """1 -> N frame-sample expansion over MJPEG-AVI payloads via
-    :func:`decode_avi_frames`; corrupt / non-AVI payloads contribute
-    zero rows. mapInPandas, narrow, Arrow-batched — payload bytes
-    never shuffle; 5 scalar columns per sampled frame leave."""
-    schema = (
+    :func:`decode_avi_frames`; skip contract
+    (operators/multimodal.py)."""
+
+    def decode(b: bytes) -> list[dict]:
+        return [
+            {"frame_idx": f, "width": w, "height": h, "pixel_sum": ps}
+            for f, w, h, ps in decode_avi_frames(b, every_n)
+        ]
+
+    return map_payloads(
+        media_df,
         "media_id long, frame_idx int, width int, height int, "
-        "pixel_sum long"
+        "pixel_sum long",
+        decode,
     )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    frames = decode_avi_frames(b, every_n)
-                except ValueError:
-                    continue
-                for f, w, h, ps in frames:
-                    out.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": f,
-                            "width": w,
-                            "height": h,
-                            "pixel_sum": ps,
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "pixel_sum",
-                ],
-            )
-
-    return media_df.mapInPandas(op, schema)

@@ -160,40 +160,24 @@ def warc_stats(records) -> tuple[int, int, str, int, int]:
 
 
 def decode_warc_stats(media_df):
-    """Per-payload WARC walk; corrupt payloads yield an 'unknown'
-    NULL row (codec-arm contract). mapInPandas, narrow,
-    Arrow-batched — payload bytes never shuffle."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    schema = (
-        "media_id long, container string, n_members int, "
-        "n_response int, target_uri string, http_status int, "
-        "payload_octets long"
+    """Per-payload WARC walk; NULL-row contract
+    (operators/multimodal.py)."""
+    from advisorydatapipeline_spark.operators.multimodal import (
+        map_payloads,
+        unknown_row,
     )
 
-    def op(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                b = bytes(row["payload"]) if row["payload"] is not None else b""
-                try:
-                    n, nr, uri, st, octets = warc_stats(parse_warc_gz(b))
-                    out.append(
-                        (row["media_id"], "warc", n, nr, uri, st, octets)
-                    )
-                except ValueError:
-                    out.append(
-                        (row["media_id"], "unknown", None, None, None,
-                         None, None)
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "container", "n_members", "n_response",
-                    "target_uri", "http_status", "payload_octets",
-                ],
-            )
+    def decode(b: bytes) -> dict:
+        n, nr, uri, st, octets = warc_stats(parse_warc_gz(b))
+        return {"container": "warc", "n_members": n, "n_response": nr,
+                "target_uri": uri, "http_status": st,
+                "payload_octets": octets}
 
-    return media_df.mapInPandas(op, schema)
+    return map_payloads(
+        media_df,
+        "media_id long, container string, n_members int, "
+        "n_response int, target_uri string, http_status int, "
+        "payload_octets long",
+        decode,
+        null_row=unknown_row,
+    )

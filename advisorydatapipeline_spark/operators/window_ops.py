@@ -44,16 +44,6 @@ def top_k_per_key(
     return out if keep_rank else out.drop(rank_col)
 
 
-def latest_per_key(
-    df: DataFrame, keys: Sequence[str], ts_col: str, tiebreak: str
-) -> DataFrame:
-    """Most-recent row per key — the reference's dedup specialized to
-    recency."""
-    return top_k_per_key(
-        df, keys, [F.col(ts_col).desc(), F.col(tiebreak).desc()], k=1
-    )
-
-
 def max_by_per_key(
     df: DataFrame,
     keys: Sequence[str],

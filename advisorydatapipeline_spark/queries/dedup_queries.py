@@ -278,9 +278,7 @@ def dedup_simhash(spark, sf_dir):
     variant is checked against; production dedup at scale is
     :func:`dedup_simhash64` (4x16-bit banded candidates, pigeonhole-
     exact to Hamming 3, XOR-popcount verify)."""
-    return simhash_buckets(
-        load(spark, sf_dir, "documents"), "doc_id", "text", bits=_SIMHASH_BITS
-    )
+    return simhash_buckets(load(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 # --- 64-bit SimHash, banded Hamming ------------------------------------------

@@ -21,8 +21,14 @@ Spark and DuckDB must agree *exactly*):
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
 from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -151,10 +157,40 @@ def ns_literal(iso: str) -> int:
     return int(dt.timestamp()) * 1_000_000_000
 
 
-def dec_sum(expr: str, alias: str, scale: int = 2) -> str:
-    """Portable exact sum of a monetary double: cast each value to
-    DECIMAL, sum exactly, return DOUBLE. Identical text runs on Spark
-    and DuckDB."""
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
-    )
+def doc_payloads(docs: DataFrame, encode: Callable[..., bytes]) -> DataFrame:
+    """``(media_id long, payload binary)`` fixture media: one narrow
+    ``mapInPandas`` hop calling ``encode(*row)`` on each row's values
+    (Python scalars, in column order); ``media_id`` is the first
+    column."""
+
+    def encode_batches(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf.iloc[:, 0],
+                    "payload": [
+                        encode(*row)
+                        for row in pdf.itertuples(index=False, name=None)
+                    ],
+                }
+            )
+
+    return docs.mapInPandas(encode_batches, "media_id long, payload binary")
+
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(tag: str) -> str:
+    """A directory for ``tag``'s scratch files, the same one for every
+    call in this process. All tags share one per-process root under
+    the temp dir (``adp_scratch_*``), which is removed at interpreter
+    exit, so no run leaves files behind and no process can read
+    another's stale files."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="adp_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, True)
+    d = os.path.join(_scratch_root, tag)
+    os.makedirs(d, exist_ok=True)
+    return d

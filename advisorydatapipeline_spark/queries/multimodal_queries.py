@@ -13,18 +13,18 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from advisorydatapipeline_spark.operators.multimodal import (
     attach_payload,
+    encode_bmp_or_wav,
     extract_metadata,
 )
 from advisorydatapipeline_spark.operators.ttl_cache import (
     pending_work,
     update_cache,
 )
-from advisorydatapipeline_spark.queries.helpers import load
+from advisorydatapipeline_spark.queries.helpers import doc_payloads, load
 from advisorydatapipeline_spark.registry import query
 
 def _doc_ids_parallel(spark, sf_dir):
@@ -41,6 +41,12 @@ def _doc_ids_parallel(spark, sf_dir):
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
+
+
+def _doc_media(spark, sf_dir, encode):
+    """Fixture media ``(media_id, encode(doc_id))`` over the
+    repartitioned doc_id stream."""
+    return doc_payloads(_doc_ids_parallel(spark, sf_dir), encode)
 
 
 TTL_CUTOFF = datetime(2024, 1, 30, tzinfo=timezone.utc)
@@ -227,31 +233,9 @@ def media_decode_stats(spark, sf_dir):
     """
     from advisorydatapipeline_spark.operators.multimodal import (
         decode_media_headers,
-        encode_bmp,
-        encode_wav,
     )
 
-    def encode(batches):
-        rates = {1: 8000, 3: 11025, 5: 16000, 7: 44100}
-        for pdf in batches:
-            payloads = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 2 == 0:
-                    payloads.append(
-                        encode_bmp(4 + d % 32, 2 + d % 16, d % 251)
-                    )
-                else:
-                    payloads.append(
-                        encode_wav(rates[d % 8], 50 + d % 500, d % 100)
-                    )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
-    return decode_media_headers(media)
+    return decode_media_headers(_doc_media(spark, sf_dir, encode_bmp_or_wav))
 
 
 N_MEDIA_FILES = 100
@@ -265,26 +249,15 @@ def _media_fixture_dir() -> str:
     import os
     import tempfile
 
-    from advisorydatapipeline_spark.operators.multimodal import (
-        encode_bmp,
-        encode_wav,
-    )
-
     d = os.path.join(tempfile.gettempdir(), "adp_media_files_v1")
     marker = os.path.join(d, "_COMPLETE")
     if os.path.exists(marker):
         return d
     os.makedirs(d, exist_ok=True)
-    rates = {1: 8000, 3: 11025, 5: 16000, 7: 44100}
     for i in range(N_MEDIA_FILES):
-        if i % 2 == 0:
-            path = os.path.join(d, f"media_{i:05d}.bmp")
-            payload = encode_bmp(4 + i % 32, 2 + i % 16, i % 251)
-        else:
-            path = os.path.join(d, f"media_{i:05d}.wav")
-            payload = encode_wav(rates[i % 8], 50 + i % 500, i % 100)
-        with open(path, "wb") as f:
-            f.write(payload)
+        ext = "bmp" if i % 2 == 0 else "wav"
+        with open(os.path.join(d, f"media_{i:05d}.{ext}"), "wb") as f:
+            f.write(encode_bmp_or_wav(i))
     open(marker, "w").close()
     return d
 
@@ -399,22 +372,9 @@ def png_decode_stats(spark, sf_dir):
         encode_png,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_png(
-                            4 + int(d) % 16, 2 + int(d) % 8, int(d) % 97
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(
+        spark, sf_dir, lambda d: encode_png(4 + d % 16, 2 + d % 8, d % 97)
+    )
     return decode_png_stats(media)
 
 
@@ -470,22 +430,9 @@ def gif_decode_stats(spark, sf_dir):
         encode_gif,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_gif(
-                            4 + int(d) % 16, 2 + int(d) % 8, int(d) % 97
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(
+        spark, sf_dir, lambda d: encode_gif(4 + d % 16, 2 + d % 8, d % 97)
+    )
     return decode_gif_stats(media)
 
 
@@ -546,25 +493,16 @@ def gif_frame_sampling(spark, sf_dir):
         sample_gif_frames,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_gif_animated(
-                            4 + int(d) % 16,
-                            2 + int(d) % 8,
-                            int(d) % 97,
-                            2 + int(d) % 5,
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(
+        spark,
+        sf_dir,
+        lambda d: encode_gif_animated(
+            4 + d % 16,
+            2 + d % 8,
+            d % 97,
+            2 + d % 5,
+        ),
+    )
     return sample_gif_frames(media, every_n=2)
 
 
@@ -611,22 +549,11 @@ def bmp_pixel_stats(spark, sf_dir):
         encode_bmp_gradient,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_bmp_gradient(
-                            4 + int(d) % 16, 2 + int(d) % 8, int(d) % 97
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(
+        spark,
+        sf_dir,
+        lambda d: encode_bmp_gradient(4 + d % 16, 2 + d % 8, d % 97),
+    )
     return decode_bmp_stats(media)
 
 
@@ -707,20 +634,7 @@ def image_phash_neardup(spark, sf_dir):
         image_phash_near_dupes,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_bmp_cellgrid(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_bmp_cellgrid)
     return image_phash_near_dupes(media, max_hamming=3)
 
 
@@ -772,22 +686,11 @@ def wav_frame_energy(spark, sf_dir):
         wav_frame_features,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_wav_pattern(
-                            16000, 200 + int(d) % 300, int(d) % 97
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(
+        spark,
+        sf_dir,
+        lambda d: encode_wav_pattern(16000, 200 + d % 300, d % 97),
+    )
     return wav_frame_features(media, frame_len=100)
 
 
@@ -845,19 +748,7 @@ def avi_mjpeg_frame_sampling(spark, sf_dir):
         encode_avi_mjpeg,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_avi_mjpeg(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_avi_mjpeg)
     return avi_frame_samples(media, every_n=3)
 
 
@@ -934,20 +825,7 @@ def video_pframe_decode(spark, sf_dir):
         ipframe_frame_samples,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_ipframe_video(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_ipframe_video)
     return ipframe_frame_samples(media, every_n=3)
 
 
@@ -1020,20 +898,7 @@ def audio_fingerprint_neardup(spark, sf_dir):
         encode_wav_bitwalk,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_wav_bitwalk(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_wav_bitwalk)
     return audio_fp_near_dupes(media, max_hamming=3)
 
 
@@ -1082,20 +947,7 @@ def jpeg_pixel_stats(spark, sf_dir):
         encode_jpeg_cellgrid,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_jpeg_cellgrid(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_jpeg_cellgrid)
     return decode_jpeg_stats(media)
 
 
@@ -1134,25 +986,16 @@ def jpeg_header_stats(spark, sf_dir):
         encode_jpeg,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_jpeg(
-                            16 + int(d) % 240,
-                            16 + int(d) % 120,
-                            1 + 2 * (int(d) % 2),
-                            int(d) % 3 == 0,
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(
+        spark,
+        sf_dir,
+        lambda d: encode_jpeg(
+            16 + d % 240,
+            16 + d % 120,
+            1 + 2 * (d % 2),
+            d % 3 == 0,
+        ),
+    )
     return decode_jpeg_header_stats(media)
 
 
@@ -1275,19 +1118,7 @@ def mp3_frame_stats(spark, sf_dir):
         encode_mp3_stream,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_mp3_stream(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_mp3_stream)
     return decode_mp3_stats(media)
 
 
@@ -1340,20 +1171,7 @@ def flac_stream_stats(spark, sf_dir):
         encode_flac_fixture,
     )
 
-    def encode(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [
-                        encode_flac_fixture(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    docs = _doc_ids_parallel(spark, sf_dir)
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = _doc_media(spark, sf_dir, encode_flac_fixture)
     return decode_flac_stats(media)
 
 

@@ -12,24 +12,16 @@ defect in either direction breaks the hash.
 from __future__ import annotations
 
 import itertools
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from advisorydatapipeline_spark.queries.helpers import load
+from advisorydatapipeline_spark.queries.helpers import load, scratch_dir
 from advisorydatapipeline_spark.registry import query
 from advisorydatapipeline_spark.sources.io import read_table
 
-_scratch: dict[str, str] = {}
 _stream_uniq = itertools.count()
-
-
-def _dir(tag: str) -> str:
-    if tag not in _scratch:
-        _scratch[tag] = tempfile.mkdtemp(prefix=f"adp_fmt_{tag}_")
-    return _scratch[tag]
 
 
 NATION_SCHEMA = T.StructType(
@@ -57,7 +49,7 @@ SUPPLIER_SCHEMA = T.StructType(
 def csv_scan_roundtrip(spark, sf_dir):
     """S4: schema'd CSV scan (header on, explicit schema — no
     inference job at scale) proven by parquet -> CSV -> read-back."""
-    path = _dir("csv")
+    path = scratch_dir("csv")
     load(spark, sf_dir, "nation").write.mode("overwrite").option(
         "header", True
     ).csv(path)
@@ -72,7 +64,7 @@ def json_scan_roundtrip(spark, sf_dir):
     """S3: schema'd JSON-lines scan proven by parquet -> JSON ->
     read-back. Doubles survive because Spark prints round-trippable
     repr (shortest-repr) and parses exactly."""
-    path = _dir("json")
+    path = scratch_dir("json")
     load(spark, sf_dir, "supplier").write.mode("overwrite").json(path)
     return read_table(spark, path, SUPPLIER_SCHEMA, fmt="json")
 
@@ -109,7 +101,7 @@ def multipath_partitioned_scan(spark, sf_dir):
     # scratch keyed per sf_dir: a session may run several scale
     # factors (bench warms at sf0.001 then times sf0.1)
     tag = "multipath_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     marker = Path(base) / "_staged"
     if not marker.exists():
         _load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
@@ -172,7 +164,7 @@ def _derby_nation_url(spark, sf_dir) -> str:
     """Seed (once per sf_dir) and return the embedded-Derby URL
     holding the nation table as ``nation_jdbc``."""
     tag = "derby_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     url = f"jdbc:derby:{base}/db;create=true"
     marker = Path(base) / "_seeded"
     if not marker.exists():
@@ -280,7 +272,7 @@ def advisory_datasource_scan(spark, sf_dir):
     from advisorydatapipeline_spark.sources.advisory_source import register
 
     tag = "advjson_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     path = Path(base) / "advisories.json"
     if not path.exists():
         rows = (
@@ -329,7 +321,7 @@ def orc_scan_roundtrip(spark, sf_dir):
     Avro is the one mainstream format not proven live here: its jar is
     an external Spark module not present in this container (read_table
     gains it for free via the generic format passthrough)."""
-    path = _dir("orc")
+    path = scratch_dir("orc")
     load(spark, sf_dir, "customer").write.mode("overwrite").orc(path)
     return read_table(spark, path, CUSTOMER_SCHEMA, fmt="orc")
 
@@ -362,7 +354,7 @@ def federated_union_scan(spark, sf_dir):
     cols = ["n_nationkey", "n_name", "n_regionkey"]
     pq = load(spark, sf_dir, "nation").select(*cols)
 
-    csv_path = _dir("fed_csv_" + sf_dir.strip("/").replace("/", "_"))
+    csv_path = scratch_dir("fed_csv_" + sf_dir.strip("/").replace("/", "_"))
     if not (Path(csv_path) / "_SUCCESS").exists():
         pq.write.mode("overwrite").option("header", True).csv(csv_path)
     csv = read_table(spark, csv_path, NATION_SCHEMA, fmt="csv", header=True)
@@ -405,7 +397,7 @@ def compact_small_files(spark, sf_dir):
     downstream per-user scans skip files. ``maxRecordsPerFile`` is
     the knob that bounds file size when a single range is hot."""
     tag = "compact_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     small = f"{base}/small"
     compacted = f"{base}/compacted"
     marker = Path(base) / "_done"
@@ -448,7 +440,7 @@ def user_erasure_rewrite(spark, sf_dir):
     lakehouse table this becomes DELETE WHERE + vacuum; on raw
     parquet the rewrite IS the delete."""
     tag = "erase_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     out_path = f"{base}/events_clean"
     marker = Path(base) / "_done"
     cols = ["event_id", "user_id", "event_type", "value"]
@@ -484,7 +476,7 @@ def schema_evolution_scan(spark, sf_dir):
     table relies on (mergeSchema is a one-off footer merge; pin the
     unified schema in the table definition for steady-state scans)."""
     tag = "evolve_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     path = f"{base}/nation_evolving"
     marker = Path(base) / "_done"
     if not marker.exists():
@@ -523,7 +515,7 @@ def advisory_stream_scan(spark, sf_dir):
     from advisorydatapipeline_spark.sources.advisory_source import register
 
     tag = "advjson_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     path = Path(base) / "advisories.json"
     if not path.exists():
         rows = (
@@ -580,7 +572,7 @@ def xml_scan_roundtrip(spark, sf_dir):
     from xml.sax.saxutils import escape as _esc
 
     tag = "xml_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     path = Path(base) / "nation.xml"
     if not path.exists():
         rows = (
@@ -629,7 +621,7 @@ def binary_file_scan(spark, sf_dir):
     this reads object-store blobs directly; the decode stage downstream
     is operators/multimodal.py."""
     tag = "bin_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     marker = Path(base) / ".staged"
     if not marker.exists():
         rows = (
@@ -678,7 +670,7 @@ def log_parse_text(spark, sf_dir):
     repr round-trips exactly, and the quantized-cents sum keeps the
     aggregate engine-exact."""
     tag = "log_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     path = Path(base) / "events.log"
     if not path.exists():
         rows = (
@@ -743,7 +735,7 @@ def dpp_partitioned_join(spark, sf_dir):
     tests/test_explain_plans.py pins `dynamicpruning` in the scan;
     this entry value-checks the pruned result."""
     tag = "dpp_" + sf_dir.strip("/").replace("/", "_")
-    base = _dir(tag)
+    base = scratch_dir(tag)
     fact_dir = Path(base) / "events_by_type"
     if not fact_dir.exists():
         load(spark, sf_dir, "events").write.partitionBy(

@@ -17,14 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from advisorydatapipeline_spark.queries.helpers import load
+from advisorydatapipeline_spark.queries.helpers import load, scratch_dir
 from advisorydatapipeline_spark.registry import query
 
 US_PER_DAY = 86_400_000_000
-
-#: per-process scratch for the incremental-rollup staging (see
-#: incremental_rollup_merge — never a fixed /tmp path)
-_incr_scratch: dict[str, str] = {}
 US_PER_HOUR = 3_600_000_000
 
 
@@ -311,16 +307,14 @@ def incremental_rollup_merge(spark, sf_dir):
     the raw table, proving merge == direct. Value sums are quantized
     to integer cents so partial-then-merge is bit-identical to
     one-shot."""
-    import tempfile
     from pathlib import Path
 
-    # fresh per process (never a fixed /tmp path): a marker surviving
+    # per-process scratch (never a fixed /tmp path): a marker surviving
     # across processes would serve STALE partials if the source data
     # is ever regenerated between runs
-    tag = "incr_rollup_" + sf_dir.strip("/").replace("/", "_")
-    if tag not in _incr_scratch:
-        _incr_scratch[tag] = tempfile.mkdtemp(prefix=f"adp_{tag}_")
-    base = Path(_incr_scratch[tag])
+    base = Path(
+        scratch_dir("incr_rollup_" + sf_dir.strip("/").replace("/", "_"))
+    )
     daily_path = str(base / "daily")
     marker = base / "_staged"
     if not marker.exists():

@@ -20,12 +20,12 @@ import contextlib
 import itertools
 import os
 import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from advisorydatapipeline_spark.queries.helpers import scratch_dir
 from advisorydatapipeline_spark.registry import ORACLES, query
 from advisorydatapipeline_spark.streaming.pipeline import (
     read_event_stream,
@@ -34,18 +34,17 @@ from advisorydatapipeline_spark.streaming.pipeline import (
 
 SESSION_GAP_US = 3_600 * 1_000_000  # 1 hour, mirrors session_window gap
 
-_staged: dict[str, str] = {}
 _uniq = itertools.count()
 
 
 def _events_stream_dir(sf_dir: str) -> str:
     """FileStreamSource needs a directory; stage the single-file
     events table into a scratch dir once per sf_dir."""
-    if sf_dir not in _staged:
-        d = tempfile.mkdtemp(prefix="adp_events_stream_")
-        shutil.copy(f"{sf_dir}/events.parquet", Path(d) / "part-0.parquet")
-        _staged[sf_dir] = d
-    return _staged[sf_dir]
+    d = scratch_dir("events_stream_" + sf_dir.strip("/").replace("/", "_"))
+    part = Path(d) / "part-0.parquet"
+    if not part.exists():
+        shutil.copy(f"{sf_dir}/events.parquet", part)
+    return d
 
 
 #: Target input bytes per streaming STATE partition (r15 optimization,
@@ -588,8 +587,7 @@ def streaming_upsert_merge(spark, sf_dir):
     )
 
     d = _events_stream_dir(sf_dir)
-    run = next(_uniq)
-    base = tempfile.mkdtemp(prefix=f"adp_upsert_{run}_")
+    base = scratch_dir(f"upsert_{next(_uniq)}")
     prod = f"{base}/prod"
     ckpt = f"{base}/ckpt"
     schema = T.StructType(

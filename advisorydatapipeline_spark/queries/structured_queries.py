@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from advisorydatapipeline_spark.queries.helpers import load
+from advisorydatapipeline_spark.queries.helpers import load, scratch_dir
 from advisorydatapipeline_spark.registry import query
 
 
@@ -276,14 +276,12 @@ def sql_dml_roundtrip(spark, sf_dir):
     Fresh external LOCATION per run keeps the query idempotent under
     any session."""
     import shutil as _sh
-    import tempfile as _tf
 
     load(spark, sf_dir, "orders").createOrReplaceTempView("_ord_dml")
-    # stable location per sf, wiped before recreate: a fresh mkdtemp
-    # per call would leak one full orders copy per invocation (DROP
+    # stable location per sf, wiped before recreate: a fresh location
+    # per call would keep one full orders copy per invocation (DROP
     # on an external table leaves its files behind)
-    tag = sf_dir.strip("/").replace("/", "_")
-    loc = f"{_tf.gettempdir()}/adp_dml_{tag}"
+    loc = f"{scratch_dir('dml')}/{sf_dir.strip('/').replace('/', '_')}"
     spark.sql("DROP TABLE IF EXISTS adp_dml_orders")
     _sh.rmtree(loc, ignore_errors=True)
     spark.sql(

@@ -23,7 +23,7 @@ from advisorydatapipeline_spark.operators.html import (
     link_chars,
     strip_tags,
 )
-from advisorydatapipeline_spark.queries.helpers import load
+from advisorydatapipeline_spark.queries.helpers import doc_payloads, load
 from advisorydatapipeline_spark.registry import query
 
 
@@ -1015,8 +1015,6 @@ def warc_record_stats(spark, sf_dir):
     Scale shape: encode and decode are narrow Arrow-batched
     mapInPandas hops over the repartitioned id stream; compressed
     payload bytes never shuffle; 6 scalar columns leave."""
-    import pandas as pd
-
     from advisorydatapipeline_spark.operators.warc import (
         build_warc_gz,
         decode_warc_stats,
@@ -1030,21 +1028,15 @@ def warc_record_stats(spark, sf_dir):
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for d, h in zip(pdf["doc_id"], pdf["html"]):
-                b = build_warc_gz(int(d), h.encode("utf-8"))
-                if int(d) % 9 == 0:
-                    ba = bytearray(b)
-                    ba[30] ^= 0xFF  # inside the first deflate member
-                    b = bytes(ba)
-                payloads.append(b)
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "payload": payloads}
-            )
+    def encode(d: int, html: str) -> bytes:
+        b = build_warc_gz(d, html.encode("utf-8"))
+        if d % 9 == 0:
+            ba = bytearray(b)
+            ba[30] ^= 0xFF  # inside the first deflate member
+            b = bytes(ba)
+        return b
 
-    media = docs.mapInPandas(encode, "media_id long, payload binary")
+    media = doc_payloads(docs, encode)
     return decode_warc_stats(media)
 
 

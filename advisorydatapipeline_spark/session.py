@@ -51,7 +51,8 @@ def get_spark(
         # partitions and serialized every downstream round
         # (canonical_corpus 2.5 -> 5.7 s, dedup_clusters 2.9 -> 4.7 s
         # same box). The graph operators size their cached loop
-        # frames explicitly instead (operators/graph.py loop_parts).
+        # frames explicitly instead (operators/graph.py
+        # _compact_loop_frame, LOOP_ROWS_PER_PART).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

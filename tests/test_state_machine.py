@@ -126,3 +126,29 @@ class TestNativeUdfEquivalence:
         n = {tuple(r) for r in native.select(cols).collect()}
         u = {tuple(r) for r in via_udf.select(cols).collect()}
         assert n == u
+
+    def test_udfs_are_plain_batched_python_udfs(self, spark):
+        """The UDF builders pin ``useArrow=False``: no eval-type
+        inference (and its warning), and every UDF runs as a plain
+        pickled batch UDF (evalType 100, SQL_BATCHED_UDF)."""
+        import warnings
+
+        from pyspark.util import PythonEvalType
+
+        from advisorydatapipeline_spark.operators.state_machine import (
+            transition_udf,
+        )
+
+        df = spark.createDataFrame(
+            [("unknown", "fixed")], "from_state string, to_state string"
+        )
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            udf = transition_udf()
+            out = with_transition_udf(df, "from_state", "to_state")
+        assert not [
+            w for w in caught if "Cannot infer the eval type" in str(w.message)
+        ]
+        assert udf.evalType == PythonEvalType.SQL_BATCHED_UDF == 100
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BatchEvalPython" in plan and "ArrowEvalPython" not in plan

@@ -32,10 +32,9 @@ def _scan(spark, text: str):
     # run the registry entry against a one-doc scratch dir
     import tempfile
 
-    d = tempfile.mkdtemp(prefix="adp_secret_")
-    df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    row = secret_entropy_scrub(spark, d).collect()[0]
-    return row
+    with tempfile.TemporaryDirectory(prefix="adp_secret_") as d:
+        df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
+        return secret_entropy_scrub(spark, d).collect()[0]
 
 
 def test_low_entropy_shape_lookalike_rejected(spark):
