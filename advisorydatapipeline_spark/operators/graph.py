@@ -26,10 +26,11 @@ from any node to its component's minimum node (at least 1).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from advisorydatapipeline_spark.sources.io import scratch_dir
 
 #: Broadcast-pin bound for the per-iteration small side (rank/label/
 #: alive/frontier tables — all provably <= node count). Two-long rows
@@ -99,17 +100,15 @@ def _cut_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     long-running iterative job should pay the write to reliable
     storage instead: ``reliable=True`` uses ``checkpoint()`` against
     the context's checkpoint dir (set from ``$SPARK_GRAFT_CHECKPOINT``
-    or a temp dir if the caller hasn't configured one).
+    or, failing that, the per-process :func:`scratch_dir` removed at
+    interpreter exit, if the caller hasn't configured one).
     """
     if not reliable:
         return df.localCheckpoint()
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
         sc.setCheckpointDir(
-            os.environ.get(
-                "SPARK_GRAFT_CHECKPOINT",
-                tempfile.mkdtemp(prefix="adp_ckpt_"),
-            )
+            os.environ.get("SPARK_GRAFT_CHECKPOINT") or scratch_dir("ckpt")
         )
     return df.checkpoint()
 
@@ -271,38 +270,40 @@ def pagerank_quantized(
     """
     und = _loop_edges(edges, src, dst, "a").persist()
     base = (1 * PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
-    # und is already hash-partitioned by "a", so this aggregate adds
-    # no exchange
-    ranks = und.groupBy("a").agg(
-        F.lit(PR_SCALE).cast("long").alias("rank"),
-        F.count(F.lit(1)).cast("long").alias("deg"),
-    )
-    # node count measured ONCE (the count also fills the und cache):
-    # the rank table holds exactly n_nodes rows every round, so one
-    # scalar pins the per-iteration join strategy for the whole loop
-    n_nodes = ranks.count()
-    for i in range(iters):
-        share = ranks.select(
-            "a",
-            F.expr(
-                f"({PR_DAMP_NUM} * rank) DIV ({PR_DAMP_DEN} * deg)"
-            ).alias("c"),
+    try:
+        # und is already hash-partitioned by "a", so this aggregate adds
+        # no exchange
+        ranks = und.groupBy("a").agg(
+            F.lit(PR_SCALE).cast("long").alias("rank"),
+            F.count(F.lit(1)).cast("long").alias("deg"),
         )
-        ranks = (
-            und.join(_iter_side(share, n_nodes), "a")
-            .groupBy(F.col("b").alias("a"))
-            .agg(
-                (F.lit(base).cast("long") + F.sum("c")).alias("rank"),
-                F.count(F.lit(1)).cast("long").alias("deg"),
+        # node count measured ONCE (the count also fills the und cache):
+        # the rank table holds exactly n_nodes rows every round, so one
+        # scalar pins the per-iteration join strategy for the whole loop
+        n_nodes = ranks.count()
+        for i in range(iters):
+            share = ranks.select(
+                "a",
+                F.expr(
+                    f"({PR_DAMP_NUM} * rank) DIV ({PR_DAMP_DEN} * deg)"
+                ).alias("c"),
             )
-        )
-        # lineage grows by one join + one agg per round; cutting it
-        # EVERY round pays an eager materialization each time. Cut
-        # every second round — deep enough to stay cheap, shallow
-        # enough that the plan never compounds
-        if i % 2 == 1 and i != iters - 1:
-            ranks = _cut_lineage(ranks, reliable)
-    und.unpersist()
+            ranks = (
+                und.join(_iter_side(share, n_nodes), "a")
+                .groupBy(F.col("b").alias("a"))
+                .agg(
+                    (F.lit(base).cast("long") + F.sum("c")).alias("rank"),
+                    F.count(F.lit(1)).cast("long").alias("deg"),
+                )
+            )
+            # lineage grows by one join + one agg per round; cutting it
+            # EVERY round pays an eager materialization each time. Cut
+            # every second round — deep enough to stay cheap, shallow
+            # enough that the plan never compounds
+            if i % 2 == 1 and i != iters - 1:
+                ranks = _cut_lineage(ranks, reliable)
+    finally:
+        und.unpersist()
     return ranks.select(F.col("a").alias("node"), "rank")
 
 
@@ -341,41 +342,43 @@ def bfs_hops(
     ``reliable=True`` each hop is a reliable-storage write.
     """
     adj = edges.repartition("a").persist()
-    level = _cut_lineage(
-        seeds.select(
-            F.col(seeds.columns[0]).alias("node"),
-            F.lit(0).cast("int").alias("hops"),
-        ),
-        reliable,
-    )
-    levels = [level]
-    for h in range(1, max_hops + 1):
-        # visited = flat union of already-materialized levels — a
-        # cheap scan, never a recomputation
-        visited = levels[0].select("node")
-        for lv in levels[1:]:
-            visited = visited.unionByName(lv.select("node"))
-        # deliberately NOT _iter_side/broadcast: broadcasting the
-        # frontier re-executes its plan as a separate collect job per
-        # hop (measured A/B at x4: broadcast 391 MB / 14-20 s vs
-        # pinned shuffle_hash 258 MB / ~10 s). The shuffle_hash hint
-        # still keeps the hash-join family — the persisted adj side
-        # is never re-exchanged or sorted
-        level, seen = _observed_cut(
-            level.hint("shuffle_hash")
-            .join(adj, level["node"] == adj["a"])
-            .select(F.col("b").alias("node"))
-            .distinct()
-            .join(visited.hint("shuffle_hash"), "node", "left_anti")
-            .withColumn("hops", F.lit(h).cast("int")),
+    try:
+        level = _cut_lineage(
+            seeds.select(
+                F.col(seeds.columns[0]).alias("node"),
+                F.lit(0).cast("int").alias("hops"),
+            ),
             reliable,
-            f"bfs_level_{h}",
-            F.count(F.lit(1)).alias("n"),
         )
-        if seen["n"] == 0:
-            break
-        levels.append(level)
-    adj.unpersist()
+        levels = [level]
+        for h in range(1, max_hops + 1):
+            # visited = flat union of already-materialized levels — a
+            # cheap scan, never a recomputation
+            visited = levels[0].select("node")
+            for lv in levels[1:]:
+                visited = visited.unionByName(lv.select("node"))
+            # deliberately NOT _iter_side/broadcast: broadcasting the
+            # frontier re-executes its plan as a separate collect job per
+            # hop (measured A/B at x4: broadcast 391 MB / 14-20 s vs
+            # pinned shuffle_hash 258 MB / ~10 s). The shuffle_hash hint
+            # still keeps the hash-join family — the persisted adj side
+            # is never re-exchanged or sorted
+            level, seen = _observed_cut(
+                level.hint("shuffle_hash")
+                .join(adj, level["node"] == adj["a"])
+                .select(F.col("b").alias("node"))
+                .distinct()
+                .join(visited.hint("shuffle_hash"), "node", "left_anti")
+                .withColumn("hops", F.lit(h).cast("int")),
+                reliable,
+                f"bfs_level_{h}",
+                F.count(F.lit(1)).alias("n"),
+            )
+            if seen["n"] == 0:
+                break
+            levels.append(level)
+    finally:
+        adj.unpersist()
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
@@ -474,29 +477,31 @@ def label_propagation(
     would double votes), so callers need not symmetrize or
     pre-distinct."""
     undp = _loop_edges(und, "a", "b", "b").persist()
-    labels = undp.select("a").distinct().withColumn("lab", F.col("a"))
-    # node count measured once (warms the undp persist); the label
-    # table holds exactly n_nodes rows every round
-    n_nodes = labels.count()
-    for _ in range(rounds):
-        votes = (
-            undp.join(
-                _iter_side(
-                    labels.select(F.col("a").alias("b"), F.col("lab")),
-                    n_nodes,
-                ),
-                "b",
+    try:
+        labels = undp.select("a").distinct().withColumn("lab", F.col("a"))
+        # node count measured once (warms the undp persist); the label
+        # table holds exactly n_nodes rows every round
+        n_nodes = labels.count()
+        for _ in range(rounds):
+            votes = (
+                undp.join(
+                    _iter_side(
+                        labels.select(F.col("a").alias("b"), F.col("lab")),
+                        n_nodes,
+                    ),
+                    "b",
+                )
+                .groupBy("a", "lab")
+                .agg(F.count(F.lit(1)).cast("long").alias("votes"))
             )
-            .groupBy("a", "lab")
-            .agg(F.count(F.lit(1)).cast("long").alias("votes"))
-        )
-        labels = _cut_lineage(
-            votes.groupBy("a").agg(
-                F.expr(
-                    "max_by(lab, named_struct('v', votes, 'l', -lab))"
-                ).alias("lab")
-            ),
-            reliable,
-        )
-    undp.unpersist()
+            labels = _cut_lineage(
+                votes.groupBy("a").agg(
+                    F.expr(
+                        "max_by(lab, named_struct('v', votes, 'l', -lab))"
+                    ).alias("lab")
+                ),
+                reliable,
+            )
+    finally:
+        undp.unpersist()
     return labels

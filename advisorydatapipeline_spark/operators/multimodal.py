@@ -26,12 +26,11 @@ stdlib-only decode arm:
   decoded through the reference chain (operators/video.py), sampled
   here by :func:`sample_frames`'s real path.
 
-Exactly ONE library-bound arm remains stubbed: :func:`decode_media`
-for payloads in FOREIGN containers (standardized inter codecs
-H.264/VP9/AV1, non-baseline JPEG color) raises
-``NotImplementedError`` unless the optional codec import succeeds
-(import-try gate), or runs a clearly-marked deterministic fake when
-``fake=True``.
+Payloads in FOREIGN containers (standardized inter codecs
+H.264/VP9/AV1, non-baseline JPEG color) need codec libraries this
+package does not import: no arm decodes them, and none fakes a
+result — :func:`sample_frames` yields no frames for them and the
+header arms follow their corruption contract.
 
 Every per-payload decode operator (here and in flac_codec, jpeg_codec,
 mp3, video and warc) is one :func:`map_payloads` call: a pure decode
@@ -63,19 +62,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # optional codec stack (absent in this container)
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except Exception:  # pragma: no cover
-    _HAS_PIL = False
-
 METADATA_SCHEMA = (
     "media_id long, media_type string, byte_len long, content_hash string"
-)
-DECODED_SCHEMA = (
-    "media_id long, media_type string, width int, height int, "
-    "n_frames int, sample_rate int"
 )
 
 
@@ -1637,144 +1625,40 @@ def decode_media_headers(media_df: DataFrame) -> DataFrame:
     )
 
 
-def decode_media(media_df: DataFrame, *, fake: bool = False) -> DataFrame:
-    """Decode payloads to typed media properties.
+def sample_frames(media_df: DataFrame, every_n: int = 30) -> DataFrame:
+    """Frame sampling for video payloads (1->N row expansion, skip
+    contract): MJPEG-AVI payloads go through the RIFF walk + full JPEG
+    entropy decode (operators/video.decode_avi_frames) and IPV1 streams
+    through the inter-frame reference-chain decode
+    (operators/video.decode_ipframe_video); ``frame_hash`` is the md5
+    of the decoded frame's scalar signature, so a decode defect
+    changes the output. Non-video rows are filtered out in Spark
+    before the Python hop; payloads in foreign containers (H.264 etc.)
+    contribute zero rows — decoding THOSE needs codec libraries."""
+    from advisorydatapipeline_spark.operators.video import (
+        decode_avi_frames,
+        decode_ipframe_video,
+    )
 
-    PARTIAL STUB: BMP/WAV decode is real (see
-    :func:`decode_media_headers`); everything else needs codec
-    libraries not present in this container. With ``fake=True`` it
-    produces *deterministic* fake dimensions derived from the content
-    hash — keeping the operator signature, schema, and batch shape
-    real for pipeline tests.
-    """
-    if not fake and not _HAS_PIL:
-        raise NotImplementedError(
-            "general media decoding requires codec libraries (PIL/av) "
-            "that are not installed; codec-free full decodes exist for "
-            "BMP (decode_bmp_pixels), WAV (wav_frame_features), PNG "
-            "(decode_png), GIF incl. animated (decode_gif_frames), and "
-            "baseline JPEG (jpeg_codec.decode_jpeg_pixels), and "
-            "MJPEG-AVI video (video.decode_avi_frames); MP3 framing/"
-            "timing is real (mp3.parse_mp3_stream), Huffman spectral "
-            "decode is real (mp3_huffman.py: bit reservoir, regions, "
-            "linbits escapes, count1 — repo-canonical code tables, "
-            "documented), and so is the full synthesis back-half — "
-            "IMDCT, windowing, overlap-add, frequency inversion "
-            "(mp3_synth.py) and the polyphase subband-to-PCM stage "
-            "(mp3_polyphase.py) — only general-purpose inter-frame "
-            "video codecs and arbitrary PIL/av container decoding "
-            "remain lib-bound (a repo-canonical intra+delta video "
-            "codec ships in video.py: decode_ipframe_video); pass "
-            "fake=True for the deterministic stub"
-        )
+    def decode(b: bytes) -> list[dict]:
+        if b[:4] == b"IPV1":
+            frames = decode_ipframe_video(b, every_n)
+        elif b[:4] == b"RIFF":
+            frames = decode_avi_frames(b, every_n)
+        else:
+            return []
+        return [
+            {
+                "frame_idx": f,
+                "frame_hash": hashlib.md5(
+                    repr(tuple(sig)).encode()
+                ).hexdigest(),
+            }
+            for f, *sig in frames
+        ]
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                h = int(hashlib.md5(row["payload"]).hexdigest()[:8], 16)
-                is_img = row["media_type"] == "image"
-                is_vid = row["media_type"] == "video"
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "media_type": row["media_type"],
-                        "width": 64 + h % 1024 if (is_img or is_vid) else 0,
-                        "height": 64 + (h // 1024) % 1024 if (is_img or is_vid) else 0,
-                        "n_frames": 1 + h % 300 if is_vid else (1 if is_img else 0),
-                        "sample_rate": 16000 if row["media_type"] == "audio" else 0,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(op, DECODED_SCHEMA)
-
-
-def sample_frames(
-    media_df: DataFrame, every_n: int = 30, *, fake: bool = False
-) -> DataFrame:
-    """Frame sampling for video payloads (1->N row expansion through
-    mapInPandas). REAL for the repo's codec-free containers (r14 —
-    retires the last multimodal NotImplementedError): MJPEG-AVI
-    payloads go through the RIFF walk + full JPEG entropy decode
-    (operators/video.decode_avi_frames) and IPV1 streams through the
-    inter-frame reference-chain decode
-    (operators/video.decode_ipframe_video); ``frame_hash`` is the
-    md5 of the decoded frame's scalar signature, so a decode defect
-    changes the output. Payloads in foreign containers (H.264 etc.)
-    contribute zero rows on the real path — decoding THOSE still
-    needs codec libraries; ``fake=True`` keeps the deterministic
-    stub for plumbing tests."""
-    schema = "media_id long, frame_idx int, frame_hash string"
-
-    def op_fake(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                if row["media_type"] != "video":
-                    continue
-                h = hashlib.md5(row["payload"]).hexdigest()
-                n = 1 + int(h[:8], 16) % 300
-                for idx in range(0, n, every_n):
-                    rows.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": idx,
-                            "frame_hash": hashlib.md5(
-                                f"{h}:{idx}".encode()
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_hash"]
-            )
-
-    def op_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from advisorydatapipeline_spark.operators.video import (
-            decode_avi_frames,
-            decode_ipframe_video,
-        )
-
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                if row["media_type"] != "video":
-                    continue
-                b = (
-                    bytes(row["payload"])
-                    if row["payload"] is not None
-                    else b""
-                )
-                sigs: list[tuple[int, tuple]] = []
-                try:
-                    if b[:4] == b"IPV1":
-                        sigs = [
-                            (f, rest)
-                            for f, *rest in decode_ipframe_video(
-                                b, every_n
-                            )
-                        ]
-                    elif b[:4] == b"RIFF":
-                        sigs = [
-                            (f, rest)
-                            for f, *rest in decode_avi_frames(
-                                b, every_n
-                            )
-                        ]
-                except ValueError:
-                    continue
-                for f, sig in sigs:
-                    rows.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_idx": f,
-                            "frame_hash": hashlib.md5(
-                                repr(tuple(sig)).encode()
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "frame_hash"]
-            )
-
-    return media_df.mapInPandas(op_fake if fake else op_real, schema)
+    return map_payloads(
+        media_df.where(F.col("media_type") == "video"),
+        "media_id long, frame_idx int, frame_hash string",
+        decode,
+    )

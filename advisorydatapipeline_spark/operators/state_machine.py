@@ -147,13 +147,6 @@ def explanation_sql(from_expr: str, to_expr: str) -> str:
 # --- 3. native column expressions (F.expr over the portable SQL) ------------
 
 
-def norm_state(col: str | Column) -> Column:
-    c = col if isinstance(col, str) else None
-    if c is None:
-        raise TypeError("norm_state takes a column *name* (portable SQL path)")
-    return F.expr(norm_sql(c))
-
-
 def with_transition(
     df: DataFrame,
     from_col: str,

@@ -21,10 +21,6 @@ Spark and DuckDB must agree *exactly*):
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
 from collections.abc import Callable
 from datetime import datetime, timezone
 
@@ -32,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from advisorydatapipeline_spark.sources.io import scratch_dir  # noqa: F401
 
 
 def ensure_read_confs(spark: SparkSession) -> None:
@@ -176,21 +174,3 @@ def doc_payloads(docs: DataFrame, encode: Callable[..., bytes]) -> DataFrame:
             )
 
     return docs.mapInPandas(encode_batches, "media_id long, payload binary")
-
-
-_scratch_root: str | None = None
-
-
-def scratch_dir(tag: str) -> str:
-    """A directory for ``tag``'s scratch files, the same one for every
-    call in this process. All tags share one per-process root under
-    the temp dir (``adp_scratch_*``), which is removed at interpreter
-    exit, so no run leaves files behind and no process can read
-    another's stale files."""
-    global _scratch_root
-    if _scratch_root is None:
-        _scratch_root = tempfile.mkdtemp(prefix="adp_scratch_")
-        atexit.register(shutil.rmtree, _scratch_root, True)
-    d = os.path.join(_scratch_root, tag)
-    os.makedirs(d, exist_ok=True)
-    return d

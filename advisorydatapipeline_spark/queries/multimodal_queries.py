@@ -364,9 +364,7 @@ def png_decode_stats(spark, sf_dir):
 
     Scale shape: encode and decode are narrow Arrow-batched
     mapInPandas hops — compressed bytes never shuffle, only the 6
-    scalar stat columns leave the operator. The remaining
-    NotImplementedError arms (JPEG/video) genuinely need codec
-    libraries absent from this container."""
+    scalar stat columns leave the operator."""
     from advisorydatapipeline_spark.operators.multimodal import (
         decode_png_stats,
         encode_png,
@@ -419,8 +417,7 @@ def gif_decode_stats(spark, sf_dir):
     through the palette. The oracle recomputes the palette-mapped
     gradient pixel sum from doc_id arithmetic, so a wrong code-width
     transition, sub-block seam, or palette offset is a value
-    mismatch. After this, ``NotImplementedError`` covers only the
-    genuinely lib-bound JPEG/video arms.
+    mismatch.
 
     Scale shape: encode and decode are narrow Arrow-batched
     mapInPandas hops — compressed bytes never shuffle, only the 5
@@ -974,8 +971,8 @@ def jpeg_header_stats(spark, sf_dir):
     reads the ITU-T.81 frame header. The oracle recomputes every
     column (including total byte length, which pins the segment
     framing arithmetic) from doc_id, so a wrong length field, marker
-    code, or offset is a value mismatch. Pixel decode stays
-    lib-bound (``decode_media``) — this closes the header-only
+    code, or offset is a value mismatch. Baseline pixel decode is
+    ``jpeg_codec.decode_jpeg_pixels`` — this closes the header-only
     contract of ``decode_media_headers`` for BMP/WAV/PNG/GIF/JPEG.
 
     Scale shape: encode and decode are narrow Arrow-batched

@@ -99,26 +99,6 @@ STATE_MACHINE_SCHEMA = T.StructType(
     ]
 )
 
-# --- beyond-reference: training-data pipeline tables ------------------------
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
 # opaque multimodal payloads: binary blob + typed metadata (see
 # operators/multimodal.py)
 MEDIA_SCHEMA = T.StructType(

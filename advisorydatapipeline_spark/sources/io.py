@@ -20,7 +20,10 @@ Re-expresses the reference's ``read_table`` / ``write_table``
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -266,3 +269,21 @@ def observed(df: DataFrame, name: str, *metrics):
     if not metrics:
         metrics = (F.count(F.lit(1)).alias("n_rows"),)
     return df.observe(obs, *metrics), obs
+
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(tag: str) -> str:
+    """A directory for ``tag``'s scratch files, the same one for every
+    call in this process. All tags share one per-process root under
+    the temp dir (``adp_scratch_*``), which is removed at interpreter
+    exit, so no run leaves files behind and no process can read
+    another's stale files."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="adp_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, True)
+    d = os.path.join(_scratch_root, tag)
+    os.makedirs(d, exist_ok=True)
+    return d

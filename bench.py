@@ -17,9 +17,12 @@ head and rounds could not be compared per-query):
   line survives a reader that keeps only its tail.
 - EXTENDED: every other registry entry, in registry order (derived
   from ``QUERIES``; there is no second list to keep in sync). Timed
-  in the same run, summarized on stdout (``extended_total``), and the
-  full per-query dict for BOTH tiers is written to a committed
-  ``BENCH_LOCAL_r{N}.json`` so no timing is ever lost.
+  in the same run and summarized on stdout (``extended_total``).
+
+``--out FILE`` writes the full per-query record for BOTH tiers (plus
+the [min, max] spread when ``--reps`` > 1 and the solo/load
+disclosure) to FILE; ``full_timings`` on stdout is its basename. Without
+``--out`` the run writes no file.
 
 Each query is fully materialized via the `noop` sink (forces the
 whole plan, no driver collect, no result-size bias).
@@ -27,10 +30,8 @@ whole plan, no driver collect, no result-size bias).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 
@@ -174,17 +175,6 @@ def _foreign_spark_pids() -> list[int]:
     return sorted(foreign)
 
 
-def _infer_round(repo_dir: str) -> int:
-    """Current round = max committed BENCH_r{N}.json + 1 (the driver
-    writes BENCH_r{N} AFTER the round this run belongs to)."""
-    rounds = [0]
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
 def main() -> None:
     import argparse
     import statistics
@@ -194,36 +184,21 @@ def main() -> None:
         "--reps",
         type=int,
         default=int(os.environ.get("SPARK_GRAFT_REPS", "1")),
-        help="back-to-back reps per query; the artifact records the "
-        "per-query MEDIAN plus [min, max] spread, so round-over-round "
-        "drift adjudication stops depending on a manual solo protocol "
-        "(the box's single-shot envelope is wider than typical "
-        "round deltas)",
+        help="back-to-back reps per query; each entry reports the "
+        "MEDIAN of its reps, and the --out artifact adds the "
+        "[min, max] spread",
     )
     ap.add_argument(
         "--only",
         default="",
-        help="comma-separated query names: run ONLY these (drift "
-        "adjudication / targeted solo re-measure). Never writes the "
-        "round's BENCH_LOCAL artifact — use --out for a side file.",
+        help="comma-separated query names: run ONLY these "
+        "(targeted solo re-measure; tools/ab.py drives it)",
     )
     ap.add_argument(
         "--out",
         default="",
-        help="write the full per-query artifact to this path instead "
-        "of the round-inferred BENCH_LOCAL_r{N}.json",
-    )
-    ap.add_argument(
-        "--merge",
-        default="",
-        help="path of an existing round artifact: re-measure the "
-        "--only entries and FOLD the new medians/spreads back into "
-        "that artifact (totals recomputed, per-entry provenance kept "
-        "under 'merged'). The r11 bench-consistency protocol: after "
-        "the full solo run, every entry whose reading disagrees with "
-        "its own targeted adjudication lands in the committed "
-        "artifact as its quiet-box median, so BENCH_LOCAL never "
-        "overstates an entry a future round will diff against.",
+        help="write the full per-query artifact to this path; "
+        "without it the run writes no file",
     )
     args = ap.parse_args()
     reps = max(1, args.reps)
@@ -231,12 +206,9 @@ def main() -> None:
     unknown = [n for n in only if n not in QUERIES]
     if unknown:
         raise SystemExit(f"--only names not in registry: {unknown}")
-    if args.merge and not only:
-        raise SystemExit("--merge requires --only (targeted re-measure)")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
     # pollution disclosure, sampled BEFORE our own session exists
     loadavg_start = [round(v, 2) for v in os.getloadavg()]
     foreign_start = _foreign_spark_pids()
@@ -301,70 +273,14 @@ def main() -> None:
     foreign_end = _foreign_spark_pids()
     solo = not foreign_start and not foreign_end
 
-    if args.merge:
-        # fold targeted quiet-box re-measures into the round artifact
-        with open(args.merge) as f:
-            base = json.load(f)
-        merged_log = base.get("merged", {})
-        for name in timings:
-            tier = "core" if name in base.get("core", {}) else "extended"
-            old = base.get(tier, {}).get(name)
-            if old is None and name not in CORE + EXTENDED:
-                raise SystemExit(
-                    f"--merge: {name} not present in {args.merge} "
-                    f"nor in the bench tiers"
-                )
-            # old is None for a LATE-ADDED entry (registered in the
-            # tiers after the round artifact was measured): fold it
-            # in as an addition, provenance under 'merged' with
-            # old=None (r14 late-additions protocol)
-            merged_log[name] = {
-                "old": old,
-                "new": timings[name],
-                "reps": reps,
-                "solo": solo,
-            }
-            base[tier][name] = timings[name]
-            base.setdefault("spread", {})[name] = spread[name]
-        base["merged"] = merged_log
-        base["core_total"] = round(sum(base["core"].values()), 3)
-        base["extended_total"] = round(
-            sum(base.get("extended", {}).values()), 3
-        )
-        base["total"] = round(
-            base["core_total"] + base["extended_total"], 3
-        )
-        out_path = args.out or args.merge
-        with open(out_path, "w") as f:
-            json.dump(base, f, indent=1, sort_keys=False)
-            f.write("\n")
-        print(
-            json.dumps(
-                {
-                    "merged": {
-                        n: merged_log[n] for n in timings
-                    },
-                    "artifact": os.path.basename(out_path),
-                    "solo": solo,
-                    "loadavg": [loadavg_start, loadavg_end],
-                    "metric": "merge-adjudicated medians",
-                    "value": base["total"],
-                    "unit": "sec",
-                    "sf": float(sf),
-                }
-            )
-        )
-        return
-
     core_total = round(sum(timings[n] for n in CORE if n in timings), 3)
     ext_total = round(
         sum(timings[n] for n in EXTENDED if n in timings), 3
     )
 
-    # Full per-query record (both tiers) -> committed local artifact,
-    # immune to the driver's stdout truncation.
+    # Full per-query record (both tiers) -> the --out artifact, immune
+    # to a reader that keeps only the tail of the stdout line.
     local = {
-        "round": _infer_round(repo_dir),
         "sf": float(sf),
         "reps": reps,
         "core_total": core_total,
@@ -383,53 +299,23 @@ def main() -> None:
     if only:
         local["only"] = only
     if reps > 1:
-        # per-query [min, max] across reps — the committed noise
-        # envelope a future round's drift check reads directly
+        # per-query [min, max] across reps — the noise envelope
         local["spread"] = spread
-    if only:
-        # targeted runs never touch the round artifact; they are
-        # adjudication side evidence
-        local_path = args.out or ""
-    elif args.out:
-        local_path = args.out
-    else:
-        local_path = os.path.join(
-            repo_dir, f"BENCH_LOCAL_r{local['round']:02d}.json"
-        )
-        # never clobber a HIGHER-reps artifact with a lower-reps run:
-        # the committed median+spread record is the round's
-        # drift-adjudication evidence, and the driver's own per-round
-        # invocation defaults to reps=1 — that run lands in a
-        # reps-suffixed side file instead
-        try:
-            with open(local_path) as f:
-                existing_reps = json.load(f).get("reps", 1) or 1
-        except (OSError, ValueError):
-            existing_reps = 0
-        if existing_reps > reps:
-            local_path = os.path.join(
-                repo_dir,
-                f"BENCH_LOCAL_r{local['round']:02d}_reps{reps}.json",
-            )
-    if local_path:
-        with open(local_path, "w") as f:
+    if args.out:
+        with open(args.out, "w") as f:
             json.dump(local, f, indent=1, sort_keys=False)
             f.write("\n")
 
-    # Key order matters: the external driver keeps only the LAST ~2000
-    # chars of this line, so the queries dict goes first and every
-    # headline scalar goes last — truncation can only ever eat the
-    # head of the core timings (all preserved in BENCH_LOCAL anyway),
-    # never the totals.
+    # Key order matters: a reader that keeps only the LAST ~2000 chars
+    # of this line loses the head of the core timings (all preserved
+    # in the --out artifact), never the headline totals, which go last.
     print(
         json.dumps(
             {
                 "queries": {
                     n: timings[n] for n in CORE if n in timings
                 },
-                "full_timings": os.path.basename(local_path)
-                if local_path
-                else "",
+                "full_timings": os.path.basename(args.out),
                 "n_core": len(CORE),
                 "n_extended": len(EXTENDED),
                 "excluded_quadratic": skipped_quadratic,

@@ -273,9 +273,9 @@ def test_connected_components_plan_size_estimate_stays_bounded(spark):
     assert size < 2**128
 
 
-def test_raising_loops_release_their_cache(spark):
-    """A loop that hits its round cap must still unpersist the edge
-    frame it cached."""
+def test_raising_loops_release_their_cache(spark, monkeypatch):
+    """A loop that hits its round cap, or whose round raises, must
+    still unpersist the edge frame it cached."""
     import pytest as _pytest
 
     from advisorydatapipeline_spark.operators.graph import k_core_peel
@@ -296,3 +296,20 @@ def test_raising_loops_release_their_cache(spark):
     with _pytest.raises(RuntimeError, match="fixpoint"):
         k_core_peel(und, ks, max_rounds=1)
     assert cache.isEmpty()
+
+    # the fixed-round loops release it when a round raises
+    from advisorydatapipeline_spark.operators import graph
+
+    def boom(df, reliable):
+        raise RuntimeError("lineage cut failed")
+
+    monkeypatch.setattr(graph, "_cut_lineage", boom)
+    seeds = spark.createDataFrame([(0,)], "node long")
+    for run in (
+        lambda: graph.pagerank_quantized(edges, "a", "b", iters=3),
+        lambda: graph.label_propagation(edges, 2),
+        lambda: graph.bfs_hops(edges, seeds, 3),
+    ):
+        with _pytest.raises(RuntimeError, match="lineage cut failed"):
+            run()
+        assert cache.isEmpty()

@@ -1,15 +1,12 @@
-"""Multimodal plumbing tests: Arrow batch shapes, stub gating,
-deterministic fakes."""
+"""Multimodal plumbing tests: Arrow batch shapes, payload metadata and
+the codec-free decode arms."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from advisorydatapipeline_spark.operators.multimodal import (
     attach_payload,
-    decode_media,
     extract_metadata,
     sample_frames,
 )
@@ -39,29 +36,10 @@ def test_metadata_matches_python_hash(spark):
     assert out[0].byte_len == len(b"image bytes here")
 
 
-def test_decode_requires_codec_or_fake(spark):
-    with pytest.raises(NotImplementedError):
-        decode_media(_media(spark)).collect()
-
-
-def test_decode_fake_is_deterministic(spark):
-    a = {r.media_id: tuple(r) for r in decode_media(_media(spark), fake=True).collect()}
-    b = {r.media_id: tuple(r) for r in decode_media(_media(spark), fake=True).collect()}
-    assert a == b
-    assert a[1][5] == 16000  # audio sample_rate
-    assert a[0][2] >= 64  # image width
-
-
-def test_sample_frames_only_video(spark):
-    frames = sample_frames(_media(spark), every_n=30, fake=True).collect()
-    assert frames and all(f.media_id == 2 for f in frames)
-    assert [f.frame_idx for f in frames] == sorted(f.frame_idx for f in frames)
-
-
 def test_sample_frames_real_path_decodes_repo_containers(spark):
-    """r14: the real path decodes IPV1 and MJPEG-AVI payloads for
-    real (no NotImplementedError gate left here); foreign containers
-    contribute zero rows."""
+    """IPV1 and MJPEG-AVI payloads decode for real; foreign
+    containers, NULL payloads and non-video rows contribute zero
+    rows."""
     from advisorydatapipeline_spark.operators.video import (
         decode_avi_frames,
         decode_ipframe_video,
@@ -73,7 +51,8 @@ def test_sample_frames_real_path_decodes_repo_containers(spark):
         (1, "video", bytearray(encode_ipframe_video(3))),
         (2, "video", bytearray(encode_avi_mjpeg(4))),
         (3, "video", bytearray(b"\x00\x00\x01\xba h264-ish junk")),
-        (4, "image", bytearray(b"not video at all")),
+        (4, "image", bytearray(encode_ipframe_video(5))),
+        (5, "video", None),
     ]
     df = spark.createDataFrame(
         rows, "media_id long, media_type string, payload binary"

@@ -10,8 +10,8 @@ Usage: python tools/check_oracle.py [--bare] [--out FILE] [sf_dir]
 
 ``--out FILE`` additionally writes a machine-readable result map
 ``{name: {"status": ok|rows-only|fail, "rows": N, "sec": s}}`` —
-``tools/sample_gap.py`` consumes it to report local-gate status for
-registry entries the driver has never sampled.
+``tools/check_oracle_sharded.py`` merges one per shard and reads the
+per-entry ``sec`` to balance its shards.
 
 ``--bare`` builds a plain ``SparkSession.builder.getOrCreate()`` (no
 session.py confs), mirroring the external driver's harness so

@@ -16,7 +16,6 @@ Usage: python tools/scale_smoke.py [sf_dir] (writes SCALE.md)
 from __future__ import annotations
 
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, ".")
@@ -24,6 +23,7 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from advisorydatapipeline_spark.session import get_spark  # noqa: E402
+from advisorydatapipeline_spark.sources.io import scratch_dir  # noqa: E402
 from advisorydatapipeline_spark.operators.dedup import (  # noqa: E402
     exact_dedup_groups,
     jaccard_pairs,
@@ -615,7 +615,7 @@ def main() -> None:
     spark = get_spark(
         "scale-smoke", extra_conf={"spark.ui.enabled": "true"}
     )
-    base = tempfile.mkdtemp(prefix="adp_scale_")
+    base = scratch_dir("scale")
     results: dict[int, dict[str, float]] = {}
     counts: dict[int, int] = {}
     for r in REPLICAS:
