@@ -3,16 +3,21 @@
 Re-expresses the reference's advisory state machine
 (state_machine/state_transitions.py:17-179 — transition table,
 ``is_valid_transition``, ``apply_transition``,
-``get_transition_explanation``) three ways:
+``get_transition_explanation``) in four sections, one definition of
+the transition table behind all of them:
 
-1. **Native** column expressions (``F.when`` chains) — the hot path.
-   Stays inside whole-stage codegen; no Python-worker serialization.
-2. **Portable SQL text** generators — the *same* CASE logic as ANSI
-   SQL strings, usable both by ``F.expr`` and by the DuckDB oracle, so
-   Spark and oracle share one definition by construction.
-3. **Python UDF parity** (plain + struct-returning) mirroring the
+1. **Pure-Python core** — the reference functions themselves; the UDF
+   surface and the unit tests call them.
+2. **Portable SQL text** generators — the same CASE logic as ANSI SQL
+   strings, identical in Spark SQL and DuckDB, so Spark and the oracle
+   share one definition by construction. The resolution chain
+   (``plans/advisory_resolution.resolution_sql``) embeds them.
+3. **Native** columns: ``with_transition`` evaluates that SQL text
+   through ``F.expr`` — the hot path, inside whole-stage codegen with
+   no Python-worker serialization.
+4. **Python UDF parity** (plain + struct-returning) mirroring the
    reference's registered-UDF surface (state_machine/udf.py:12-86) —
-   kept to prove the UDF surface and as an equivalence oracle for (1).
+   kept to prove the UDF surface and as an equivalence oracle for (3).
 
 Semantics pinned by the reference's test suite
 (test/test_state_transitions.py, see SURVEY.md §5):

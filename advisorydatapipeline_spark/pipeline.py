@@ -12,7 +12,10 @@ the same guarantees:
   semantics, deterministic injected clock).
 - **priority conflict resolution** across sources (W1 window), COALESCE
   precedence manual > enrichment > prior state, native FSM transition
-  validation, change-type classification, CASE-ranked audit ordering.
+  validation and change-type classification: one SQL text,
+  ``plans/advisory_resolution.resolution_sql``, which the flagship
+  entry and its DuckDB oracle run too. The state-machine phase only
+  maps its staged inputs onto that text's four relations.
 
 Differences from the reference, by design (SURVEY.md §7):
 - enrichment runs on the executors (operators/enrichment.py
@@ -25,8 +28,10 @@ Differences from the reference, by design (SURVEY.md §7):
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Callable
 from dataclasses import dataclass
 from datetime import datetime, timedelta
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,17 +39,9 @@ from pyspark.sql import functions as F
 from advisorydatapipeline_spark import schemas
 from advisorydatapipeline_spark.config import PipelineConfig
 from advisorydatapipeline_spark.operators.enrichment import UpstreamSource, enrich_map_in_pandas
-from advisorydatapipeline_spark.operators.state_machine import (
-    apply_sql,
-    explanation_sql,
-    valid_sql,
-)
-from advisorydatapipeline_spark.operators.ttl_cache import (
-    pending_work,
-    update_cache,
-)
-from advisorydatapipeline_spark.operators.upsert import upsert_to_path
-from advisorydatapipeline_spark.operators.window_ops import top_k_per_key
+from advisorydatapipeline_spark.operators.ttl_cache import pending_work
+from advisorydatapipeline_spark.operators.upsert import upsert, upsert_to_path
+from advisorydatapipeline_spark.plans.advisory_resolution import resolution_sql
 from advisorydatapipeline_spark.sources.io import (
     read_table,
     register_view,
@@ -62,7 +59,7 @@ class NormalizedSource:
 
     upstream: UpstreamSource
     # raw enrichment df -> NORMALIZED_ENRICHMENT_SCHEMA df
-    normalize: "callable"
+    normalize: Callable[[DataFrame], DataFrame]
 
 
 def default_normalize(source_name: str, priority: int, now: datetime):
@@ -127,10 +124,13 @@ def run_enrich_phase(
     """TTL-cache-gated enrichment per source; returns the union of all
     normalized enrichment staged this run. Staging paths and cache rows
     are keyed by source name, so names must be unique."""
+    if not sources:
+        raise ValueError("no enrichment sources")
     dupes = [n for n, c in Counter(s.upstream.name for s in sources).items() if c > 1]
     if dupes:
         raise ValueError(f"duplicate enrichment source name {dupes[0]!r}")
     now = config.clock()
+    cutoff = now - timedelta(hours=config.cache_ttl_hours)
 
     # worklist: advisory keys not manually overridden (reference
     # packages_to_enrich.py: case-insensitive compound-key left anti)
@@ -156,13 +156,13 @@ def run_enrich_phase(
         spark, config.cache_path, schemas.ENRICHMENT_CACHE_SCHEMA
     ).withColumnRenamed("package_name", "package")
     normalized_parts: list[DataFrame] = []
+    answered_parts: list[DataFrame] = []
     for src in sources:
-        ttl_h = config.cache_ttl_hours
-        cutoff = now - timedelta(hours=ttl_h)
-        todo = pending_work(worklist, cache, KEYS, src.upstream.name, cutoff)
+        name = src.upstream.name
+        todo = pending_work(worklist, cache, KEYS, name, cutoff)
 
         raw = enrich_map_in_pandas(todo, src.upstream, KEYS)
-        raw_path = f"{config.run_path(run_id)}/enrichment/raw/{src.upstream.name}"
+        raw_path = f"{config.run_path(run_id)}/enrichment/raw/{name}"
         write_table(raw, raw_path, schema=schemas.RAW_ENRICHMENT_SCHEMA)
         raw_staged = read_table(spark, raw_path, schemas.RAW_ENRICHMENT_SCHEMA)
         # only answered rows (found IS NOT NULL, see schemas) are
@@ -173,7 +173,7 @@ def run_enrich_phase(
         normalized = src.normalize(answered)
         norm_path = (
             f"{config.run_path(run_id)}/enrichment/normalized/"
-            f"enrichment_source={src.upstream.name}"
+            f"enrichment_source={name}"
         )
         write_table(
             normalized, norm_path, schema=schemas.NORMALIZED_ENRICHMENT_SCHEMA
@@ -181,22 +181,30 @@ def run_enrich_phase(
         normalized_parts.append(
             read_table(spark, norm_path, schemas.NORMALIZED_ENRICHMENT_SCHEMA)
         )
+        answered_parts.append(
+            answered.select(*KEYS, F.lit(name).alias("source_name"))
+        )
 
-        # cache merge AFTER successful staging (reference cache.py:109)
-        cache = update_cache(cache, answered, KEYS, src.upstream.name, now)
-
-    # persist the merged cache once for all sources; the merge reads
-    # the cache files it replaces, hence replace_table
+    # cache merge AFTER successful staging (reference cache.py:109):
+    # one upsert of every source's answered keys. Each source reads and
+    # writes only its own source_name rows, so this equals one
+    # ttl_cache.update_cache per source. The merge reads the cache
+    # files it replaces, hence replace_table.
+    fresh = (
+        reduce(DataFrame.unionByName, answered_parts)
+        .distinct()
+        .withColumn("last_accessed", F.lit(now))
+    )
     replace_table(
         spark,
-        cache.withColumnRenamed("package", "package_name"),
+        upsert(fresh, cache, [*KEYS, "source_name"]).withColumnRenamed(
+            "package", "package_name"
+        ),
         config.cache_path,
         schemas.ENRICHMENT_CACHE_SCHEMA,
     )
 
-    merged = normalized_parts[0]
-    for part in normalized_parts[1:]:
-        merged = merged.unionByName(part)
+    merged = reduce(DataFrame.unionByName, normalized_parts)
     register_view(merged, "normalized_enrichment")
     return merged
 
@@ -209,103 +217,37 @@ def run_state_machine_phase(
     overrides: DataFrame,
     normalized: DataFrame,
 ) -> DataFrame:
-    """W1 priority dedup -> J2 double left join -> COALESCE precedence
-    -> native FSM -> change classification -> upsert into prod."""
+    """Map the staged inputs and the prod snapshot onto the
+    resolution text's four relations, stage its result and upsert it
+    into prod."""
     prod_path = f"{config.prod_path}/state_machine/cve_state_machine"
     prod = read_table(spark, prod_path, schemas.STATE_MACHINE_SCHEMA)
-
-    best = top_k_per_key(
-        normalized,
-        ["cve_id", "package"],
-        [
-            F.col("priority").desc(),
-            F.col("enrichment_timestamp").desc(),
-            F.col("enrichment_source").desc(),
-        ],
-        k=1,
-    ).select(
-        "cve_id",
-        "package",
-        F.col("state").alias("enrich_state"),
-        F.col("customer_text").alias("enrich_text"),
-        F.col("fixed_version").alias("enrich_version"),
-        F.col("priority").alias("enrich_priority"),
-        F.col("enrichment_timestamp").alias("enrich_ts"),
-        F.col("enrichment_source").alias("enrich_source"),
-    )
-
-    master = advisories.select(
-        "cve_id",
-        F.col("package_name").alias("package"),
-        F.col("fixed_version").alias("advisory_version"),
-    ).dropDuplicates(["cve_id", "package"])
-
-    ov = overrides.select(
-        F.lower("cve_id").alias("_ck"),
-        F.lower("package").alias("_pk"),
-        F.col("internal_status").alias("ov_state"),
-        F.col("status").alias("ov_text"),
-        F.col("fixed_version").alias("ov_version"),
-    ).dropDuplicates(["_ck", "_pk"])
-
-    prior = prod.select(
-        "cve_id", "package", F.col("status").alias("prod_state")
-    )
-
-    combined = (
-        master.join(
-            F.broadcast(ov),
-            (F.lower(master.cve_id) == ov._ck)
-            & (F.lower(master.package) == ov._pk),
-            "left",
-        )
-        .join(best, ["cve_id", "package"], "left")
-        .join(prior, ["cve_id", "package"], "left")
-    )
-
-    from_state = "coalesce(prod_state, 'unknown')"
-    candidate = "coalesce(ov_state, enrich_state)"
-    eff = "coalesce(ov_state, enrich_state, prod_state, 'unknown')"
-    valid = valid_sql(from_state, eff)
-    # manual overrides are authoritative: they SET the state (the
-    # reference feeds internal_status in as the current state,
-    # packages_to_enrich.py:25-32), bypassing FSM gating; enrichment
-    # candidates must pass the FSM
-    from advisorydatapipeline_spark.operators.state_machine import norm_sql
-
-    new_state = (
-        f"CASE WHEN ov_state IS NOT NULL THEN {norm_sql('ov_state')} "
-        f"ELSE {apply_sql(from_state, eff)} END"
-    )
-    change = (
-        f"CASE WHEN prod_state IS NULL THEN 'new' "
-        f"WHEN ({candidate}) IS NULL THEN 'unchanged' "
-        f"WHEN ov_state IS NULL AND NOT ({valid}) THEN 'blocked' "
-        f"WHEN ({new_state}) <> ({from_state}) THEN 'status_changed' "
-        f"ELSE 'enriched_unchanged' END"
-    )
-    processed = combined.select(
-        "cve_id",
-        "package",
-        F.expr(new_state).alias("status"),
-        F.col("prod_state").alias("previous_status"),
-        F.coalesce("ov_version", "enrich_version", "advisory_version").alias(
-            "fixed_version"
+    processed = spark.sql(
+        resolution_sql(KEYS, KEYS),
+        master=advisories.select(
+            "cve_id",
+            F.col("package_name").alias("package"),
+            F.col("fixed_version").alias("advisory_version"),
+        ).dropDuplicates(list(KEYS)),
+        overrides=overrides.select(
+            F.lower("cve_id").alias("cve_id"),
+            F.lower("package").alias("package"),
+            F.col("internal_status").alias("ov_state"),
+            F.col("status").alias("ov_text"),
+            F.col("fixed_version").alias("ov_version"),
+        ).dropDuplicates(list(KEYS)),
+        enrichment=normalized.select(
+            "cve_id",
+            "package",
+            F.col("state").alias("enrich_state"),
+            F.col("customer_text").alias("enrich_text"),
+            F.col("fixed_version").alias("enrich_version"),
+            F.col("priority").alias("enrich_priority"),
+            F.col("enrichment_timestamp").alias("enrich_ts"),
+            F.col("enrichment_source").alias("enrich_tiebreak"),
+            F.col("enrichment_source").alias("enrich_source"),
         ),
-        F.coalesce("ov_text", "enrich_text").alias("customer_text"),
-        F.expr(
-            "CASE WHEN ov_state IS NOT NULL THEN 'manual' "
-            "WHEN enrich_state IS NOT NULL THEN enrich_source "
-            "ELSE 'production' END"
-        ).alias("data_source"),
-        F.expr(
-            "CAST(CASE WHEN ov_state IS NOT NULL THEN 100 "
-            "ELSE enrich_priority END AS INT)"
-        ).alias("priority"),
-        F.col("enrich_ts").alias("enrichment_timestamp"),
-        F.expr(valid).alias("transition_valid"),
-        F.expr(explanation_sql(from_state, eff)).alias("transition_reason"),
-        F.expr(change).alias("change_type"),
+        prior=prod.select("cve_id", "package", F.col("status").alias("prod_state")),
     )
 
     staged_path = f"{config.run_path(run_id)}/state_machine/processed"

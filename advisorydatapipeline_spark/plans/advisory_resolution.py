@@ -1,44 +1,56 @@
-"""Flagship plan: advisory state resolution.
+"""Advisory state resolution: the paper's state-machine chain as one SQL text.
 
-The reference's signature composition (SURVEY.md §7 Phase 1), mapped
-onto the synthetic star schema per FIXTURES.md:
+:func:`resolution_sql` is the reference's single state-machine
+statement (map_new_info_with_udf.py:16-179, SURVEY.md §3.3) over four
+relation placeholders:
 
-  customers  -> master advisory list     (reference: raw_data)
-  events     -> enrichment feed          (reference: normalized_enrichment)
-  orders     -> prior prod state         (reference: prod_cve_state_machine)
-  customers with negative balance -> manual overrides
-                                         (reference: raw_not_applicable_cves)
+  {master}      keys, match columns, advisory_version   (reference: raw_data)
+  {overrides}   match columns, ov_state, ov_text, ov_version
+                                                        (raw_not_applicable_cves)
+  {enrichment}  keys, enrich_state, enrich_text, enrich_version,
+                enrich_priority, enrich_ts, enrich_tiebreak, enrich_source
+                                                        (normalized_enrichment)
+  {prior}       keys, prod_state                        (prod_cve_state_machine)
 
-Pipeline: window top-1 dedup of the enrichment feed per key by
-(priority DESC, ts DESC) [reference map_new_info_with_udf.py:41-50] ->
-case-insensitive compound-key override join
-[packages_to_enrich.py:34] -> double left join merge [:110-114] ->
-COALESCE source precedence (manual > enrichment > keep) [:70-104] ->
-native FSM transition [state_transitions.py] -> change-type
-classification [:160-166] -> CASE-ranked ORDER BY [:170-178].
+Chain: W1 top-1 of the enrichment per key by (priority, ts, tiebreak)
+DESC [:41-50] -> case-insensitive compound-key override join on the
+match columns [packages_to_enrich.py:34] -> double left join merge
+[:110-114] -> COALESCE source precedence (manual > enrichment > prior)
+[:70-104] -> native FSM transition [state_transitions.py] ->
+change-type classification [:160-166].
 
-The DuckDB oracle is generated from the same portable SQL snippet
-builders the Spark plan evaluates via ``F.expr`` — one definition of
-the CASE logic, two engines.
+Spark runs the text as ``spark.sql(text, master=df, ...)``; DuckDB runs
+the same text formatted with CTE names. Its two callers only map
+columns onto the four relations: ``pipeline.run_state_machine_phase``
+(staged advisories, overrides, normalized enrichment, prod snapshot)
+and the flagship entry below, which maps the synthetic star schema
+(FIXTURES.md) in CTEs of one text that both engines run:
+
+  customers                      -> master
+  customers with negative balance -> overrides (upper-cased, to exercise
+                                    the case-insensitive join)
+  events                         -> enrichment
+  latest order per customer      -> prior
 
 Scale notes (100 TB): the only wide shuffles are the window dedup
-(one shuffle on user key) and the two fact-side left joins (shuffled
-on the same key — AQE coalesces). The override dim and the per-key
-prod snapshot are broadcast-sized in any realistic advisory workload;
-we hint ``broadcast`` for the override dim explicitly.
+(one shuffle on the key) and the two fact-side left joins (shuffled
+on the same key; AQE coalesces). The override dimension is
+broadcast-sized in any realistic advisory workload; the text hints
+``BROADCAST`` for it (a comment to DuckDB).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from advisorydatapipeline_spark.operators.state_machine import (
     apply_sql,
     explanation_sql,
+    norm_sql,
     valid_sql,
 )
-from advisorydatapipeline_spark.operators.window_ops import top_k_per_key
 
 # event_type -> (priority, candidate state): the enrichment feed's
 # normalization table (plays the role of nvd_normalization.py:18-57)
@@ -73,196 +85,131 @@ def _case_map_sql(expr: str, mapping: dict[str, str | int], else_sql: str) -> st
     return f"CASE {arms} ELSE {else_sql} END"
 
 
-def _priority_sql(expr: str) -> str:
-    return _case_map_sql(expr, {k: v[0] for k, v in EVENT_NORMALIZATION.items()}, "0")
+def resolution_sql(keys: Sequence[str], match: Sequence[str]) -> str:
+    """The resolution chain over ``{master}``, ``{overrides}``,
+    ``{enrichment}`` and ``{prior}``, joined on ``keys`` (overrides on
+    ``match``, case-insensitively). Returns every master column plus
+    the ``STATE_MACHINE_SCHEMA`` columns, ``from_state`` and
+    ``candidate_state``.
 
-
-def _cand_state_sql(expr: str) -> str:
-    return _case_map_sql(
-        expr, {k: v[1] for k, v in EVENT_NORMALIZATION.items()}, "'unknown'"
-    )
-
-
-def _derive_sql(prefix: str = "") -> dict[str, str]:
-    """The shared post-join derivation expressions (portable SQL)."""
-    ov, cand, prod = "ov_state", "enrich_state", "prod_state"
-    from_state = f"coalesce({prod}, 'unknown')"
-    candidate = f"coalesce({ov}, {cand})"
-    eff = f"coalesce({ov}, {cand}, {prod}, 'unknown')"
+    A manual override is authoritative: a non-NULL ``ov_state`` sets
+    the state (the reference feeds internal_status in as the current
+    state, packages_to_enrich.py:25-32) and is never ``blocked``; an
+    enrichment candidate must pass the FSM.
+    """
+    from_state = "coalesce(prod_state, 'unknown')"
+    candidate = "coalesce(ov_state, enrich_state)"
+    eff = "coalesce(ov_state, enrich_state, prod_state, 'unknown')"
     valid = valid_sql(from_state, eff)
-    new_state = apply_sql(from_state, eff)
+    ov_on = " AND ".join(f"lower(m.{c}) = lower(o.{c})" for c in match)
+
+    def key_on(r: str) -> str:
+        return " AND ".join(f"m.{k} = {r}.{k}" for k in keys)
+
+    new_state = (
+        f"CASE WHEN ov_state IS NOT NULL THEN {norm_sql('ov_state')} "
+        f"ELSE {apply_sql(from_state, eff)} END"
+    )
     change = (
-        f"CASE WHEN {prod} IS NULL THEN 'new' "
+        f"CASE WHEN prod_state IS NULL THEN 'new' "
         f"WHEN {candidate} IS NULL THEN 'unchanged' "
-        f"WHEN NOT ({valid}) THEN 'blocked' "
-        f"WHEN ({new_state}) <> ({from_state}) THEN 'status_changed' "
+        f"WHEN ov_state IS NULL AND NOT ({valid}) THEN 'blocked' "
+        f"WHEN ({new_state}) <> {from_state} THEN 'status_changed' "
         f"ELSE 'enriched_unchanged' END"
     )
-    return {
-        "from_state": from_state,
-        "candidate_state": candidate,
-        "transition_valid": valid,
-        "new_state": new_state,
-        "transition_reason": explanation_sql(from_state, eff),
-        "change_type": change,
-        "data_source": (
-            f"CASE WHEN {ov} IS NOT NULL THEN 'manual' "
-            f"WHEN {cand} IS NOT NULL THEN 'enrichment' "
-            f"ELSE 'production' END"
-        ),
-        "priority": (
-            f"CAST(CASE WHEN {ov} IS NOT NULL THEN 100 ELSE enrich_priority END AS INT)"
-        ),
-        "sort_rank": "CAST("
-        + _case_map_sql("change_type", CHANGE_RANK, "5")
-        + " AS INT)",
-    }
+    return f"""
+SELECT /*+ BROADCAST(o) */ m.*,
+       prod_state AS previous_status,
+       {from_state} AS from_state,
+       {candidate} AS candidate_state,
+       {new_state} AS status,
+       coalesce(ov_version, enrich_version, advisory_version) AS fixed_version,
+       coalesce(ov_text, enrich_text) AS customer_text,
+       CASE WHEN ov_state IS NOT NULL THEN 'manual'
+            WHEN enrich_state IS NOT NULL THEN enrich_source
+            ELSE 'production' END AS data_source,
+       CAST(CASE WHEN ov_state IS NOT NULL THEN 100
+                 ELSE enrich_priority END AS INT) AS priority,
+       enrich_ts AS enrichment_timestamp,
+       {valid} AS transition_valid,
+       {explanation_sql(from_state, eff)} AS transition_reason,
+       {change} AS change_type
+FROM {{master}} m
+LEFT JOIN {{overrides}} o ON {ov_on}
+LEFT JOIN (
+  SELECT * FROM (
+    SELECT *, ROW_NUMBER() OVER (
+      PARTITION BY {", ".join(keys)}
+      ORDER BY enrich_priority DESC, enrich_ts DESC, enrich_tiebreak DESC
+    ) AS _rn
+    FROM {{enrichment}}
+  ) ranked WHERE _rn = 1
+) e ON {key_on("e")}
+LEFT JOIN {{prior}} p ON {key_on("p")}
+"""
 
 
-def advisory_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-first implementation (DataFrame API + shared CASE text)."""
-    # local import: queries/__init__ imports this module via registry
-    from advisorydatapipeline_spark.queries.helpers import load
-
-    customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    events = load(spark, sf_dir, "events")
-
-    master = customer.select(
-        F.col("c_custkey").alias("cust_key"),
-        F.col("c_name").alias("cust_name"),
-        F.lower("c_mktsegment").alias("package"),
+def _flagship_sql() -> str:
+    """The flagship as one text over ``{customer}``, ``{orders}`` and
+    ``{events}``: CTEs map the star schema onto the chain's relations."""
+    core = resolution_sql(("cust_key",), ("cust_name", "package")).format(
+        master="master", overrides="overrides", enrichment="enrichment", prior="prior"
     )
-
-    # manual overrides, deliberately upper-cased to exercise the
-    # case-insensitive compound-key join (reference J1)
-    overrides = customer.filter(F.col("c_acctbal") < 0).select(
-        F.upper("c_name").alias("ov_name"),
-        F.upper("c_mktsegment").alias("ov_seg"),
-        F.lit("not_applicable").alias("ov_state"),
+    priority = _case_map_sql(
+        "event_type", {k: v[0] for k, v in EVENT_NORMALIZATION.items()}, "0"
     )
-
-    # enrichment feed: normalize then window-dedup top-1 per key (W1)
-    enriched = events.select(
-        F.col("user_id").alias("cust_key"),
-        F.expr(_priority_sql("event_type")).alias("enrich_priority"),
-        F.expr(_cand_state_sql("event_type")).alias("enrich_state"),
-        F.col("ts"),
-        F.col("event_id"),
+    cand = _case_map_sql(
+        "event_type", {k: v[1] for k, v in EVENT_NORMALIZATION.items()}, "'unknown'"
     )
-    enrich_top1 = top_k_per_key(
-        enriched,
-        ["cust_key"],
-        [
-            F.col("enrich_priority").desc(),
-            F.col("ts").desc(),
-            F.col("event_id").desc(),
-        ],
-        k=1,
-    ).select("cust_key", "enrich_priority", "enrich_state")
-
-    # prior prod state: latest order per customer -> state (W1 again)
-    prod = (
-        top_k_per_key(
-            orders,
-            ["o_custkey"],
-            [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()],
-            k=1,
-        )
-        .select(
-            F.col("o_custkey").alias("cust_key"),
-            F.expr(
-                _case_map_sql("o_orderstatus", ORDERSTATUS_STATE, "'unknown'")
-            ).alias("prod_state"),
-        )
-    )
-
-    combined = (
-        master.join(
-            F.broadcast(overrides),
-            (F.lower(master.cust_name) == F.lower(overrides.ov_name))
-            & (F.lower(master.package) == F.lower(overrides.ov_seg)),
-            "left",
-        )
-        .join(enrich_top1, "cust_key", "left")
-        .join(prod, "cust_key", "left")
-    )
-
-    d = _derive_sql()
-    resolved = combined.select(
-        "cust_key",
-        "package",
-        F.col("prod_state").alias("previous_status"),
-        F.expr(d["from_state"]).alias("from_state"),
-        F.expr(d["candidate_state"]).alias("candidate_state"),
-        F.expr(d["new_state"]).alias("new_state"),
-        F.expr(d["transition_valid"]).alias("transition_valid"),
-        F.expr(d["transition_reason"]).alias("transition_reason"),
-        F.expr(d["change_type"]).alias("change_type"),
-        F.expr(d["data_source"]).alias("data_source"),
-        F.expr(d["priority"]).alias("priority"),
-    )
-    return resolved.withColumn(
-        "sort_rank", F.expr(_derive_sql()["sort_rank"])
-    ).orderBy("sort_rank", "cust_key")
-
-
-def advisory_resolution_oracle(tables_prefix: str = "") -> str:
-    """The same plan as one ANSI SQL query (DuckDB oracle)."""
-    d = _derive_sql()
     return f"""
 WITH master AS (
   SELECT c_custkey AS cust_key, c_name AS cust_name,
-         lower(c_mktsegment) AS package
-  FROM customer
+         lower(c_mktsegment) AS package,
+         CAST(NULL AS STRING) AS advisory_version
+  FROM {{customer}}
 ), overrides AS (
-  SELECT upper(c_name) AS ov_name, upper(c_mktsegment) AS ov_seg,
-         'not_applicable' AS ov_state
-  FROM customer WHERE c_acctbal < 0
-), enriched AS (
+  SELECT upper(c_name) AS cust_name, upper(c_mktsegment) AS package,
+         'not_applicable' AS ov_state,
+         CAST(NULL AS STRING) AS ov_text, CAST(NULL AS STRING) AS ov_version
+  FROM {{customer}} WHERE c_acctbal < 0
+), enrichment AS (
   SELECT user_id AS cust_key,
-         {_priority_sql("event_type")} AS enrich_priority,
-         {_cand_state_sql("event_type")} AS enrich_state,
-         ts, event_id,
-         ROW_NUMBER() OVER (
-           PARTITION BY user_id
-           ORDER BY {_priority_sql("event_type")} DESC, ts DESC, event_id DESC
-         ) AS rn
-  FROM events
-), enrich_top1 AS (
-  SELECT cust_key, enrich_priority, enrich_state FROM enriched WHERE rn = 1
-), prod_ranked AS (
+         {priority} AS enrich_priority, {cand} AS enrich_state,
+         CAST(NULL AS STRING) AS enrich_text,
+         CAST(NULL AS STRING) AS enrich_version,
+         ts AS enrich_ts, event_id AS enrich_tiebreak,
+         'enrichment' AS enrich_source
+  FROM {{events}}
+), prior AS (
   SELECT o_custkey AS cust_key,
-         {_case_map_sql("o_orderstatus", ORDERSTATUS_STATE, "'unknown'")} AS prod_state,
-         ROW_NUMBER() OVER (
-           PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC
-         ) AS rn
-  FROM orders
-), prod AS (
-  SELECT cust_key, prod_state FROM prod_ranked WHERE rn = 1
-), combined AS (
-  SELECT m.cust_key, m.package, o.ov_state, e.enrich_priority,
-         e.enrich_state, p.prod_state
-  FROM master m
-  LEFT JOIN overrides o
-    ON lower(m.cust_name) = lower(o.ov_name)
-   AND lower(m.package) = lower(o.ov_seg)
-  LEFT JOIN enrich_top1 e ON m.cust_key = e.cust_key
-  LEFT JOIN prod p ON m.cust_key = p.cust_key
-), resolved AS (
-  SELECT cust_key, package,
-         prod_state AS previous_status,
-         {d["from_state"]} AS from_state,
-         {d["candidate_state"]} AS candidate_state,
-         {d["new_state"]} AS new_state,
-         {d["transition_valid"]} AS transition_valid,
-         {d["transition_reason"]} AS transition_reason,
-         {d["change_type"]} AS change_type,
-         {d["data_source"]} AS data_source,
-         {d["priority"]} AS priority
-  FROM combined
-)
-SELECT *, {d["sort_rank"]} AS sort_rank
+         {_case_map_sql("o_orderstatus", ORDERSTATUS_STATE, "'unknown'")} AS prod_state
+  FROM (
+    SELECT *, ROW_NUMBER() OVER (
+      PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC
+    ) AS rn
+    FROM {{orders}}
+  ) ranked WHERE rn = 1
+), resolved AS ({core})
+SELECT cust_key, package, previous_status, from_state, candidate_state,
+       status AS new_state, transition_valid, transition_reason,
+       change_type, data_source, priority,
+       CAST({_case_map_sql("change_type", CHANGE_RANK, "5")} AS INT) AS sort_rank
 FROM resolved
 ORDER BY sort_rank, cust_key
 """
+
+
+def advisory_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship entry: :func:`_flagship_sql` on Spark."""
+    # local import: queries/__init__ imports this module via registry
+    from advisorydatapipeline_spark.queries.helpers import load
+
+    return spark.sql(
+        _flagship_sql(),
+        **{t: load(spark, sf_dir, t) for t in ("customer", "orders", "events")},
+    )
+
+
+def advisory_resolution_oracle() -> str:
+    """The same text for DuckDB, over the fixture's table names."""
+    return _flagship_sql().format(customer="customer", orders="orders", events="events")

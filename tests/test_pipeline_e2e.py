@@ -5,19 +5,23 @@ terminal-state stickiness, change-type classification, run isolation.
 
 from __future__ import annotations
 
+import shutil
 from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
+import duckdb
 import pytest
 from pyspark.sql import types as T
 
 from advisorydatapipeline_spark.config import PipelineConfig
 from advisorydatapipeline_spark.operators.enrichment import UpstreamSource
 from advisorydatapipeline_spark.pipeline import (
+    KEYS,
     NormalizedSource,
     default_normalize,
     run_pipeline,
 )
+from advisorydatapipeline_spark.plans.advisory_resolution import resolution_sql
 
 T0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
 
@@ -235,17 +239,21 @@ def test_two_sources_priority_wins_and_views_registered(spark, cfg_base):
 def test_duplicate_source_names_rejected_before_any_write(spark, cfg_base):
     fetch = make_fetch({("CVE-1", "alpha"): "1.0"})
     cfg = PipelineConfig(cfg_base, cache_ttl_hours=24.0, clock=lambda: T0)
-    with pytest.raises(ValueError, match="'nvd'"):
-        run_pipeline(
-            spark, cfg, "dup",
-            advisories=adv_df(spark, [("alpha", "CVE-1", None)]),
-            overrides=ov_df(spark, []),
-            sources=[source("nvd", fetch, 5, T0), source("nvd", fetch, 3, T0)],
-        )
     base = Path(cfg_base)
-    assert not (base / "staging" / "run_id=dup" / "enrichment").exists()
-    assert not (base / "enrichment_cache").exists()
-    assert not (base / "prod").exists()
+    for run_id, sources, match in [
+        ("dup", [source("nvd", fetch, 5, T0), source("nvd", fetch, 3, T0)], "'nvd'"),
+        ("none", [], "no enrichment sources"),
+    ]:
+        with pytest.raises(ValueError, match=match):
+            run_pipeline(
+                spark, cfg, run_id,
+                advisories=adv_df(spark, [("alpha", "CVE-1", None)]),
+                overrides=ov_df(spark, []),
+                sources=sources,
+            )
+        assert not (base / "staging" / f"run_id={run_id}" / "enrichment").exists()
+        assert not (base / "enrichment_cache").exists()
+        assert not (base / "prod").exists()
 
 
 def _staged_raw_rows(cfg_base, run_id, source_name):
@@ -315,3 +323,159 @@ def test_upstream_outage_is_not_cached(spark, cfg_base):
     assert _staged_raw_rows(cfg_base, "r3", "nvd") == 1
     assert row.status == "fixed"
     assert row.change_type == "status_changed"
+
+
+# --- the resolution text, run by DuckDB over the pipeline's relations -------
+
+PROCESSED_COLS = (
+    "cve_id, package, status, previous_status, fixed_version, customer_text, "
+    "data_source, priority, enrichment_timestamp, transition_valid, "
+    "transition_reason, change_type"
+)
+
+
+def duckdb_resolve(master, overrides, enrichment, prior):
+    """``resolution_sql`` in DuckDB, with the state-machine phase's
+    column mapping written as CTEs over four SELECTs that return the
+    phase's inputs: staged advisories, overrides, normalized
+    enrichment and the prod snapshot."""
+    text = resolution_sql(KEYS, KEYS).format(
+        master="master", overrides="overrides", enrichment="enrichment",
+        prior="prior",
+    )
+    return duckdb.sql(f"""
+WITH master AS (
+  SELECT DISTINCT cve_id, package_name AS package,
+         fixed_version AS advisory_version FROM ({master})
+), overrides AS (
+  SELECT DISTINCT lower(cve_id) AS cve_id, lower(package) AS package,
+         internal_status AS ov_state, status AS ov_text,
+         fixed_version AS ov_version FROM ({overrides})
+), enrichment AS (
+  SELECT cve_id, package, state AS enrich_state,
+         customer_text AS enrich_text, fixed_version AS enrich_version,
+         priority AS enrich_priority, enrichment_timestamp AS enrich_ts,
+         enrichment_source AS enrich_tiebreak,
+         enrichment_source AS enrich_source FROM ({enrichment})
+), prior AS (
+  SELECT cve_id, package, status AS prod_state FROM ({prior})
+)
+SELECT {PROCESSED_COLS} FROM ({text}) resolved""").fetchall()
+
+
+def test_manual_override_sets_prod_state(spark, cfg_base):
+    """A manual override sets the state even where the FSM forbids the
+    transition from prod (fixed -> not_applicable, will_not_fix ->
+    pending_upstream): the row reads status_changed, never blocked."""
+    advisories = adv_df(spark, [("alpha", "CVE-1", None), ("beta", "CVE-2", None)])
+    fetch = make_fetch({("CVE-1", "alpha"): "1.0"})
+    runs = [
+        (T0, [("CVE-2", "beta", "Declined", None, "will_not_fix")]),
+        (T0 + timedelta(hours=1), [
+            ("cve-1", "ALPHA", "Not shipped", None, "not_applicable"),
+            ("CVE-2", "beta", "Reopened", None, "pending_upstream"),
+        ]),
+    ]
+    for i, (at, ov_rows) in enumerate(runs):
+        cfg = PipelineConfig(cfg_base, cache_ttl_hours=24.0, clock=lambda at=at: at)
+        prod = run_pipeline(
+            spark, cfg, f"r{i + 1}",
+            advisories=advisories, overrides=ov_df(spark, ov_rows),
+            sources=[source("nvd", fetch, 5, at)],
+        )
+        rows = {(r.cve_id, r.package): r for r in prod.collect()}
+        if i == 0:
+            assert rows[("CVE-1", "alpha")].status == "fixed"
+            assert rows[("CVE-2", "beta")].status == "will_not_fix"
+    got = {
+        k: (r.previous_status, r.status, r.change_type, r.data_source)
+        for k, r in rows.items()
+    }
+    assert got == {
+        ("CVE-1", "alpha"): ("fixed", "not_applicable", "status_changed", "manual"),
+        ("CVE-2", "beta"): (
+            "will_not_fix", "pending_upstream", "status_changed", "manual",
+        ),
+    }
+
+    # the same two rows through the resolution text in DuckDB
+    no_rows = (
+        "SELECT 'x' AS cve_id, 'x' AS package, 'x' AS state, "
+        "'x' AS customer_text, 'x' AS fixed_version, 1 AS priority, "
+        "TIMESTAMP '2026-01-01' AS enrichment_timestamp, "
+        "'x' AS enrichment_source WHERE FALSE"
+    )
+    resolved = duckdb_resolve(
+        "SELECT * FROM (VALUES ('alpha', 'CVE-1', NULL), ('beta', 'CVE-2', NULL)) "
+        "t(package_name, cve_id, fixed_version)",
+        "SELECT * FROM (VALUES "
+        "('cve-1', 'ALPHA', 'Not shipped', NULL, 'not_applicable'), "
+        "('CVE-2', 'beta', 'Reopened', NULL, 'pending_upstream')) "
+        "t(cve_id, package, status, fixed_version, internal_status)",
+        no_rows,
+        "SELECT * FROM (VALUES ('CVE-1', 'alpha', 'fixed'), "
+        "('CVE-2', 'beta', 'will_not_fix')) t(cve_id, package, status)",
+    )
+    assert {
+        (r[0], r[1]): (r[3], r[2], r[11], r[6]) for r in resolved
+    } == got
+
+
+def test_state_machine_phase_matches_duckdb_text(spark, cfg_base, tmp_path):
+    """Run 2 of a two-run fixture, so prod is not empty: the phase's
+    staged ``processed`` rows equal DuckDB running the same resolution
+    text over the same staged inputs and the pre-run prod snapshot."""
+    base = Path(cfg_base)
+    advisories = [("alpha", "CVE-1", "0.1"), ("beta", "CVE-2", None),
+                  ("gamma", "CVE-3", None), ("delta", "CVE-4", None)]
+    runs = [
+        (T0, advisories,
+         [("cve-3", "GAMMA", "Not applicable here", None, "not_applicable")],
+         {"CVE-1": "1.0"}, {"CVE-1": "0.9", "CVE-2": "2.0"}),
+        # past the TTL: every key not overridden is fetched again
+        (T0 + timedelta(hours=25), advisories + [("epsilon", "CVE-5", "5.0")],
+         [("cve-3", "GAMMA", "Not applicable here", None, "not_applicable"),
+          ("CVE-1", "Alpha", "Withdrawn", "1.1", "will_not_fix")],
+         {"CVE-4": "4.0"}, {"CVE-2": "2.1", "CVE-5": "5.1"}),
+    ]
+    for i, (at, adv_rows, ov_rows, nvd, osv) in enumerate(runs):
+        if i == 1:
+            shutil.copytree(
+                base / "prod" / "state_machine" / "cve_state_machine",
+                tmp_path / "prior",
+            )
+        pkg = {cve: p for p, cve, _ in adv_rows}
+        cfg = PipelineConfig(cfg_base, cache_ttl_hours=24.0, clock=lambda at=at: at)
+        run_pipeline(
+            spark, cfg, f"r{i + 1}",
+            advisories=adv_df(spark, adv_rows), overrides=ov_df(spark, ov_rows),
+            sources=[
+                source("nvd", make_fetch({(c, pkg[c]): v for c, v in nvd.items()}), 5, at),
+                source("osv", make_fetch({(c, pkg[c]): v for c, v in osv.items()}), 3, at),
+            ],
+        )
+
+    r2 = base / "staging" / "run_id=r2"
+
+    def scan(path):
+        return f"SELECT * FROM read_parquet('{path}/*.parquet')"
+
+    want = duckdb_resolve(
+        scan(r2 / "sources" / "data"),
+        scan(r2 / "sources" / "not_applicable_cves"),
+        "SELECT * FROM read_parquet("
+        f"'{r2}/enrichment/normalized/*/*.parquet', hive_partitioning = false)",
+        scan(tmp_path / "prior"),
+    )
+    got = duckdb.sql(
+        f"SELECT {PROCESSED_COLS} FROM "
+        f"read_parquet('{r2}/state_machine/processed/*.parquet')"
+    ).fetchall()
+    assert len(got) == 5
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    changes = {r[0]: r[11] for r in got}
+    assert changes == {
+        "CVE-1": "status_changed", "CVE-2": "blocked",
+        "CVE-3": "enriched_unchanged", "CVE-4": "status_changed",
+        "CVE-5": "new",
+    }

@@ -42,6 +42,7 @@ from advisorydatapipeline_spark.operators.similarity import (  # noqa: E402
     cosine_topk,
     ivf_topk,
 )
+from advisorydatapipeline_spark.queries.graph_queries import SUPP_OFFSET  # noqa: E402
 
 REPLICAS = [1, 2, 4]
 MAX_DOC_FREQ = 100
@@ -265,9 +266,6 @@ def run_similarity(spark, path: str) -> dict[str, float]:
     return out
 
 
-GRAPH_SUPP_OFFSET = 10_000_000  # graph_queries.SUPP_OFFSET
-
-
 def edge_corpus(spark, sf_dir: str, r: int, base: str) -> str:
     """Replicate the customer<->supplier edge list r times as DISJOINT
     copies (node ids offset per replica): the honest scaling for the
@@ -285,7 +283,7 @@ def edge_corpus(spark, sf_dir: str, r: int, base: str) -> str:
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(
             F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + GRAPH_SUPP_OFFSET).alias("dst"),
+            (F.col("l_suppkey") + SUPP_OFFSET).alias("dst"),
         )
         .distinct()
     )
