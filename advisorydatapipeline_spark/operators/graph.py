@@ -6,28 +6,34 @@ dedup GROUPS: pairs from MinHash/SimHash/Jaccard are edges of a
 similarity graph, and the unit of deduplication is its connected
 component (keep one doc per component).
 
-Every operator is a Pregel-style loop expressed as DataFrame joins
-over bare node ids (document payloads never enter the graph). The
-loop-invariant edge side is built once by :func:`_loop_edges` —
-pre-partitioned on the per-round join key and materialized — so only
-the small per-round side shuffles or broadcasts. ``localCheckpoint``
-truncates lineage each round; without it the plan doubles per
-iteration and the driver, not the cluster, becomes the bottleneck.
-The converging operators (connected components, k-core) share one
-converge-or-raise loop, :func:`_fixpoint`: the driver only reads a
-scalar witness observed on each round's lineage cut, never row data.
+Every operator is a Pregel-style loop expressed as DataFrame joins,
+windows and aggregates over bare node ids (document payloads never
+enter the graph). Where a loop joins a per-round side against the
+edges, the loop-invariant edge side is built once by
+:func:`_loop_edges` — pre-partitioned on the per-round join key and
+materialized — so only the small per-round side shuffles or
+broadcasts. ``localCheckpoint`` truncates lineage each round; without
+it the plan doubles per iteration and the driver, not the cluster,
+becomes the bottleneck. The converging operators (connected
+components, k-core) share one converge-or-raise loop,
+:func:`_fixpoint`: the driver only reads a scalar witness observed on
+each round's lineage cut, never row data. Every loop labels its
+rounds' Spark jobs ``<op>:<round>`` (:func:`_rounds`).
 
-Connected components is plain min-label propagation: after round
-``r`` (counting from 1) each node holds the minimum id within
-``r + 1`` hops, so the round count equals the largest hop distance
-from any node to its component's minimum node (at least 1).
+Connected components is star contraction: alternating large-star and
+small-star rounds over canonical ``(lo, hi)`` edge pairs (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC 2014). It
+rewrites the edge list until each component is one star centred on
+its minimum node, in O(log^2 n) rounds (about log n observed), and
+never joins a table with itself.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from advisorydatapipeline_spark.sources.io import scratch_dir
@@ -63,34 +69,6 @@ def _iter_side(df: DataFrame, n_rows: int | None) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
-#: Target edge rows per partition when compacting a cached
-#: loop-invariant frame for the per-round jobs. In the broadcast
-#: regime the label side ships to every task, so the cached edge
-#: frame's PARTITION COUNT is pure per-round task tax: a 22k-edge
-#: graph spread over a 32-partition shuffle width schedules 32
-#: near-empty tasks per round. 50k rows/partition keeps CPU-heavy
-#: rounds parallel (a 1M-edge graph still fans out to 20 partitions)
-#: while tiny graphs compact to 1-2. Only applied below
-#: GRAPH_BROADCAST_MAX_ROWS, where the per-round join broadcasts and
-#: the edge frame's hash partitioning is irrelevant — coalesce() is a
-#: narrow, shuffle-free read of the cache — and only in
-#: connected_components once the loop has demonstrated depth (round
-#: 3+): the extra count action and narrowed parallelism only repay
-#: on deep loops.
-LOOP_ROWS_PER_PART = 50_000
-
-
-def _compact_loop_frame(df: DataFrame, n_rows: int) -> DataFrame:
-    """Coalesce a persisted loop-invariant frame to a partition count
-    sized to its row count (see :data:`LOOP_ROWS_PER_PART`). Returns
-    ``df`` unchanged when the current width is already right."""
-    width = df.rdd.getNumPartitions()
-    target = max(1, min(width, -(-n_rows // LOOP_ROWS_PER_PART)))
-    if target >= width:
-        return df
-    return df.coalesce(target)
-
-
 def _cut_lineage(df: DataFrame, reliable: bool) -> DataFrame:
     """Truncate plan lineage between iterations.
 
@@ -123,33 +101,48 @@ def _observed_cut(
     return _cut_lineage(df.observe(obs, *metrics), reliable), obs.get
 
 
-def _fixpoint(
-    step, state, witness, prev, max_rounds, name, reliable, owned=None
-):
+@contextmanager
+def _rounds(df: DataFrame, op: str, *, owned: bool = False):
+    """Scope of one operator's loop. The yielded ``mark(i)`` labels
+    the Spark jobs that follow ``<op>:<i>`` (the
+    ``spark.job.description`` local property, shown per job in the UI
+    and the event log). On every exit the caller's description is
+    restored and, when ``owned``, the persisted ``df`` the rounds read
+    is unpersisted."""
+    sc = df.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    try:
+        yield lambda i: sc.setLocalProperty(
+            "spark.job.description", f"{op}:{i}"
+        )
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+        if owned:
+            df.unpersist()
+
+
+def _fixpoint(step, state, witness, prev, max_rounds, name, reliable):
     """The converge-or-raise loop: ``state = step(i, state)`` each
     round, lineage-cut with the scalar ``witness`` aggregate observed
     on the cut, until the witness repeats its previous value (``prev``
-    seeds round 0). The witness must be strictly monotone while the
-    state changes, so a repeat proves the fixpoint. Hitting
-    ``max_rounds`` RAISES: a truncated run returns plausible but WRONG
-    results. ``owned`` — a persisted frame the rounds read — is
-    unpersisted on every exit."""
-    try:
+    seeds round 0; ``None`` never repeats). The witness must be
+    strictly monotone while the state changes, so a repeat proves the
+    fixpoint. Hitting ``max_rounds`` RAISES: a truncated run returns
+    plausible but WRONG results."""
+    with _rounds(state, name) as mark:
         for i in range(max_rounds):
+            mark(i)
             state, seen = _observed_cut(
                 step(i, state), reliable, f"{name}_{i}", witness.alias("w")
             )
             if seen["w"] == prev:
                 return state
             prev = seen["w"]
-        raise RuntimeError(
-            f"{name} did not converge to a fixpoint within {max_rounds} "
-            "rounds — raise the round cap (a truncated run returns "
-            "WRONG results, not approximate ones)"
-        )
-    finally:
-        if owned is not None:
-            owned.unpersist()
+    raise RuntimeError(
+        f"{name} did not converge to a fixpoint within {max_rounds} "
+        "rounds — raise the round cap (a truncated run returns "
+        "WRONG results, not approximate ones)"
+    )
 
 
 def _loop_edges(
@@ -182,54 +175,83 @@ def connected_components(
 
     Returns (node, component) where component is the minimum node id
     reachable from ``node``; every node appearing in any edge gets a
-    row. Deterministic: min-labels are order-independent.
+    row, so a node whose only edge is a self-loop is a component of
+    its own. Deterministic: the result is a function of the edge set.
 
-    Each node is seeded with min(node, min(neighbors)); each round
-    then min-combines neighbor labels, so after round ``r`` (counting
-    from 1) a node holds the minimum id within ``r + 1`` hops and the
-    last round only confirms the fixpoint. The round count is the
-    largest hop distance from any node to its component's minimum
-    node (at least 1): near-dup graphs converge in 1-2 rounds, while
-    a path numbered in ascending order takes one round per edge. A
-    component whose farthest node lies more than ``max_iter`` hops
-    from its minimum RAISES rather than returning split components.
+    Star contraction over canonical ``(lo, hi)`` rows, ``lo <= hi``.
+    The rows start as each edge's canonical pair plus a self row
+    ``(x, x)`` for each endpoint. Each round is one large-star and one
+    small-star phase, each one window over a single partition key, so
+    no node's neighbour list ever lands in one row:
 
-    Convergence is CHECKED, not assumed: labels only decrease, so the
-    exact label sum is a strictly decreasing witness and the loop runs
-    until it stabilizes.
+    - large star: ``m(u)`` is the least id among ``u`` and all its
+      neighbours; each row ``(lo, hi)`` becomes ``(m(lo), hi)``.
+    - small star: ``m(hi)`` is the least ``lo`` among the rows ending
+      at ``hi``; a row whose ``lo`` is not ``m(hi)`` becomes
+      ``(m(hi), lo)``, and the row ``(m(hi), hi)`` stays.
+    - duplicate rows are dropped between the phases.
+
+    Both phases preserve every component, and every node keeps at
+    least one row ending at it. Kiveris et al. bound the alternation
+    at O(log^2 n) rounds; about log n are observed (a 300-node
+    ascending path takes 10). More than ``max_iter`` rounds RAISES
+    rather than returning split components.
+
+    Convergence is CHECKED, not assumed. The witness is
+    ``(count(*), sum(lo + hi))`` in ``decimal(38,0)``, and it is
+    strictly monotone:
+
+    - in both phases each input row maps to one row whose endpoints
+      are no larger;
+    - the dedup can only drop rows;
+    - so the count never rises, and when it holds the sum can only
+      hold if every row mapped to itself. An equal witness after a
+      round therefore proves that neither phase changed the row set,
+      and that it has no duplicates.
+
+    A set fixed by both phases is a star forest centred on each
+    component's minimum. By the small star every node ends exactly
+    one row. By the large star no ``lo`` has a smaller neighbour, so
+    the row ending at a centre is its self row and every other row
+    joins a leaf to a centre smaller than it. The ``lo`` of the row
+    ending at a node is therefore its component, with no aggregate.
     """
-    und = _loop_edges(edges, src, dst, "b").persist()
-    witness = F.sum(F.col("label").cast("decimal(38,0)"))
-    labels, seen = _observed_cut(
-        und.groupBy("a")
-        .agg(F.least(F.col("a"), F.min("b")).alias("label"))
-        .withColumnRenamed("a", "node"),
-        reliable,
-        "connected_components_seed",
-        witness.alias("w"),
-        F.count(F.lit(1)).alias("n"),
+    # each edge's canonical row plus a self row per endpoint, from one
+    # scan of the caller's plan
+    lo, hi = F.least(src, dst), F.greatest(src, dst)
+    rows = edges.select(F.inline(F.array(*(
+        F.struct(x.alias("lo"), y.alias("hi"))
+        for x, y in ((lo, hi), (lo, lo), (hi, hi))
+    ))))
+    witness = F.expr(
+        "struct(count(*), sum(CAST(lo AS DECIMAL(38,0)) + "
+        "CAST(hi AS DECIMAL(38,0))))"
     )
-    n_nodes = seen["n"]
-    und_it = und
 
-    def merge(i: int, labels: DataFrame) -> DataFrame:
-        nonlocal und_it
-        if i == 2 and n_nodes <= GRAPH_BROADCAST_MAX_ROWS:
-            und_it = _compact_loop_frame(und, und.count())
-        nbr = und_it.join(
-            _iter_side(labels.withColumnRenamed("node", "b"), n_nodes), "b"
-        ).select(F.col("a").alias("node"), "label")
+    def star(_i: int, e: DataFrame) -> DataFrame:
+        # large star over both orientations, so the window sees every
+        # neighbour of lo
+        large = (
+            e.selectExpr(
+                "inline(array(struct(lo, hi), struct(hi AS lo, lo AS hi)))"
+            )
+            .withColumn("m", F.min("hi").over(Window.partitionBy("lo")))
+            .where("hi >= lo")
+            .select(F.least("lo", "m").alias("lo"), "hi")
+        )
+        # small star; repartitioning before the dedup lets its
+        # aggregate and the window share one exchange
         return (
-            labels.union(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            large.repartition("hi")
+            .dropDuplicates()
+            .withColumn("m", F.min("lo").over(Window.partitionBy("hi")))
+            .selectExpr("m AS lo", "IF(lo = m, hi, lo) AS hi")
         )
 
-    labels = _fixpoint(
-        merge, labels, witness, seen["w"], max_iter,
-        "connected_components", reliable, owned=und,
+    stars = _fixpoint(
+        star, rows, witness, None, max_iter, "connected_components", reliable
     )
-    return labels.select("node", F.col("label").alias("component"))
+    return stars.selectExpr("hi AS node", "lo AS component")
 
 
 PR_SCALE = 1_000_000  # rank fixed-point scale
@@ -258,19 +280,19 @@ def pagerank_quantized(
     unrolled SQL CTEs), at the cost of a bounded rounding bias
     (< deg ulps per node per iteration).
 
-    Scale design: same as connected_components — per iteration one
-    hash join of each node's contribution against the edge list on
-    the source key and one partial-aggregated sum on the destination
-    key; node payloads are a few longs only. Each node's degree rides
-    the rank table: in the deduplicated both-orientation edge frame a
-    node's in-degree equals its out-degree, so every round's
-    aggregate recounts it at no extra pass. Fixed ``iters`` (no
+    Scale design: per iteration one hash join of each node's
+    contribution against the edge list on the source key and one
+    partial-aggregated sum on the destination key; node payloads are
+    a few longs only. Each node's degree rides the rank table: in the
+    deduplicated both-orientation edge frame a node's in-degree
+    equals its out-degree, so every round's aggregate recounts it at
+    no extra pass. Fixed ``iters`` (no
     convergence collect) keeps the job graph static — the driver
     never inspects data.
     """
     und = _loop_edges(edges, src, dst, "a").persist()
     base = (1 * PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
-    try:
+    with _rounds(und, "pagerank_quantized", owned=True) as mark:
         # und is already hash-partitioned by "a", so this aggregate adds
         # no exchange
         ranks = und.groupBy("a").agg(
@@ -282,6 +304,7 @@ def pagerank_quantized(
         # scalar pins the per-iteration join strategy for the whole loop
         n_nodes = ranks.count()
         for i in range(iters):
+            mark(i)
             share = ranks.select(
                 "a",
                 F.expr(
@@ -302,8 +325,6 @@ def pagerank_quantized(
             # enough that the plan never compounds
             if i % 2 == 1 and i != iters - 1:
                 ranks = _cut_lineage(ranks, reliable)
-    finally:
-        und.unpersist()
     return ranks.select(F.col("a").alias("node"), "rank")
 
 
@@ -342,7 +363,8 @@ def bfs_hops(
     ``reliable=True`` each hop is a reliable-storage write.
     """
     adj = edges.repartition("a").persist()
-    try:
+    with _rounds(adj, "bfs_hops", owned=True) as mark:
+        mark(0)
         level = _cut_lineage(
             seeds.select(
                 F.col(seeds.columns[0]).alias("node"),
@@ -352,6 +374,7 @@ def bfs_hops(
         )
         levels = [level]
         for h in range(1, max_hops + 1):
+            mark(h)
             # visited = flat union of already-materialized levels — a
             # cheap scan, never a recomputation
             visited = levels[0].select("node")
@@ -377,8 +400,6 @@ def bfs_hops(
             if seen["n"] == 0:
                 break
             levels.append(level)
-    finally:
-        adj.unpersist()
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
@@ -477,12 +498,13 @@ def label_propagation(
     would double votes), so callers need not symmetrize or
     pre-distinct."""
     undp = _loop_edges(und, "a", "b", "b").persist()
-    try:
+    with _rounds(undp, "label_propagation", owned=True) as mark:
         labels = undp.select("a").distinct().withColumn("lab", F.col("a"))
         # node count measured once (warms the undp persist); the label
         # table holds exactly n_nodes rows every round
         n_nodes = labels.count()
-        for _ in range(rounds):
+        for i in range(rounds):
+            mark(i)
             votes = (
                 undp.join(
                     _iter_side(
@@ -502,6 +524,4 @@ def label_propagation(
                 ),
                 reliable,
             )
-    finally:
-        undp.unpersist()
     return labels

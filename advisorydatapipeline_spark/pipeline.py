@@ -209,6 +209,15 @@ def run_enrich_phase(
     return merged
 
 
+def _one_per_key(df: DataFrame) -> DataFrame:
+    """One row per ``KEYS`` value: the row whose other columns, as a
+    tuple compared left to right with NULL lowest, are greatest."""
+    rest = [c for c in df.columns if c not in KEYS]
+    return df.groupBy(*KEYS).agg(F.max(F.struct(*rest)).alias("_r")).select(
+        *KEYS, "_r.*"
+    )
+
+
 def run_state_machine_phase(
     spark: SparkSession,
     config: PipelineConfig,
@@ -219,23 +228,34 @@ def run_state_machine_phase(
 ) -> DataFrame:
     """Map the staged inputs and the prod snapshot onto the
     resolution text's four relations, stage its result and upsert it
-    into prod."""
+    into prod.
+
+    A key given twice resolves the same way whatever the row order:
+    the advisories keep the greatest ``fixed_version`` per
+    ``(cve_id, package)``, and the overrides, matched case-insensitively,
+    keep the greatest ``(internal_status, status, fixed_version)``
+    tuple per lower-cased key, compared left to right with NULL
+    lowest."""
     prod_path = f"{config.prod_path}/state_machine/cve_state_machine"
     prod = read_table(spark, prod_path, schemas.STATE_MACHINE_SCHEMA)
     processed = spark.sql(
         resolution_sql(KEYS, KEYS),
-        master=advisories.select(
-            "cve_id",
-            F.col("package_name").alias("package"),
-            F.col("fixed_version").alias("advisory_version"),
-        ).dropDuplicates(list(KEYS)),
-        overrides=overrides.select(
-            F.lower("cve_id").alias("cve_id"),
-            F.lower("package").alias("package"),
-            F.col("internal_status").alias("ov_state"),
-            F.col("status").alias("ov_text"),
-            F.col("fixed_version").alias("ov_version"),
-        ).dropDuplicates(list(KEYS)),
+        master=_one_per_key(
+            advisories.select(
+                "cve_id",
+                F.col("package_name").alias("package"),
+                F.col("fixed_version").alias("advisory_version"),
+            )
+        ),
+        overrides=_one_per_key(
+            overrides.select(
+                F.lower("cve_id").alias("cve_id"),
+                F.lower("package").alias("package"),
+                F.col("internal_status").alias("ov_state"),
+                F.col("status").alias("ov_text"),
+                F.col("fixed_version").alias("ov_version"),
+            )
+        ),
         enrichment=normalized.select(
             "cve_id",
             "package",

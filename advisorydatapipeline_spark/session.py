@@ -50,9 +50,9 @@ def get_spark(
         # byte-light CPU-heavy cached graphs collapsed to 1-3
         # partitions and serialized every downstream round
         # (canonical_corpus 2.5 -> 5.7 s, dedup_clusters 2.9 -> 4.7 s
-        # same box). The graph operators size their cached loop
-        # frames explicitly instead (operators/graph.py
-        # _compact_loop_frame, LOOP_ROWS_PER_PART).
+        # same box). Connected components no longer caches a loop
+        # frame: its star-contraction rounds rewrite the edge list
+        # (operators/graph.py).
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

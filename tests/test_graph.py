@@ -313,3 +313,101 @@ def test_raising_loops_release_their_cache(spark, monkeypatch):
         with _pytest.raises(RuntimeError, match="lineage cut failed"):
             run()
         assert cache.isEmpty()
+
+
+def _recording_cuts(monkeypatch, spark):
+    """Patch the lineage cut to record the job description each cut
+    runs under."""
+    from advisorydatapipeline_spark.operators import graph
+
+    seen = []
+    real = graph._cut_lineage
+
+    def recording(df, reliable):
+        seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return real(df, reliable)
+
+    monkeypatch.setattr(graph, "_cut_lineage", recording)
+    return seen
+
+
+def test_ascending_path_converges_in_log_rounds(spark, monkeypatch):
+    """A 300-node path numbered in ascending order, one round per hop
+    under min-label propagation, is one component within
+    2 * ceil(log2(300)) = 18 rounds."""
+    cuts = _recording_cuts(monkeypatch, spark)
+    got = _cc(spark, [(i, i + 1) for i in range(299)])
+    assert got == {i: 0 for i in range(300)}
+    assert 2 <= len(cuts) <= 18
+
+
+def test_empty_edge_list(spark, monkeypatch):
+    cuts = _recording_cuts(monkeypatch, spark)
+    df = spark.createDataFrame([], "id_a long, id_b long")
+    cc = connected_components(df, "id_a", "id_b")
+    assert cc.collect() == []
+    assert cc.schema.simpleString() == "struct<node:bigint,component:bigint>"
+    assert len(cuts) <= 2
+
+
+def test_self_loops_duplicates_and_negative_ids(spark):
+    got = _cc(
+        spark,
+        [(5, 5), (5, 5),  # a node whose only edge is a self-loop
+         (8, 7), (7, 7),  # a self-loop on a node with a neighbour
+         (-3, -1), (-1, 2), (2, -3), (2, -1),
+         (9, 4), (4, 9), (9, 4)],
+    )
+    assert got == {5: 5, 7: 7, 8: 7, -3: -3, -1: -3, 2: -3, 4: 4, 9: 4}
+
+
+def _union_find(edges):
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its set's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_random_graph_matches_union_find(spark):
+    import random
+
+    rng = random.Random(20141103)
+    edges = [
+        (rng.randrange(-100, 400), rng.randrange(-100, 400))
+        for _ in range(350)
+    ]
+    assert _cc(spark, edges) == _union_find(edges)
+
+
+def test_rounds_label_their_jobs_and_restore_the_caller(spark, monkeypatch):
+    """Each round's jobs run under ``connected_components:<round>``,
+    and the caller's description is back after a normal and after a
+    raising exit."""
+    import pytest as _pytest
+
+    sc = spark.sparkContext
+    cuts = _recording_cuts(monkeypatch, spark)
+    sc.setLocalProperty("spark.job.description", "caller")
+    try:
+        _cc(spark, [(i, i + 1) for i in range(60)])
+        assert cuts == [f"connected_components:{i}" for i in range(len(cuts))]
+        assert len(cuts) >= 2
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(60)], "a long, b long"
+        )
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(edges, "a", "b", max_iter=2)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)

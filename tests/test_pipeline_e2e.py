@@ -479,3 +479,34 @@ def test_state_machine_phase_matches_duckdb_text(spark, cfg_base, tmp_path):
         "CVE-3": "enriched_unchanged", "CVE-4": "status_changed",
         "CVE-5": "new",
     }
+
+
+def test_duplicate_keys_resolve_the_same_in_any_row_order(spark, cfg_base):
+    """Two advisories for one key with different ``fixed_version``s,
+    and two overrides whose keys differ only in case: the staged rows
+    do not depend on which row comes first."""
+    adv_rows = [("alpha", "CVE-1", "1.0"), ("alpha", "CVE-1", "2.0"),
+                ("beta", "CVE-2", None)]
+    ov_rows = [("CVE-2", "BETA", "Not shipped", None, "not_applicable"),
+               ("cve-2", "beta", "Declined", "3.0", "will_not_fix")]
+    staged = []
+    for k, order in enumerate((lambda r: r, lambda r: r[::-1])):
+        cfg = PipelineConfig(f"{cfg_base}_{k}", cache_ttl_hours=24.0, clock=lambda: T0)
+        run_pipeline(
+            spark, cfg, "r1",
+            # one partition, so the first row read is the first row given
+            advisories=adv_df(spark, order(adv_rows)).coalesce(1),
+            overrides=ov_df(spark, order(ov_rows)).coalesce(1),
+            sources=[source("nvd", make_fetch({}), 5, T0)],
+        )
+        staged.append(sorted(duckdb.sql(
+            f"SELECT {PROCESSED_COLS} FROM read_parquet("
+            f"'{cfg_base}_{k}/staging/run_id=r1/state_machine/processed/*.parquet')"
+        ).fetchall(), key=repr))
+    assert staged[0] == staged[1]
+    got = {r[0]: (r[2], r[4], r[5]) for r in staged[0]}
+    # the greatest fixed_version; the greatest (internal_status, ...)
+    assert got == {
+        "CVE-1": ("unknown", "2.0", "Awaiting upstream fix"),
+        "CVE-2": ("will_not_fix", "3.0", "Declined"),
+    }
