@@ -16,7 +16,7 @@ the transition table behind all of them:
    through ``F.expr`` — the hot path, inside whole-stage codegen with
    no Python-worker serialization.
 4. **Python UDF parity** (plain + struct-returning) mirroring the
-   reference's registered-UDF surface (state_machine/udf.py:12-86) —
+   reference's UDF surface (state_machine/udf.py) —
    kept to prove the UDF surface and as an equivalence oracle for (3).
 
 Semantics pinned by the reference's test suite
@@ -194,17 +194,6 @@ def full_transition(from_state: str | None, to_state: str | None):
         apply_transition(from_state, to_state),
         transition_explanation(from_state, to_state),
     )
-
-
-def register_udfs(spark) -> None:
-    """Register the SQL-callable UDF surface, mirroring the reference's
-    ``register_state_machine_udfs`` (state_machine/udf.py:12-86)."""
-    spark.udf.register("is_valid_transition", is_valid_transition, T.BooleanType())
-    spark.udf.register("apply_transition", apply_transition, T.StringType())
-    spark.udf.register(
-        "get_transition_explanation", transition_explanation, T.StringType()
-    )
-    spark.udf.register("full_transition", full_transition, TRANSITION_RESULT_SCHEMA)
 
 
 def transition_udf() -> Column:

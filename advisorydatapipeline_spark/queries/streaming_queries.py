@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import contextlib
 import itertools
-import os
 import shutil
 from pathlib import Path
 
@@ -62,11 +61,8 @@ def _events_stream_dir(sf_dir: str) -> str:
 #: 100 TB the derivation saturates to the production setting, so this
 #: is not a local[32] constant, it is the same sizing rule AQE applies
 #: to batch shuffles, applied at the only point streaming allows
-#: (stream build time). Env override for clusters with bigger state
-#: budgets per task.
-STREAM_BYTES_PER_PART = int(
-    os.environ.get("ADP_STREAM_BYTES_PER_PART", str(8 << 20))
-)
+#: (stream build time).
+STREAM_BYTES_PER_PART = 8 << 20
 
 #: The per-byte CPU cost is NOT uniform across stateful operators:
 #: applyInPandasWithState invokes a Python body once per KEY (Arrow
@@ -80,9 +76,7 @@ STREAM_BYTES_PER_PART = int(
 #: input-derived rule with a target that reflects ~30x higher
 #: per-byte cost. Both targets saturate to the configured session
 #: width at scale.
-STREAM_BYTES_PER_PART_HEAVY = int(
-    os.environ.get("ADP_STREAM_BYTES_PER_PART_HEAVY", str(256 << 10))
-)
+STREAM_BYTES_PER_PART_HEAVY = 256 << 10
 
 
 def _dir_bytes(path: str) -> int:

@@ -14,8 +14,8 @@ returned (lazy) plan references more than once — the cache computes
 once within the single materializing action. Those blocks stay pinned
 in the CacheManager after the action, so any harness that materializes
 many registry queries in one session MUST ``spark.catalog.clearCache()``
-between queries (bench.py, tools/run_all.py, tools/check_oracle.py all
-do). Unpersisting inside the query before returning would silently
+between queries (bench.py, tools/check_oracle.py and tools/plan_audit.py
+all do). Unpersisting inside the query before returning would silently
 defeat the cache: the plan is not materialized yet at that point.
 """
 

@@ -1,10 +1,13 @@
-"""Guard the plan audit's allowlists. The audit itself iterates the
-registry, so the only list a typo can break is an allowlist: a key
-that names no registry entry would silently allow nothing."""
+"""Guard the tools' own logic. The plan audit iterates the registry,
+so the only list a typo can break is an allowlist: a key that names
+no registry entry would silently allow nothing. Its report must
+repeat between runs, and its red flags must still fire. The sharded
+gate weights its shards by its own previous output."""
 
 from __future__ import annotations
 
 import ast
+import json
 import os
 
 BASE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,3 +40,53 @@ def test_audit_lists_unique_and_registered():
         assert len(names) == len(set(names)), f"duplicates in {varname}"
         missing = [n for n in names if n not in QUERIES]
         assert not missing, f"{varname} names not in registry: {missing}"
+
+
+# cheap at sf0.001; the last two carry allowlisted nested-loop joins,
+# and decile_migration_matrix an allowlisted global window
+AUDITED = ("pricing_summary", "basket_pair_lift", "decile_migration_matrix")
+
+
+def test_audit_report_repeats(spark, sf_dir):
+    from tools import plan_audit
+
+    rows, details, failures = plan_audit.audit(spark, sf_dir, AUDITED)
+    assert len(rows) == len(AUDITED) and not failures
+    assert any("global window (allowlisted)" in d for d in details)
+    assert plan_audit.audit(spark, sf_dir, AUDITED) == (
+        rows, details, failures
+    )
+
+
+def test_audit_flags_unlisted_nested_loop(spark, sf_dir, monkeypatch):
+    from tools import plan_audit
+
+    monkeypatch.setattr(
+        plan_audit,
+        "NESTED_LOOP_OK",
+        plan_audit.NESTED_LOOP_OK - {"basket_pair_lift"},
+    )
+    rows, _, failures = plan_audit.audit(spark, sf_dir, ["basket_pair_lift"])
+    assert failures == ["basket_pair_lift: BroadcastNestedLoopJoin"]
+    assert rows[0].endswith("| BroadcastNestedLoopJoin |")
+
+
+def test_shard_weights_come_from_the_out_file(tmp_path, monkeypatch):
+    from tools.check_oracle_sharded import _plan_slices
+
+    names = ["a", "b", "c", "d"]
+    round_robin = [["a", "c"], ["b", "d"]]
+    # a gate output lying in the cwd must not feed the weights
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "LOCAL_GATE.json").write_text(
+        json.dumps({"results": {"d": {"sec": 100.0}}})
+    )
+    assert _plan_slices(names, 2, None) == round_robin
+    prev = tmp_path / "gate.json"
+    assert _plan_slices(names, 2, str(prev)) == round_robin
+    prev.write_text(
+        json.dumps(
+            {"results": {n: {"sec": 9.0 if n == "a" else 1.0} for n in names}}
+        )
+    )
+    assert _plan_slices(names, 2, str(prev)) == [["a"], ["b", "c", "d"]]

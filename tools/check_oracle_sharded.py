@@ -23,6 +23,8 @@ artifact reflect contended cores and are not comparable to solo runs
 
 Usage: python tools/check_oracle_sharded.py [--shards N] [--out FILE]
        [sf_dir]
+An existing ``--out`` FILE from an earlier run supplies the shard
+weights (see ``_plan_slices``); the run then overwrites it.
 Exit code: nonzero if any shard failed any entry.
 """
 
@@ -55,7 +57,7 @@ def main() -> int:
     import __spark_entry__ as e
 
     names = sorted(e.queries().keys())
-    slices = _plan_slices(names, shards, sf_dir)
+    slices = _plan_slices(names, shards, out_path)
 
     total_cpus = os.cpu_count() or 8
     per = max(2, total_cpus // shards)
@@ -70,23 +72,19 @@ def main() -> int:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _plan_slices(names, shards, sf_dir):
-    """Weighted LPT shard assignment (r14): round-robin by name left
-    the r13 sf0.1 wall at 1.7x the per-shard average (459 s vs 269 s
-    — one shard drew duplicate_spans_exact AND the asof/mp3 heavies).
-    Weights come from the PREVIOUS same-sf gate artifact's per-entry
-    ``sec`` (read before this run overwrites it); entries without a
-    prior reading weigh 1.0. Falls back to round-robin when no
-    artifact exists. Greedy longest-processing-time onto the least
-    loaded shard — the classic 4/3-optimal makespan heuristic."""
-    prev_path = (
-        "LOCAL_GATE_SF01_FULL.json"
-        if sf_dir.rstrip("/").endswith("sf0.1")
-        else "LOCAL_GATE.json"
-    )
+def _plan_slices(names, shards, prev_path):
+    """Weighted LPT shard assignment: round-robin by name left the
+    sf0.1 wall at 1.7x the per-shard average (459 s vs 269 s — one
+    shard drew duplicate_spans_exact AND the asof/mp3 heavies).
+    Weights come from the per-entry ``sec`` of the previous artifact
+    at ``prev_path`` (this run's ``--out``, read before this run
+    overwrites it); entries without a prior reading weigh 1.0. Falls
+    back to round-robin when there is no such file. Greedy
+    longest-processing-time onto the least loaded shard — the classic
+    4/3-optimal makespan heuristic."""
     weights: dict[str, float] = {}
     try:
-        with open(prev_path) as f:
+        with open(prev_path or "") as f:  # no --out: round-robin
             prev = json.load(f)
         rows = prev.get("results", prev)
         for k, v in rows.items():

@@ -1,14 +1,16 @@
 """Physical-plan audit: evidence that every registry entry compiles
 to the plan you'd want at 100 TB.
 
-For each entry of ``registry.QUERIES`` this captures the executed
-``.explain("formatted")`` plan and greps for: parquet filter pushdown
-(PushedFilters), join strategies (broadcast vs shuffled vs
-nested-loop), and whole-stage codegen spans. Writes PLANS.md with a
-summary table plus the flagged lines, and exits nonzero if a red flag
-appears: CartesianProduct or BroadcastNestedLoopJoin in an entry not
-in NESTED_LOOP_OK, or a partition-less window in an entry not in
-GLOBAL_WINDOW_OK. Both allowlists give each entry's reason.
+For each entry of ``registry.QUERIES`` this explains the plan before
+execution (AQE's initial plan) and after ``collect()`` (the executed
+plan). PLANS.md's columns and join/pushdown lines come from the
+initial plan, with node numbers stripped, so two runs of the same code
+write the same file; the executed plan re-picks joins and codegen
+spans from run to run. Red flags are checked on the executed plan:
+CartesianProduct or BroadcastNestedLoopJoin in an entry not in
+NESTED_LOOP_OK, or a partition-less window in an entry not in
+GLOBAL_WINDOW_OK. Both allowlists give each entry's reason; any red
+flag makes the tool exit nonzero.
 
 Usage: python tools/plan_audit.py [sf_dir]
 """
@@ -443,42 +445,42 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def audit(spark, sf_dir: str):
+def audit(spark, sf_dir: str, names=None):
     rows, details, failures = [], [], []
-    for name in QUERIES:
+    for name in names or QUERIES:
         handles = []
         if name in CHECKPOINTED:
             df, handles = CHECKPOINTED[name](spark, sf_dir)
         else:
             df = QUERIES[name](spark, sf_dir)
+        planned = plan_of(df)
         # materialize THROUGH the df's own query execution so AQE
-        # finalizes it: the explain then shows the *executed* plan
-        # (real join strategy picks, codegen spans). A noop write
-        # would execute a separate QueryExecution and leave this
-        # df's plan unfinalized.
+        # finalizes it: the explain then shows the *executed* plan.
+        # A noop write would execute a separate QueryExecution and
+        # leave this df's plan unfinalized.
         try:
             df.collect()
-            plan = plan_of(df)
+            executed = plan_of(df)
         finally:
             for h in handles:
                 h.unpersist()
-        joins = sorted(set(JOIN_PAT.findall(plan)))
-        pushed = re.findall(r"PushedFilters: \[(?!\])", plan)
-        s_cans = re.findall(r"\(\d+\) Scan parquet", plan)
-        scans = len(s_cans)
+        spark.catalog.clearCache()
+        joins = sorted(set(JOIN_PAT.findall(planned)))
+        pushed = re.findall(r"PushedFilters: \[(?!\])", planned)
+        scans = len(re.findall(r"\(\d+\) Scan parquet", planned))
         # column pruning: widths of the pruned read schemas
         widths = [
             str(ln.count(",") + 1) if "," in ln or ":" in ln else "0"
-            for ln in re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+            for ln in re.findall(r"ReadSchema: struct<([^>]*)>", planned)
         ]
-        pruned = ",".join(widths) or "—" 
-        codegen = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
+        pruned = ",".join(widths) or "—"
         flags = []
+        executed_joins = set(JOIN_PAT.findall(executed))
         for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-            if bad in joins and name not in NESTED_LOOP_OK:
+            if bad in executed_joins and name not in NESTED_LOOP_OK:
                 flags.append(bad)
                 failures.append(f"{name}: {bad}")
-        n_gw = global_window_count(plan)
+        n_gw = global_window_count(executed)
         if n_gw and name not in GLOBAL_WINDOW_OK:
             flags.append("WindowExec-global")
             failures.append(
@@ -488,8 +490,7 @@ def audit(spark, sf_dir: str):
         elif n_gw:
             details.append(
                 f"### {name} — global window (allowlisted)\n\n"
-                f"{n_gw} partition-less window(s); bounded because:"
-                f" {GLOBAL_WINDOW_OK[name]}\n"
+                f"Bounded because: {GLOBAL_WINDOW_OK[name]}\n"
             )
         ok_label = (
             "ok (checkpointed; lazy seam)"
@@ -498,13 +499,16 @@ def audit(spark, sf_dir: str):
         )
         rows.append(
             f"| `{name}` | {scans} | {len(pushed)} | {pruned} | "
-            f"{', '.join(joins) or '—'} | {codegen} | "
+            f"{', '.join(joins) or '—'} | "
             f"{', '.join(flags) or ok_label} |"
         )
+        # join tree lines and pushed filters, minus the node numbers
+        # that shift between runs
         flagged = [
-            ln.strip()
-            for ln in plan.splitlines()
-            if JOIN_PAT.search(ln) or "PushedFilters" in ln
+            re.sub(r" \(\d+\)$", "", ln.strip())
+            for ln in planned.splitlines()
+            if "PushedFilters" in ln
+            or (JOIN_PAT.search(ln) and not ln.startswith("("))
         ]
         details.append(
             f"### {name}\n\n```\n" + "\n".join(flagged[:14]) + "\n```\n"
@@ -518,9 +522,11 @@ def main() -> int:
     rows, details, failures = audit(spark, sf_dir)
     doc = (
         "# PLANS — physical-plan audit\n\n"
-        f"Generated by `tools/plan_audit.py` at `{sf_dir}`.\n\n"
+        f"Generated by `tools/plan_audit.py` at `{sf_dir}`. The columns"
+        " and the join/pushdown lines come from AQE's initial plan;"
+        " red flags are checked on the executed plan.\n\n"
         "| query | parquet scans | scans w/ pushed filters | read cols/scan | "
-        "joins | codegen spans | red flags |\n|---|---|---|---|---|---|---|\n"
+        "planned joins | red flags |\n|---|---|---|---|---|---|\n"
         + "\n".join(rows)
         + "\n\nBroadcastNestedLoopJoin is allowlisted only for the entries "
         "in `NESTED_LOOP_OK` (tools/plan_audit.py), each with its reason: "
@@ -531,7 +537,7 @@ def main() -> int:
     )
     with open("PLANS.md", "w") as f:
         f.write(doc)
-    print(f"PLANS.md written; {len(failures)} red flag(s)")
+    print(f"PLANS.md written; {len(rows)} rows, {len(failures)} red flag(s)")
     for f_ in failures:
         print("  RED:", f_)
     return 1 if failures else 0

@@ -11,6 +11,8 @@ ratios = the plan scales; super-linear = a blowup the df-cap/banding
 should have prevented.
 
 Usage: python tools/scale_smoke.py [sf_dir] (writes SCALE.md)
+The driver heap must fit in RAM: on a 16 GB box set
+SPARK_GRAFT_DRIVER_MEM=8g, or the JVM dies in the PPJoin x8 step.
 """
 
 from __future__ import annotations
