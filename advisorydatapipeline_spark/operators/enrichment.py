@@ -17,10 +17,12 @@ dataflow. Here the same contract runs *on the executors*:
   dataclass (enrichment function, normalization function, priority;
   enrichment/definitions.py:25-37).
 
-Scale notes: the worklist is repartitioned to ``parallelism`` before
-the UDF so the rate limit and the HTTP concurrency are both set by
-partition count, not file layout; results stay distributed end-to-end
-(no driver round-trip, unlike the reference).
+Scale notes: the worklist is repartitioned to the context's default
+parallelism before the UDF, so the rate limit and the HTTP concurrency
+are both set by the cluster's core count, not file layout; results
+stay distributed end-to-end (no driver round-trip, unlike the
+reference). ``UpstreamSource.priority`` mirrors the reference's field
+and is read by no operator here.
 """
 
 from __future__ import annotations
@@ -67,8 +69,6 @@ def enrich_map_in_pandas(
     worklist: DataFrame,
     source: UpstreamSource,
     key_cols: tuple[str, str] = ("cve_id", "package"),
-    *,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Run ``source.enrichment_fn(key1, key2) -> dict`` for every
     worklist row, on the executors, rate-limited per partition.
@@ -110,7 +110,7 @@ def enrich_map_in_pandas(
                 out_rows, columns=[k1, k2, *res_fields]
             )
 
-    n = parallelism or worklist.sparkSession.sparkContext.defaultParallelism
+    n = worklist.sparkSession.sparkContext.defaultParallelism
     work = worklist.select(k1, k2).distinct().repartition(n, k1, k2)
     return work.mapInPandas(run, out_schema)
 

@@ -14,11 +14,13 @@ edges, the loop-invariant edge side is built once by
 materialized — so only the small per-round side shuffles or
 broadcasts. ``localCheckpoint`` truncates lineage each round; without
 it the plan doubles per iteration and the driver, not the cluster,
-becomes the bottleneck. The converging operators (connected
-components, k-core) share one converge-or-raise loop,
-:func:`_fixpoint`: the driver only reads a scalar witness observed on
-each round's lineage cut, never row data. Every loop labels its
-rounds' Spark jobs ``<op>:<round>`` (:func:`_rounds`).
+becomes the bottleneck. It is the only lineage cut, and it writes to
+executor block storage, so a lost executor fails the job. The
+converging operators (connected components, k-core) share one
+converge-or-raise loop, :func:`_fixpoint`: the driver only reads a
+scalar witness observed on each round's lineage cut, never row data.
+Every loop labels its rounds' Spark jobs ``<op>:<round>``
+(:func:`_rounds`).
 
 Connected components is star contraction: alternating large-star and
 small-star rounds over canonical ``(lo, hi)`` edge pairs (Kiveris et
@@ -30,13 +32,10 @@ never joins a table with itself.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
-
-from advisorydatapipeline_spark.sources.io import scratch_dir
 
 #: Broadcast-pin bound for the per-iteration small side (rank/label/
 #: alive/frontier tables — all provably <= node count). Two-long rows
@@ -69,36 +68,21 @@ def _iter_side(df: DataFrame, n_rows: int | None) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
-def _cut_lineage(df: DataFrame, reliable: bool) -> DataFrame:
-    """Truncate plan lineage between iterations.
-
-    ``localCheckpoint`` (default) materializes to executor block
-    storage — cheap, but NOT fault-tolerant: lose an executor and the
-    partitions it held are gone, failing the job. On a real cluster a
-    long-running iterative job should pay the write to reliable
-    storage instead: ``reliable=True`` uses ``checkpoint()`` against
-    the context's checkpoint dir (set from ``$SPARK_GRAFT_CHECKPOINT``
-    or, failing that, the per-process :func:`scratch_dir` removed at
-    interpreter exit, if the caller hasn't configured one).
-    """
-    if not reliable:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(
-            os.environ.get("SPARK_GRAFT_CHECKPOINT") or scratch_dir("ckpt")
-        )
-    return df.checkpoint()
+def _cut_lineage(df: DataFrame) -> DataFrame:
+    """Truncate plan lineage between iterations with
+    ``localCheckpoint``: the rows go to executor block storage, so a
+    lost executor fails the job rather than replaying the loop."""
+    return df.localCheckpoint()
 
 
 def _observed_cut(
-    df: DataFrame, reliable: bool, name: str, *metrics: Column
+    df: DataFrame, name: str, *metrics: Column
 ) -> tuple[DataFrame, dict]:
     """Cut ``df``'s lineage and return it with ``metrics`` — aggregate
     columns observed while the cut materializes, so reading them costs
     no extra job."""
     obs = Observation(name)
-    return _cut_lineage(df.observe(obs, *metrics), reliable), obs.get
+    return _cut_lineage(df.observe(obs, *metrics)), obs.get
 
 
 @contextmanager
@@ -121,7 +105,7 @@ def _rounds(df: DataFrame, op: str, *, owned: bool = False):
             df.unpersist()
 
 
-def _fixpoint(step, state, witness, prev, max_rounds, name, reliable):
+def _fixpoint(step, state, witness, prev, max_rounds, name):
     """The converge-or-raise loop: ``state = step(i, state)`` each
     round, lineage-cut with the scalar ``witness`` aggregate observed
     on the cut, until the witness repeats its previous value (``prev``
@@ -133,7 +117,7 @@ def _fixpoint(step, state, witness, prev, max_rounds, name, reliable):
         for i in range(max_rounds):
             mark(i)
             state, seen = _observed_cut(
-                step(i, state), reliable, f"{name}_{i}", witness.alias("w")
+                step(i, state), f"{name}_{i}", witness.alias("w")
             )
             if seen["w"] == prev:
                 return state
@@ -169,7 +153,6 @@ def connected_components(
     dst: str,
     *,
     max_iter: int = 100,
-    reliable: bool = False,
 ) -> DataFrame:
     """Components of the undirected graph given by (src, dst) pairs.
 
@@ -249,7 +232,7 @@ def connected_components(
         )
 
     stars = _fixpoint(
-        star, rows, witness, None, max_iter, "connected_components", reliable
+        star, rows, witness, None, max_iter, "connected_components"
     )
     return stars.selectExpr("hi AS node", "lo AS component")
 
@@ -264,7 +247,6 @@ def pagerank_quantized(
     dst: str,
     *,
     iters: int = 3,
-    reliable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the undirected graph, computed in
     pure fixed-point BIGINT arithmetic.
@@ -324,17 +306,11 @@ def pagerank_quantized(
             # every second round — deep enough to stay cheap, shallow
             # enough that the plan never compounds
             if i % 2 == 1 and i != iters - 1:
-                ranks = _cut_lineage(ranks, reliable)
+                ranks = _cut_lineage(ranks)
     return ranks.select(F.col("a").alias("node"), "rank")
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int,
-    *,
-    reliable: bool = False,
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     """Frontier BFS: minimum hop count from any seed to every
     reachable node within ``max_hops``.
 
@@ -359,8 +335,7 @@ def bfs_hops(
     frontier-sized, the anti-join side a flat union of materialized
     levels, and the plan depth constant in ``max_hops``. The level's
     row count rides that cut, and the loop stops at the first empty
-    frontier rather than paying a checkpoint per remaining hop. With
-    ``reliable=True`` each hop is a reliable-storage write.
+    frontier rather than paying a checkpoint per remaining hop.
     """
     adj = edges.repartition("a").persist()
     with _rounds(adj, "bfs_hops", owned=True) as mark:
@@ -369,8 +344,7 @@ def bfs_hops(
             seeds.select(
                 F.col(seeds.columns[0]).alias("node"),
                 F.lit(0).cast("int").alias("hops"),
-            ),
-            reliable,
+            )
         )
         levels = [level]
         for h in range(1, max_hops + 1):
@@ -393,7 +367,6 @@ def bfs_hops(
                 .distinct()
                 .join(visited.hint("shuffle_hash"), "node", "left_anti")
                 .withColumn("hops", F.lit(h).cast("int")),
-                reliable,
                 f"bfs_level_{h}",
                 F.count(F.lit(1)).alias("n"),
             )
@@ -411,7 +384,6 @@ def k_core_peel(
     ks: DataFrame,
     *,
     max_rounds: int = 12,
-    reliable: bool = False,
     n_edges: int | None = None,
     n_nodes: int | None = None,
 ) -> DataFrame:
@@ -438,7 +410,6 @@ def k_core_peel(
     else:
         edges, seen = _observed_cut(
             und,
-            reliable,
             "k_core_peel_seed",
             F.count(F.lit(1)).alias("n"),
             F.approx_count_distinct("a").alias("nodes"),
@@ -471,14 +442,11 @@ def k_core_peel(
         )
 
     return _fixpoint(
-        peel, edges, F.count(F.lit(1)), prev_n, max_rounds,
-        "k_core_peel", reliable,
+        peel, edges, F.count(F.lit(1)), prev_n, max_rounds, "k_core_peel"
     )
 
 
-def label_propagation(
-    und: DataFrame, rounds: int, *, reliable: bool = False
-) -> DataFrame:
+def label_propagation(und: DataFrame, rounds: int) -> DataFrame:
     """Synchronous deterministic label propagation over an undirected
     edge list ``(a, b)``: each round every node adopts the majority
     label among its neighbors (votes desc, min label on ties).
@@ -521,7 +489,6 @@ def label_propagation(
                     F.expr(
                         "max_by(lab, named_struct('v', votes, 'l', -lab))"
                     ).alias("lab")
-                ),
-                reliable,
+                )
             )
     return labels

@@ -12,9 +12,9 @@ that feature, engine-native:
   groupBy/anti-join plans.
 
 Scale notes: ``quality_report`` is a single partial-aggregated scan —
-at 100 TB it costs one pass regardless of rule count. Pair it with
-``sources.io.observed`` to ride an existing write instead of its own
-action.
+at 100 TB it costs one pass regardless of rule count. Attached with
+``DataFrame.observe`` it can ride an existing write instead of its
+own action.
 """
 
 from __future__ import annotations

@@ -152,15 +152,7 @@ def explanation_sql(from_expr: str, to_expr: str) -> str:
 # --- 3. native column expressions (F.expr over the portable SQL) ------------
 
 
-def with_transition(
-    df: DataFrame,
-    from_col: str,
-    to_col: str,
-    *,
-    valid_name: str = "transition_valid",
-    state_name: str = "new_state",
-    reason_name: str = "transition_reason",
-) -> DataFrame:
+def with_transition(df: DataFrame, from_col: str, to_col: str) -> DataFrame:
     """Add transition_valid / new_state / transition_reason columns.
 
     Pure CASE expressions -> whole-stage codegen; no UDF in the hot
@@ -168,9 +160,9 @@ def with_transition(
     state_machine/udf.py:77-81, paying per-row serialization).
     """
     return (
-        df.withColumn(valid_name, F.expr(valid_sql(from_col, to_col)))
-        .withColumn(state_name, F.expr(apply_sql(from_col, to_col)))
-        .withColumn(reason_name, F.expr(explanation_sql(from_col, to_col)))
+        df.withColumn("transition_valid", F.expr(valid_sql(from_col, to_col)))
+        .withColumn("new_state", F.expr(apply_sql(from_col, to_col)))
+        .withColumn("transition_reason", F.expr(explanation_sql(from_col, to_col)))
     )
 
 

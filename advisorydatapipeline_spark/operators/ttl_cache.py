@@ -5,7 +5,9 @@ Re-expresses the reference's enrichment cache
 window, evict + merge after each batch. The reference's wall-clock
 ``datetime.now()`` (cache.py:69) is replaced by explicit cutoff/now
 parameters — deterministic under test, injectable from
-``PipelineConfig.clock`` in production.
+``PipelineConfig.clock`` in production. A cache row carries its keys
+plus ``source_name`` and ``last_accessed``, the columns of
+``schemas.ENRICHMENT_CACHE_SCHEMA``.
 
 This is batch-incremental computation (SURVEY.md §2.9): the engine's
 analogue of event-time state expiry. At scale the cache is a compact
@@ -28,14 +30,12 @@ def recent_entries(
     cache_df: DataFrame,
     source_name: str,
     cutoff: datetime,
-    *,
-    source_col: str = "source_name",
-    ts_col: str = "last_accessed",
 ) -> DataFrame:
     """Cache rows for ``source_name`` still inside the TTL window
     (reference: cache.py:68-75)."""
     return cache_df.filter(
-        (F.col(source_col) == source_name) & (F.col(ts_col) >= F.lit(cutoff))
+        (F.col("source_name") == source_name)
+        & (F.col("last_accessed") >= F.lit(cutoff))
     )
 
 
@@ -60,9 +60,6 @@ def update_cache(
     keys: Sequence[str],
     source_name: str,
     now: datetime,
-    *,
-    source_col: str = "source_name",
-    ts_col: str = "last_accessed",
 ) -> DataFrame:
     """Merge freshly-processed keys into the cache: an upsert on
     (keys, source) whose new rows carry ``last_accessed = now``
@@ -70,7 +67,7 @@ def update_cache(
     new_entries = (
         done_keys.select(*keys)
         .distinct()
-        .withColumn(source_col, F.lit(source_name))
-        .withColumn(ts_col, F.lit(now))
+        .withColumn("source_name", F.lit(source_name))
+        .withColumn("last_accessed", F.lit(now))
     )
-    return upsert(new_entries, cache_df, [*keys, source_col])
+    return upsert(new_entries, cache_df, [*keys, "source_name"])

@@ -40,19 +40,11 @@ from advisorydatapipeline_spark.operators.jpeg_codec import (
     decode_jpeg_pixels,
     encode_jpeg_baseline,
 )
-from advisorydatapipeline_spark.operators.multimodal import map_payloads
+from advisorydatapipeline_spark.operators.multimodal import _mix2, map_payloads
 
 # fixture geometry: 24x16 frames = 3x2 JPEG blocks, DC-only
 AVI_FRAME_W, AVI_FRAME_H = 24, 16
 AVI_BLOCKS = (AVI_FRAME_W // 8) * (AVI_FRAME_H // 8)  # 6
-
-
-def _mix2(x: int) -> int:
-    """Two-round quadratic integer mix (same constants as the other
-    round-10 fixtures; all intermediates < 2^63)."""
-    M, A, B = 2147483648, 2654435761, 506952113
-    h = ((x * x % M) * A + x * B) % M
-    return ((h * h % M) * A + h * B) % M
 
 
 def frame_block_value(doc_id: int, f: int, b: int) -> int:

@@ -331,7 +331,6 @@ def k_core_suppliers(spark, sf_dir):
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     from advisorydatapipeline_spark.operators.graph import (
-        _cut_lineage,
         _loop_edges,
         k_core_peel,
     )
@@ -349,22 +348,19 @@ def k_core_suppliers(spark, sf_dir):
     # peel round's degree aggregate (groupBy("a")) reuses with no
     # further exchange (broadcast semi-joins preserve the edge side's
     # partitioning round over round)
-    und = _cut_lineage(_loop_edges(e0, "src", "dst", "a"), False)
+    und = _loop_edges(e0, "src", "dst", "a").localCheckpoint()
     deg0 = und.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("c"))
     # the ks aggregate already scans every degree row, so the exact
     # edge/node counts ride the SAME 1-row cut and k_core_peel skips
     # its own counting job
-    stats = _cut_lineage(
-        deg0.agg(
-            F.greatest(
-                F.lit(4).cast("long"),
-                F.expr("CAST(sum(c) AS BIGINT) DIV count(*) DIV 3"),
-            ).alias("k"),
-            F.sum("c").cast("long").alias("n_edges"),
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        ),
-        False,
-    )
+    stats = deg0.agg(
+        F.greatest(
+            F.lit(4).cast("long"),
+            F.expr("CAST(sum(c) AS BIGINT) DIV count(*) DIV 3"),
+        ).alias("k"),
+        F.sum("c").cast("long").alias("n_edges"),
+        F.count(F.lit(1)).cast("long").alias("n_nodes"),
+    ).localCheckpoint()
     srow = stats.first()
     edges = k_core_peel(
         und,

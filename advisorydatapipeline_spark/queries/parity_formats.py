@@ -53,7 +53,7 @@ def csv_scan_roundtrip(spark, sf_dir):
     load(spark, sf_dir, "nation").write.mode("overwrite").option(
         "header", True
     ).csv(path)
-    return read_table(spark, path, NATION_SCHEMA, fmt="csv", header=True)
+    return read_table(spark, path, NATION_SCHEMA, fmt="csv")
 
 
 @query(
@@ -318,9 +318,9 @@ def orc_scan_roundtrip(spark, sf_dir):
     """ORC format arm (columnar twin to the parquet path — same
     predicate-pushdown/column-pruning machinery in Spark's reader)
     proven by parquet -> ORC -> read-back against the parquet oracle.
-    Avro is the one mainstream format not proven live here: its jar is
-    an external Spark module not present in this container (read_table
-    gains it for free via the generic format passthrough)."""
+    Avro is the one mainstream format left out: its jar is an external
+    Spark module, and read_table raises ValueError for any format but
+    parquet, ORC, JSON and CSV."""
     path = scratch_dir("orc")
     load(spark, sf_dir, "customer").write.mode("overwrite").orc(path)
     return read_table(spark, path, CUSTOMER_SCHEMA, fmt="orc")
@@ -357,7 +357,7 @@ def federated_union_scan(spark, sf_dir):
     csv_path = scratch_dir("fed_csv_" + sf_dir.strip("/").replace("/", "_"))
     if not (Path(csv_path) / "_SUCCESS").exists():
         pq.write.mode("overwrite").option("header", True).csv(csv_path)
-    csv = read_table(spark, csv_path, NATION_SCHEMA, fmt="csv", header=True)
+    csv = read_table(spark, csv_path, NATION_SCHEMA, fmt="csv")
 
     jdbc = read_jdbc_table(
         spark,

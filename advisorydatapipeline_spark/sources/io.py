@@ -12,10 +12,13 @@ Re-expresses the reference's ``read_table`` / ``write_table``
   state_machine/pipeline.py:37-47).
 - ``base_path`` support so Hive partition directories become columns
   (reference :134-141).
-- Writes go through ``partitionBy`` proper instead of hand-built
-  ``key=value`` path strings; output sizing is left to AQE coalescing
-  instead of the reference's unconditional ``repartition(1)``
-  (spark_utils.py:52-53 — an anti-pattern at scale, SURVEY.md §4).
+- Reads take parquet, ORC, JSON or CSV; writes are parquet overwrites
+  with neither partition keys nor a partition count, which every
+  reference caller passes empty (SURVEY.md §1.4). Output sizing is
+  left to AQE coalescing instead of the reference's unconditional
+  ``repartition(1)`` (spark_utils.py:52-53 — an anti-pattern at scale,
+  SURVEY.md §4). The reference's raw-file sinks (S12) have no caller
+  and are not ported.
 """
 
 from __future__ import annotations
@@ -70,15 +73,18 @@ def read_table(
     paths: Sequence[str] | None = None,
     fmt: str = "parquet",
     base_path: str | None = None,
-    header: bool = True,
 ) -> DataFrame:
     """Read ``path`` (or ``paths``) as ``fmt``, conformed to ``schema``.
 
-    Any path that does not exist degrades to an empty relation with the
-    declared schema rather than an error.
+    ``fmt`` is one of ``parquet``, ``orc``, ``json`` or ``csv`` (with a
+    header row); any other value raises ``ValueError``. Any path that
+    does not exist degrades to an empty relation with the declared
+    schema rather than an error.
     """
     if schema is None:
         raise ValueError("schema is mandatory for read_table")
+    if fmt not in ("parquet", "orc", "json", "csv"):
+        raise ValueError(f"unsupported table format: {fmt}")
     targets = list(paths) if paths is not None else ([path] if path else [])
     targets = [p for p in targets if p and _path_exists(spark, p)]
     if not targets:
@@ -95,47 +101,16 @@ def read_table(
     elif fmt == "json":
         df = reader.schema(schema).json(targets)
     elif fmt == "csv":
-        df = reader.schema(schema).option("header", str(header).lower()).csv(targets)
-    elif fmt == "orc":
-        df = reader.orc(*targets)
+        df = reader.schema(schema).option("header", "true").csv(targets)
     else:
-        # generic DataSourceV2 passthrough (e.g. "avro" when its
-        # external module jar is deployed)
-        df = reader.schema(schema).format(fmt).load(targets)
+        df = reader.orc(*targets)
     return conform(df, schema)
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    *,
-    schema: T.StructType | None = None,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] = (),
-    target_partitions: int | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Write ``df`` to ``path``, optionally conformed to ``schema``.
-
-    ``target_partitions`` is an explicit override only; by default AQE
-    sizes output files. Hive-style layout comes from ``partitionBy``.
-    """
-    out = conform(df, schema) if schema is not None else df
-    if target_partitions:
-        out = out.coalesce(target_partitions)
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "json":
-        writer.json(path)
-    elif fmt == "csv":
-        writer.option("header", "true").csv(path)
-    elif fmt == "orc":
-        writer.orc(path)
-    else:
-        writer.format(fmt).save(path)
+def write_table(df: DataFrame, path: str, schema: T.StructType) -> None:
+    """Overwrite the parquet table at ``path`` with ``df`` conformed to
+    ``schema``. AQE sizes the output files."""
+    conform(df, schema).write.mode("overwrite").parquet(path)
 
 
 def replace_table(
@@ -161,114 +136,10 @@ def replace_table(
         raise OSError(f"could not rename {tmp} onto {path}")
 
 
-def write_raw(
-    spark: SparkSession,
-    content: str | bytes,
-    path: str,
-    *,
-    fmt: str = "text",
-) -> None:
-    """Write one small raw artifact (manifest, report, config dump) to
-    ``path`` atomically.
-
-    Re-expresses the reference's ``write_raw_file`` /
-    ``write_raw_json/csv/text``
-    (pipeline_libs/local/__init__.py:10-135, S3 twin aws/__init__.py:10)
-    — the one un-surveyed utility in the reference, and dead code
-    there (zero callers), ported for surface completeness.
-
-    Design notes vs the reference:
-
-    - The reference routes text content through a 1-element
-      ``parallelize(...).saveAsTextFile`` and then moves
-      ``part-00000`` by hand — a full Spark job plus a brittle
-      filename dance to write what is driver-local data. A raw
-      artifact is by definition small and already on the driver, so
-      the right tool is the filesystem API, not an RDD job.
-    - Atomicity: write to ``<path>.tmp-<pid>`` then rename, so a
-      concurrent reader never sees a half-written file (the
-      reference's move gives the same guarantee for text but its
-      binary arm writes in place).
-    - Remote paths (hdfs://, s3a://) go through the Hadoop FileSystem
-      API of the live session — same code path the reference's AWS
-      twin hand-rolls with boto3.
-
-    ``fmt`` mirrors the reference surface: ``text``/``json``/``csv``
-    (str, utf-8-encoded) or ``binary`` (bytes passthrough).
-    """
-    if fmt in ("text", "json", "csv"):
-        data = content.encode("utf-8") if isinstance(content, str) else content
-    elif fmt == "binary":
-        data = content if isinstance(content, bytes) else content.encode("utf-8")
-    else:
-        raise ValueError(f"unsupported raw format: {fmt}")
-
-    if "://" not in path or path.startswith("file:"):
-        local = path.removeprefix("file:")
-        tmp = f"{local}.tmp-{os.getpid()}"
-        parent = os.path.dirname(local)
-        if parent:
-            os.makedirs(parent, exist_ok=True)
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, local)
-        return
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp-{os.getpid()}")
-    fs = dst.getFileSystem(conf)
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-    if fs.exists(dst):
-        fs.delete(dst, False)
-    fs.rename(tmp, dst)
-
-
-def write_raw_json(spark: SparkSession, json_content: str, path: str) -> None:
-    """Reference parity: pipeline_libs/local/__init__.py:84-99."""
-    write_raw(spark, json_content, path, fmt="json")
-
-
-def write_raw_csv(spark: SparkSession, csv_content: str, path: str) -> None:
-    """Reference parity: pipeline_libs/local/__init__.py:102-117."""
-    write_raw(spark, csv_content, path, fmt="csv")
-
-
-def write_raw_text(spark: SparkSession, text_content: str, path: str) -> None:
-    """Reference parity: pipeline_libs/local/__init__.py:120-135."""
-    write_raw(spark, text_content, path, fmt="text")
-
-
-def register_view(df: DataFrame, name: str, *, global_view: bool = False) -> None:
+def register_view(df: DataFrame, name: str) -> None:
     """Tables-as-views handoff (reference: createGlobalTempView sites,
-    SURVEY.md §1.1). Global temp views live in ``global_temp``."""
-    if global_view:
-        df.createOrReplaceGlobalTempView(name)
-    else:
-        df.createOrReplaceTempView(name)
-
-
-def observed(df: DataFrame, name: str, *metrics):
-    """Attach lazy metrics to a plan (SURVEY.md §4's fix for the
-    reference's >=15 eager logging ``count()`` calls, each of which
-    triggers a full extra job). The metrics ride the NEXT action on
-    ``df`` — e.g. the parquet write that was happening anyway — at
-    zero additional passes.
-
-    Returns ``(df, observation)``; read ``observation.get`` after an
-    action has run. Default metric: row count.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    if not metrics:
-        metrics = (F.count(F.lit(1)).alias("n_rows"),)
-    return df.observe(obs, *metrics), obs
+    SURVEY.md §1.1), as a session temp view."""
+    df.createOrReplaceTempView(name)
 
 
 _scratch_root: str | None = None

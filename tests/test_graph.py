@@ -71,51 +71,6 @@ def test_pagerank_quantized_matches_python_replay(spark):
     assert got[1] == got[3]
 
 
-def test_reliable_checkpoint_mode_same_results(spark, tmp_path, monkeypatch):
-    """reliable=True swaps executor-local lineage cuts for reliable
-    checkpoint() against the configured dir — results must be
-    identical to the default mode, and checkpoint files must land."""
-    from advisorydatapipeline_spark.operators.graph import (
-        pagerank_quantized,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT", str(tmp_path / "ckpt"))
-    # a fresh context may already carry a checkpoint dir from another
-    # test; force re-resolution through the env var
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
-    )
-    local = {
-        r.node: r.component
-        for r in connected_components(edges, "id_a", "id_b").collect()
-    }
-    rel = {
-        r.node: r.component
-        for r in connected_components(
-            edges, "id_a", "id_b", reliable=True
-        ).collect()
-    }
-    assert rel == local == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-
-    pr_local = {
-        r.node: r.rank
-        for r in pagerank_quantized(edges, "id_a", "id_b", iters=2).collect()
-    }
-    pr_rel = {
-        r.node: r.rank
-        for r in pagerank_quantized(
-            edges, "id_a", "id_b", iters=2, reliable=True
-        ).collect()
-    }
-    assert pr_rel == pr_local
-    import os
-
-    ckpt_root = tmp_path / "ckpt"
-    assert ckpt_root.exists() and any(os.scandir(ckpt_root))
-
-
 def _bfs(spark, edges, seeds, k):
     from advisorydatapipeline_spark.operators.graph import bfs_hops
 
@@ -237,9 +192,9 @@ def test_bfs_stops_at_empty_frontier(spark, monkeypatch):
     calls = []
     real = graph._cut_lineage
 
-    def counting(df, reliable):
+    def counting(df):
         calls.append(1)
-        return real(df, reliable)
+        return real(df)
 
     monkeypatch.setattr(graph, "_cut_lineage", counting)
     got = _bfs(spark, [(1, 2), (2, 3)], [1], 20)
@@ -300,7 +255,7 @@ def test_raising_loops_release_their_cache(spark, monkeypatch):
     # the fixed-round loops release it when a round raises
     from advisorydatapipeline_spark.operators import graph
 
-    def boom(df, reliable):
+    def boom(df):
         raise RuntimeError("lineage cut failed")
 
     monkeypatch.setattr(graph, "_cut_lineage", boom)
@@ -323,9 +278,9 @@ def _recording_cuts(monkeypatch, spark):
     seen = []
     real = graph._cut_lineage
 
-    def recording(df, reliable):
+    def recording(df):
         seen.append(spark.sparkContext.getLocalProperty("spark.job.description"))
-        return real(df, reliable)
+        return real(df)
 
     monkeypatch.setattr(graph, "_cut_lineage", recording)
     return seen

@@ -22,25 +22,16 @@ def test_scratch_dir_is_per_tag_and_stable():
 
 
 def test_no_scratch_left_after_process_exit(tmp_path, sf_dir):
-    """A process that ran a scratch-writing entry and a reliable
-    (checkpointed) graph loop with no configured checkpoint dir leaves
-    no ``adp_*`` entry in its temp dir once it exits."""
+    """A process that ran a scratch-writing entry leaves no ``adp_*``
+    entry in its temp dir once it exits."""
     code = (
         "from advisorydatapipeline_spark.registry import QUERIES\n"
         "from advisorydatapipeline_spark.session import get_spark\n"
-        "from advisorydatapipeline_spark.operators.graph import (\n"
-        "    connected_components,\n"
-        ")\n"
         "spark = get_spark('scratch-exit', shuffle_partitions=4)\n"
         f"df = QUERIES['advisory_datasource_scan'](spark, {sf_dir!r})\n"
         "assert df.count() > 0\n"
-        "edges = spark.createDataFrame([(1, 2), (2, 3)], 'a long, b long')"
-        "\n"
-        "cc = connected_components(edges, 'a', 'b', reliable=True)\n"
-        "assert {r.component for r in cc.collect()} == {1}\n"
     )
     env = dict(os.environ, TMPDIR=str(tmp_path))
-    env.pop("SPARK_GRAFT_CHECKPOINT", None)
     subprocess.run(
         [sys.executable, "-c", code], cwd=REPO, env=env, check=True,
         timeout=600,

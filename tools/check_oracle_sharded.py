@@ -78,42 +78,57 @@ def _plan_slices(names, shards, prev_path):
     shard drew duplicate_spans_exact AND the asof/mp3 heavies).
     Weights come from the per-entry ``sec`` of the previous artifact
     at ``prev_path`` (this run's ``--out``, read before this run
-    overwrites it); entries without a prior reading weigh 1.0. Falls
-    back to round-robin when there is no such file. Greedy
+    overwrites it), but only from a complete, passing one: it must
+    time every current entry and fail none. A run that lost a shard
+    or stalled on a failure would skew the next run's shards, so any
+    other prior file, or none, gives round-robin. Greedy
     longest-processing-time onto the least loaded shard — the classic
     4/3-optimal makespan heuristic."""
-    weights: dict[str, float] = {}
+    rows = {}
     try:
         with open(prev_path or "") as f:  # no --out: round-robin
             prev = json.load(f)
         rows = prev.get("results", prev)
-        for k, v in rows.items():
-            if isinstance(v, dict) and isinstance(
-                v.get("sec"), (int, float)
-            ):
-                weights[k] = max(float(v["sec"]), 0.2)
     except (OSError, ValueError):
         pass
-    if not weights:
+    complete = all(
+        isinstance(rows.get(n), dict)
+        and rows[n].get("status") != "fail"
+        and isinstance(rows[n].get("sec"), (int, float))
+        for n in names
+    )
+    if not complete:
         return [names[i::shards] for i in range(shards)]
+    weights = {n: max(float(rows[n]["sec"]), 0.2) for n in names}
     loads = [0.0] * shards
     slices: list[list[str]] = [[] for _ in range(shards)]
-    for n in sorted(names, key=lambda n: -weights.get(n, 1.0)):
+    for n in sorted(names, key=lambda n: -weights[n]):
         i = loads.index(min(loads))
         slices[i].append(n)
-        loads[i] += weights.get(n, 1.0)
+        loads[i] += weights[n]
     return slices
+
+
+def _shard_heap(shards: int) -> str:
+    """Driver heap per shard: physical memory less 2 GiB per shard for
+    the shard's JVM overhead, Python workers and DuckDB, split evenly,
+    between 1 GiB and 8 GiB. Four fixed 8 GiB heaps overcommit a 16 GiB
+    box twice over, and a shard killed for memory drops its whole
+    slice from the gate."""
+    phys_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{min(8192, max(1024, (phys_mib - shards * 2048) // shards))}m"
 
 
 def _run(tmp, slices, names, shards, per, out_path, sf_dir, t0) -> int:
     rc = 0
     procs = []
+    heap = _shard_heap(shards)
     for i, sl in enumerate(slices):
         env = dict(os.environ)
         env["SPARK_GRAFT_CPUS"] = str(per)
         env["SPARK_GRAFT_SHUFFLE"] = str(per)
         env["SPARK_GRAFT_WAREHOUSE"] = f"{tmp}/warehouse_{i}"
-        env["SPARK_GRAFT_DRIVER_MEM"] = "8g"
+        env["SPARK_GRAFT_DRIVER_MEM"] = heap
         procs.append(
             subprocess.Popen(
                 [

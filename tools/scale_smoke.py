@@ -327,7 +327,6 @@ def run_graph(spark, path: str):
     the 100 TB cost driver; times alone hide a super-linear shuffle
     behind executor parallelism headroom)."""
     from advisorydatapipeline_spark.operators.graph import (
-        _cut_lineage,
         bfs_hops,
         k_core_peel,
         label_propagation,
@@ -378,19 +377,16 @@ def run_graph(spark, path: str):
     run_op("bfs_hops", lambda: noop(bfs_hops(und, seeds, 4)))
 
     def kcore():
-        u = _cut_lineage(und, False)
+        u = und.localCheckpoint()
         deg0 = u.groupBy("a").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         )
-        ks = _cut_lineage(
-            deg0.agg(
-                F.greatest(
-                    F.lit(4).cast("long"),
-                    F.expr("CAST(sum(c) AS BIGINT) DIV count(*) DIV 3"),
-                ).alias("k")
-            ),
-            False,
-        )
+        ks = deg0.agg(
+            F.greatest(
+                F.lit(4).cast("long"),
+                F.expr("CAST(sum(c) AS BIGINT) DIV count(*) DIV 3"),
+            ).alias("k")
+        ).localCheckpoint()
         noop(
             k_core_peel(u, ks)
             .groupBy("a")
@@ -400,7 +396,7 @@ def run_graph(spark, path: str):
     run_op("k_core", kcore)
     run_op(
         "lpa",
-        lambda: noop(label_propagation(_cut_lineage(und, False), 4)),
+        lambda: noop(label_propagation(und.localCheckpoint(), 4)),
     )
 
     def dbscan():
